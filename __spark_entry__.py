@@ -999,11 +999,7 @@ def q_doc_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.lit(None).cast("map<string,array<string>>").alias("claims"),
     )
-    # eager per-stage materialization: consumed immediately, and the
-    # truncated lineage spares the action re-planning every stage (same
-    # A/B-probed win as classify_entities — BENCH/BASELINE.md attribution)
-    matches, _trace = cascade(docs, default_classifiers(spark), top_k=3,
-                              materialize="eager")
+    matches, _trace = cascade(docs, default_classifiers(spark), top_k=3)
     return matches.where(F.col("rank") == 1).select(
         F.col("entity_id").alias("doc_id"), "class_uri", "class_label",
         F.round("confidence", 6).alias("confidence"), "source",
@@ -1411,7 +1407,7 @@ def q_doc_cascade_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.lit(None).cast("map<string,array<string>>").alias("claims"),
     )
-    matches, _trace = cascade(docs, clf, top_k=3, materialize="eager")
+    matches, _trace = cascade(docs, clf, top_k=3)
     return matches.where(F.col("rank") == 1).select(
         F.col("entity_id").cast("long").alias("doc_id"),
         "class_uri", "class_label",

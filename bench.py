@@ -197,8 +197,7 @@ def main():
         best_c = None
         for _ in range(N_RUNS):
             t0 = time.time()
-            matches, _trace = cascade(docs32c, default_classifiers(spark),
-                                      top_k=3, materialize="eager")
+            matches, _trace = cascade(docs32c, default_classifiers(spark), top_k=3)
             n_top1 = matches.where(F.col("rank") == 1).count()
             dt = time.time() - t0
             best_c = dt if best_c is None else min(best_c, dt)

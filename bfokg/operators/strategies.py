@@ -5,10 +5,10 @@ The reference makes these decisions one entity at a time; here each strategy
 is a dataflow over the whole entities DataFrame — identical per-entity
 results, set-at-a-time execution:
 
-- cascade:   per-ROW early exit becomes per-STAGE anti-join staging — stage
-  i runs only on rows no earlier stage accepted, so the expensive kernels
-  still see only the unresolved residue (the reference's cost model,
-  ARCHITECTURE.md:385-399, is preserved).
+- cascade:   per-ROW early exit becomes per-STAGE anti-join staging inside
+  one plan — stage i runs only on rows no earlier stage accepted, so the
+  expensive kernels still see only the unresolved residue (the reference's
+  cost model, ARCHITECTURE.md:385-399, is preserved).
 - ensemble:  union of per-classifier score frames → hash aggregate
   (partial+final map-side combine for free).
 - hybrid_confidence: same shape with max+count agreement boost.
@@ -52,114 +52,96 @@ def cascade(
     top_k: int = TOP_K_DEFAULT,
     order: list[str] | None = None,
     thresholds: dict[str, float] | None = None,
-    materialize: str = "lazy",
 ) -> tuple[DataFrame, DataFrame]:
-    """C1 — staged early-exit cascade (hybrid.py:376-446).
+    """C1 — staged early-exit cascade (hybrid.py:376-446), as ONE lazy plan.
 
-    Per stage: run classifier on still-unresolved rows; a row is ACCEPTED
-    when its top-1 confidence >= the stage threshold (config values:
-    rule 0.90 / semantic 0.55 / zeroshot 0.70); otherwise CONTINUE
-    (NO_RESULTS when the classifier returned nothing). Rows never accepted
-    get their LAST non-empty stage's matches (hybrid.py:437-440); rows with
-    no results at all get a semantic fallback (hybrid.py:442-444) — with
-    semantic in the order this set is empty, but the dataflow handles it.
+    Stage i scores the residue: the entities left-anti-joined with the ids
+    accepted by stages < i, so later (more expensive) classifiers still see
+    only unresolved rows. A row is ACCEPTED when its rank-1 confidence >=
+    the stage threshold (config: rule 0.90 / semantic 0.55 / zeroshot
+    0.70); otherwise CONTINUE (NO_RESULTS when the classifier returned
+    nothing for it). Every stage's matches are unioned, tagged with
+    ``stage_idx`` and ``threshold``, and one entity window keeps the first
+    accepting stage's rows, else the last non-empty stage's
+    (hybrid.py:437-440). Entities no stage returned anything for get no
+    rows (with semantic in the order that set is empty).
 
     Returns (matches, trace) — trace rows are
     (entity_id, stage_idx, classifier, top_prediction, confidence,
-    threshold, decision) mirroring hybrid.py:409-415.
-
-    Both returned frames carry the SAME per-stage persisted intermediates
-    in their cleanup handles: call ``release_intermediates`` only after
-    BOTH have been consumed (releasing via one forces the other to
-    recompute its stages).
-
-    ``materialize``: ``"lazy"`` (default) persists each stage — NO Spark
-    job runs until the caller's first action (pinned by
-    test_no_jobs_at_operator_construction); ``"eager"`` reliably
-    localCheckpoints each stage at construction instead. Eager is
-    measurably faster END-TO-END for small entity sets (probe, 31
-    fixtures at local[32]: 3.4-3.7 s total vs 4.7-5.4 s lazy): the
-    truncated lineage spares the single consuming action from
-    re-planning every stage's full DAG, and the per-stage jobs are tiny.
-    Callers that will consume immediately (jobs, benches) should pass
-    eager; libraries composing further plans keep lazy.
+    threshold, decision), one per stage the entity reached, mirroring
+    hybrid.py:409-415. Nothing is persisted and no Spark job runs until
+    the caller's action.
     """
     order = order or [n for n in CASCADE_ORDER if n in classifiers]
     thresholds = thresholds or CASCADE_THRESHOLDS
+    stage_thresholds = [
+        float(thresholds.get(name, CASCADE_DEFAULT_THRESHOLD)) for name in order
+    ]
+    stage_col = F.col("stage_idx")
+    accepts = (F.col("rank") == 1) & (F.col("confidence") >= F.col("threshold"))
     remaining = entities
-    accepted_parts: list[DataFrame] = []
-    stage_results: list[DataFrame] = []  # for last-non-empty fallback
-    trace_parts: list[DataFrame] = []
-
-    cached: list[DataFrame] = []
-    for stage_idx, name in enumerate(order):
-        threshold = float(thresholds.get(name, CASCADE_DEFAULT_THRESHOLD))
-        matches = classifiers[name](remaining, top_k)
-        # Each stage's matches feed four consumers (top1/accepted/
-        # residual/trace). Lazy: persist dedups the compute without
-        # launching jobs at construction (localCheckpoint(eager=False) +
-        # AQE materializes every shuffle stage AT CONSTRUCTION — measured
-        # ~13 driver jobs before an action was ever requested). Eager:
-        # explicit localCheckpoint(eager=True) — see docstring.
-        if materialize == "eager":
-            matches = _core(matches).localCheckpoint(eager=True)
-        else:
-            matches = _core(matches).persist()
-            cached.append(matches)
-        top1 = matches.where(F.col("rank") == 1).select(
-            "entity_id",
-            F.col("class_label").alias("top_prediction"),
-            F.col("confidence").alias("top_confidence"),
+    scored = None
+    for stage_idx, (name, threshold) in enumerate(zip(order, stage_thresholds)):
+        stage = _core(classifiers[name](remaining, top_k)).select(
+            *CORE_COLS,
+            F.lit(stage_idx).alias("stage_idx"),
+            F.lit(threshold).alias("threshold"),
         )
-        accepted_ids = top1.where(F.col("top_confidence") >= threshold).select("entity_id")
-        accepted_parts.append(
-            matches.join(accepted_ids, "entity_id", "left_semi")
-        )
-        stage_results.append(
-            matches.join(accepted_ids, "entity_id", "left_anti")
-            .withColumn("stage_idx", F.lit(stage_idx))
-        )
-        trace_parts.append(
-            remaining.select(F.col("id").alias("entity_id"))
-            .join(top1, "entity_id", "left")
-            .select(
-                "entity_id",
-                F.lit(stage_idx).alias("stage_idx"),
-                F.lit(name).alias("classifier"),
-                "top_prediction",
-                F.col("top_confidence").alias("confidence"),
-                F.lit(threshold).alias("threshold"),
-                F.when(F.col("top_confidence").isNull(), "NO_RESULTS")
-                .when(F.col("top_confidence") >= threshold, "ACCEPTED")
-                .otherwise("CONTINUE")
-                .alias("decision"),
-            )
-        )
-        remaining = remaining.join(
-            accepted_ids.withColumnRenamed("entity_id", "id"), "id", "left_anti"
-        )
+        scored = stage if scored is None else scored.unionByName(stage)
+        if stage_idx + 1 < len(order):
+            accepted_ids = stage.where(accepts).select(F.col("entity_id").alias("id"))
+            remaining = remaining.join(accepted_ids, "id", "left_anti")
 
-    accepted = accepted_parts[0]
-    for part in accepted_parts[1:]:
-        accepted = accepted.unionByName(part)
+    by_entity = Window.partitionBy("entity_id")
+    matches = (
+        scored.withColumn(
+            "chosen_stage",
+            F.coalesce(
+                F.min(F.when(accepts, stage_col)).over(by_entity),
+                F.max(stage_col).over(by_entity),
+            ),
+        )
+        .where(stage_col == F.col("chosen_stage"))
+        .select(*CORE_COLS)
+    )
 
-    # last-non-empty for never-accepted rows (hybrid.py:437-440)
-    residual = stage_results[0]
-    for part in stage_results[1:]:
-        residual = residual.unionByName(part)
-    # never-accepted = still in `remaining` after all stages
-    never_ids = remaining.select(F.col("id").alias("entity_id"))
-    residual = residual.join(never_ids, "entity_id", "left_semi")
-    last_stage = residual.groupBy("entity_id").agg(F.max("stage_idx").alias("stage_idx"))
-    last_nonempty = _core(residual.join(last_stage, ["entity_id", "stage_idx"]))
-
-    from ..util import attach_cleanup
-
-    matches = accepted.unionByName(last_nonempty)
-    trace = trace_parts[0]
-    for part in trace_parts[1:]:
-        trace = trace.unionByName(part)
-    return attach_cleanup(matches, *cached), attach_cleanup(trace, *cached)
+    top1 = scored.where(F.col("rank") == 1).select(
+        "entity_id",
+        "stage_idx",
+        F.col("class_label").alias("top_prediction"),
+        "confidence",
+    )
+    # every entity × stage index, left-joined to that stage's rank-1 row,
+    # cut after the entity's first accepting stage
+    threshold_col = F.array(*[F.lit(t) for t in stage_thresholds])[stage_col]
+    reached = (
+        entities.select(
+            F.col("id").alias("entity_id"),
+            F.explode(F.sequence(F.lit(0), F.lit(len(order) - 1))).alias("stage_idx"),
+        )
+        .join(top1, ["entity_id", "stage_idx"], "left")
+        .withColumn("threshold", threshold_col)
+        .withColumn(
+            "accepted_stage",
+            F.min(
+                F.when(F.col("confidence") >= F.col("threshold"), stage_col)
+            ).over(by_entity),
+        )
+        .where(stage_col <= F.coalesce("accepted_stage", F.lit(len(order) - 1)))
+    )
+    trace = reached.select(
+        "entity_id",
+        "stage_idx",
+        F.array(*[F.lit(n) for n in order])[stage_col].alias("classifier"),
+        "top_prediction",
+        "confidence",
+        "threshold",
+        F.when(F.col("confidence").isNull(), "NO_RESULTS")
+        .when(F.col("confidence") >= F.col("threshold"), "ACCEPTED")
+        .otherwise("CONTINUE")
+        .alias("decision"),
+    )
+    return matches, trace
 
 
 def ensemble(
@@ -275,11 +257,7 @@ def tiered(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    # propagate cascade's per-stage persisted frames: _core() returned a new
-    # DataFrame without the handle, so pull it from cascade's own output
-    return attach_cleanup(
-        out, routed, *getattr(cascade_matches, "_bfokg_cached", ())
-    )
+    return attach_cleanup(out, routed)
 
 
 def infer_parents(

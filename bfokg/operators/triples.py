@@ -149,13 +149,16 @@ def link_triples(raw_triples: DataFrame, alias_dict: DataFrame) -> DataFrame:
 
         best_by_alias: dict = {}
         for r in local_rows:
-            key = (-r.prior, r.qid)
+            if r.alias is None:
+                continue  # a NULL alias never matches the join
+            # the window's order: prior DESC NULLS LAST, qid ASC NULLS FIRST
+            key = (r.prior is None, -(r.prior or 0.0), r.qid is not None, r.qid or "")
             cur = best_by_alias.get(r.alias)
-            if cur is None or key < cur:
-                best_by_alias[r.alias] = key
+            if cur is None or key < cur[0]:
+                best_by_alias[r.alias] = (key, r.qid)
         resolved = local_df(
             raw_triples.sparkSession,
-            sorted((a, k[1]) for a, k in best_by_alias.items()),
+            sorted((a, qid) for a, (_key, qid) in best_by_alias.items()),
             "alias STRING, qid STRING",
         )
     else:

@@ -1,14 +1,15 @@
 """The flagship KG-construction DAG, checkpoint-resumable.
 
-transcripts ─▶ extract_triples (mapInPandas) ─▶ link (broadcast) ─▶ dedup
-(window) ─▶ edges; distinct qids × classifier strategy ─▶ nodes; every
-stage commits a warehouse snapshot + lineage rows, and a re-run with
+transcripts ─▶ extract_triples (JVM ``regexp_extract_all``) ─▶ link
+(broadcast) ─▶ dedup (window) ─▶ edges; distinct qids × cascade ─▶ nodes;
+every stage commits a warehouse snapshot + lineage rows, and a re-run with
 ``resume=True`` skips every stage whose snapshot is already committed
 (north_rule: "resumable from checkpoint with per-partition lineage +
 metrics").
 
-Stage boundaries are chosen at the expensive shuffles so resume skips real
-work: the extract stage (Python kernel) and the dedup shuffle each commit.
+Stage boundaries are chosen at the expensive work so resume skips it: the
+extract stage (the regex scan over every turn) and the dedup shuffle each
+commit.
 """
 
 from __future__ import annotations
@@ -85,22 +86,13 @@ def compare_strategies(spark: SparkSession, entities: DataFrame,
 def classify_entities(
     spark: SparkSession,
     entities: DataFrame | None = None,
-    materialize: str = "eager",
 ) -> DataFrame:
-    """Entity → BFO assignment via the cascade strategy (rank-1 rows).
-
-    Default eager: callers consume immediately and eager localCheckpoint
-    is measured ~1.4 s faster end-to-end on the fixture set (see
-    cascade's docstring). ``materialize="lazy"`` persists instead and
-    attaches a ``release_intermediates`` handle so long-lived sessions
-    (run_pipeline) can free every cached block after the consuming
-    write."""
-    from ..util import attach_cleanup
-
+    """Entity → BFO assignment via the cascade strategy (rank-1 rows);
+    ``entities`` defaults to the vendored fixtures. Lazy: no job runs
+    until the caller's action."""
     ents = with_entity_text(entities if entities is not None else entities_df(spark))
-    matches, _trace = cascade(ents, default_classifiers(spark), materialize=materialize)
-    out = matches.where(F.col("rank") == 1)
-    return attach_cleanup(out, *getattr(matches, "_bfokg_cached", ()))
+    matches, _trace = cascade(ents, default_classifiers(spark))
+    return matches.where(F.col("rank") == 1)
 
 
 def run_pipeline(
@@ -127,9 +119,8 @@ def run_pipeline(
     from pyspark.sql import Observation
 
     from ..sources.warehouse import read_manifest
-    from ..util import release_intermediates
 
-    # -- stage 1: extract (the Python kernel — most expensive per row) -----
+    # -- stage 1: extract (the regex scan — most expensive per row) ---------
     if resume and is_committed(raw_dir):
         skipped.append("extract")
         raw = read_table(spark, raw_dir)
@@ -162,14 +153,11 @@ def run_pipeline(
         nodes = read_table(spark, nodes_dir)
     else:
         t0 = time.time()
-        assignments = classify_entities(spark, materialize="lazy")
-        nodes = nodes_df(edges, assignments)
+        nodes = nodes_df(edges, classify_entities(spark))
         nm = write_table(nodes, nodes_dir, partition_by=["part"])
         nodes = read_table(spark, nodes_dir)
         log.record("nodes", read_manifest(edges_dir)["rows"], nm["rows"], t0)
         log.record_partitions("nodes", nm, t0)
-        # free the cascade's per-stage caches now the write consumed them
-        release_intermediates(assignments)
 
     lineage_manifest = log.write(os.path.join(out_dir, "lineage"))
     return {

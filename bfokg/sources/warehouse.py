@@ -34,6 +34,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..util import local_df
+
 LINEAGE_SCHEMA = (
     "run_id STRING, stage STRING, part STRING, rows_in BIGINT, rows_out BIGINT, "
     "started_ts TIMESTAMP, finished_ts TIMESTAMP, extra MAP<STRING,STRING>"
@@ -277,7 +279,9 @@ class LineageLog:
         return _Timer()
 
     def df(self) -> DataFrame:
-        return self.spark.createDataFrame(self.rows, LINEAGE_SCHEMA)
+        """The recorded rows as a driver-local relation: writing it runs
+        one Spark job and starts no Python worker."""
+        return local_df(self.spark, self.rows, LINEAGE_SCHEMA)
 
     def write(self, table_dir: str) -> dict | None:
         if not self.rows:

@@ -23,6 +23,10 @@ def _sql_literal(v, dtype) -> str:
         return f"CAST('{v!r}' AS {dtype.simpleString()})"
     if isinstance(dtype, T.BooleanType):
         return "true" if v else "false"
+    if isinstance(dtype, T.TimestampType):
+        # the same epoch microseconds createDataFrame would store: exact,
+        # and independent of the session time zone
+        return f"timestamp_micros({dtype.toInternal(v)})"
     if isinstance(dtype, T.ArrayType):
         if len(v) == 0:
             return f"CAST(array() AS {dtype.simpleString()})"

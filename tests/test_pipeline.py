@@ -326,6 +326,119 @@ def test_lineage_costs_no_extra_jobs_and_pipeline_releases_caches(spark, tmp_pat
     assert after - before == set(), f"run_pipeline leaked cached RDDs: {after - before}"
 
 
+def test_lineage_rows_round_trip_in_one_job(spark, tmp_path):
+    """LineageLog commits its rows as a driver-local relation: the write
+    is exactly ONE Spark job, and every field reads back unchanged,
+    timestamps to the microsecond (compared as epoch micros, so the
+    check does not depend on any time zone)."""
+    from datetime import datetime, timedelta, timezone
+
+    from bfokg.sources.warehouse import LineageLog, read_table
+
+    utc = timezone.utc
+    epoch = datetime(1970, 1, 1, tzinfo=utc)
+    t0 = datetime(2026, 3, 4, 5, 6, 7, 123456, tzinfo=utc)
+    rows = [
+        ("run1", "extract", "*", 600, 42, t0, t0 + timedelta(microseconds=1),
+         {"dedup_key": "(subj_qid,pred,obj_qid)"}),
+        ("run1", "edges", "it's \\ a part", -1, 0, epoch,
+         datetime(1969, 12, 31, 23, 59, 59, 999999, tzinfo=utc), {}),
+    ]
+    log = LineageLog(spark, run_id="run1")
+    log.rows = list(rows)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("lineage-commit", "LineageLog.write")
+    manifest = log.write(str(tmp_path / "lineage"))
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("lineage-commit")) == 1
+
+    back = read_table(spark, os.path.dirname(manifest["data_dir"])).select(
+        "run_id", "stage", "part", "rows_in", "rows_out",
+        F.unix_micros("started_ts").alias("started_us"),
+        F.unix_micros("finished_ts").alias("finished_us"), "extra",
+    )
+    micros = lambda dt: (dt - epoch) // timedelta(microseconds=1)  # noqa: E731
+    want = sorted((*r[:5], micros(r[5]), micros(r[6]), r[7]) for r in rows)
+    assert sorted(tuple(r) for r in back.collect()) == want
+
+
+def test_cascade_and_node_stage_job_counts(spark, tmp_path):
+    """The one-plan cascade runs no staging jobs: collecting it over the
+    29 fixtures takes at most 3 Spark jobs, and run_pipeline's node stage
+    at most 6 (measured as a nodes-only resume minus a fully skipped
+    resume, minus the lineage commit's one job)."""
+    import shutil
+
+    from bfokg.fixtures import entities_df
+    from bfokg.functions.text import with_entity_text
+    from bfokg.operators.strategies import cascade
+    from bfokg.plans.pipeline import default_classifiers
+
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    ents = with_entity_text(entities_df(spark))
+    rows, n = jobs("cascade-collect", lambda: cascade(
+        ents, default_classifiers(spark), top_k=3)[0].collect())
+    assert {r.entity_id for r in rows} == {r.id for r in ents.collect()}
+    assert n <= 3, f"cascade over the fixtures ran {n} jobs"
+
+    df = _transcripts(spark)
+    out = str(tmp_path / "kg")
+    run_pipeline(spark, df, out)
+    shutil.rmtree(os.path.join(out, "nodes"))
+    res, with_nodes = jobs("nodes-only", lambda: run_pipeline(spark, df, out, resume=True))
+    assert res["skipped"] == ["extract", "edges"]
+    res, all_skipped = jobs("all-skipped", lambda: run_pipeline(spark, df, out, resume=True))
+    assert set(res["skipped"]) == {"extract", "edges", "nodes"}
+    n_nodes = with_nodes - all_skipped - 1  # the lineage commit is one job
+    assert n_nodes <= 6, f"node stage ran {n_nodes} jobs"
+
+
+def test_link_triples_fold_matches_window_on_null_keys(spark):
+    """link_triples' driver fold equals the window path on an alias dict
+    with NULL aliases, priors and qids: a NULL alias never matches, a
+    NULL prior ranks last (DESC NULLS LAST), a NULL qid first among equal
+    priors (ASC NULLS FIRST), and an alias whose priors are all NULL
+    still resolves."""
+    from bfokg.util import local_df
+
+    schema = "alias string, qid string, label string, prior double"
+    dict_rows = [
+        ("alpha", "Q2", "a", 0.5), ("alpha", "Q1", "a", 0.5),
+        ("alpha", "Q0", "a", None),
+        ("beta", "Q3", "b", None), ("beta", "Q4", "b", None),
+        ("gamma", None, "g", 0.7), ("gamma", "Q5", "g", 0.7),
+        (None, "Q6", "n", 0.9), (None, "Q7", "n", None),
+        ("delta", "Q8", "d", None), ("delta", "Q9", "d", 0.1),
+    ]
+    mentions = ["alpha", "beta", "gamma", "delta", "missing"]
+    raw = spark.createDataFrame(
+        [("c", i, None, s, "related_to", o)
+         for i, (s, o) in enumerate((s, o) for s in mentions for o in mentions)],
+        "conv_id string, turn_idx int, ts timestamp, subj_mention string, "
+        "pred string, obj_mention string",
+    )
+    local = local_df(spark, dict_rows, schema)
+    distributed = spark.createDataFrame(dict_rows, schema)
+    folded = link_triples(raw, local)
+    assert "LocalTableScan" in folded._jdf.queryExecution().executedPlan().toString()
+    as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
+    got = as_set(folded)
+    assert got == as_set(link_triples(raw, distributed))
+    resolved = {(r[3], r[5]) for r in got}
+    assert ("Q1", "Q3") in resolved and ("Q9", None) in resolved
+    assert len(got) == 16  # 4 resolvable aliases on each side
+
+
 def test_snapshot_history_time_travel(spark, tmp_path):
     """Iceberg snapshot-log parity: keep_snapshots=2 retains the prior
     snapshot for time-travel reads; the third commit expires the first,

@@ -158,3 +158,97 @@ def test_dispatch_unknown_raises(spark):
     ents = make_entities(spark, [("e1", "a", "d", [], "t")])
     with pytest.raises(ValueError):
         classify(ents, {}, strategy="bogus")
+
+
+STAGE_NAMES = ["rule_based", "semantic", "zeroshot"]
+# every cascade threshold appears, so ties at the threshold are exercised
+CONFIDENCES = [0.0, 0.3, 0.55, 0.6, 0.7, 0.8, 0.9, 0.95, 1.0]
+
+
+def _staged_reference(entity_ids, stage_scores, order, thresholds):
+    """hybrid.py:376-446 one entity at a time: each stage sees the entity
+    only while no earlier stage accepted it; a never-accepted entity keeps
+    its last non-empty stage's matches."""
+    matches, trace = [], []
+    for e in entity_ids:
+        last_nonempty = None
+        for i, name in enumerate(order):
+            thr = thresholds[name]
+            rows = stage_scores[i].get(e, [])
+            if not rows:
+                trace.append((e, i, name, None, None, thr, "NO_RESULTS"))
+                continue
+            top = min(rows, key=lambda r: r[5])
+            if top[3] >= thr:
+                trace.append((e, i, name, top[2], top[3], thr, "ACCEPTED"))
+                last_nonempty = rows
+                break
+            trace.append((e, i, name, top[2], top[3], thr, "CONTINUE"))
+            last_nonempty = rows
+        matches.extend(last_nonempty or [])
+    return sorted(matches), sorted(trace, key=repr)
+
+
+def _stage_rows(name, per_entity):
+    """{entity: [confidence, ...]} → matches rows ranked by confidence."""
+    out = {}
+    for e, confs in per_entity.items():
+        ranked = sorted(confs, reverse=True)
+        out[e] = [(e, f"{URI}{name}_{j}", f"{name}_{j}", c, name, j + 1)
+                  for j, c in enumerate(ranked)]
+    return out
+
+
+def test_cascade_matches_staged_reference_property(spark):
+    """The one-plan cascade (matches AND trace) equals a pure-Python
+    staged replay on generated stage scores: confidences exactly at the
+    thresholds, stages returning nothing for some entities, entities no
+    stage accepts or no stage scores, and an empty entity frame."""
+    from hypothesis import example, given, settings, strategies as st
+
+    from bfokg.config import CASCADE_THRESHOLDS
+    from bfokg.util import local_df
+
+    matches_schema = ("entity_id string, class_uri string, class_label string, "
+                      "confidence double, source string, rank int")
+    entity_ids = [f"e{i}" for i in range(5)]
+    scores = st.dictionaries(
+        st.sampled_from(entity_ids),
+        st.lists(st.sampled_from(CONFIDENCES), min_size=1, max_size=3),
+        max_size=5,
+    )
+
+    @settings(max_examples=25, deadline=None)
+    @given(
+        n_entities=st.integers(0, 5),
+        stage_scores=st.lists(scores, min_size=2, max_size=3),
+    )
+    # nothing accepted anywhere; e1 scored by no stage
+    @example(n_entities=2, stage_scores=[{"e0": [0.3]}, {"e0": [0.5]}, {}])
+    # accepted exactly at each threshold; a stage empty for e1
+    @example(n_entities=3, stage_scores=[{"e0": [0.9, 0.9]}, {"e1": [0.55]},
+                                         {"e2": [0.7], "e1": [1.0]}])
+    @example(n_entities=0, stage_scores=[{"e0": [1.0]}, {"e0": [1.0]}])
+    def check(n_entities, stage_scores):
+        order = STAGE_NAMES[: len(stage_scores)]
+        ids = entity_ids[:n_entities]
+        ents = local_df(
+            spark, [(e, "l", "d", [], "t") for e in ids],
+            "id string, label string, description string, "
+            "aliases array<string>, text string",
+        )
+        per_stage = [_stage_rows(n, s) for n, s in zip(order, stage_scores)]
+
+        def fake(rows):
+            frame = local_df(spark, [r for rs in rows.values() for r in rs],
+                             matches_schema)
+            return lambda df, k: frame.join(
+                df.select(F.col("id").alias("entity_id")), "entity_id", "left_semi")
+
+        clf = {n: fake(rows) for n, rows in zip(order, per_stage)}
+        matches, trace = cascade(ents, clf)
+        want_m, want_t = _staged_reference(ids, per_stage, order, CASCADE_THRESHOLDS)
+        assert sorted(tuple(r) for r in matches.collect()) == want_m
+        assert sorted((tuple(r) for r in trace.collect()), key=repr) == want_t
+
+    check()

@@ -2,11 +2,13 @@
 
 Times the two cascade-family driver queries — ``doc_cascade`` (5,000 docs
 at sf0.1, SF-proportional) and ``cascade_assignments`` (31 fixture
-entities, pure fixed cost) — in a fresh JVM: one warm-up, best of two
-timed runs each. Run it once on the old dataflow (git stash) and once on
-the new one, then record both in BENCH/CASCADE.md.
+entities, pure fixed cost) — in a fresh JVM on ``local[$SPARK_GRAFT_CPUS]``:
+one warm-up, best of two timed runs each, with the core count and the
+load average recorded next to the times. Run it once per checkout from
+the checkout's root, interleaving the two, then record both in
+BENCH/CASCADE.md.
 
-    env PYTHONPATH=/root/repo python tools/cascade_ab_bench.py <label>
+    SPARK_GRAFT_CPUS=$(nproc) python tools/cascade_ab_bench.py <label>
 """
 
 from __future__ import annotations
@@ -30,8 +32,9 @@ def main():
 
     import __spark_entry__ as entry
 
-    spark = get_spark(app_name=f"cascade-ab-{label}", master="local[32]",
-                      shuffle_partitions=32)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    spark = get_spark(app_name=f"cascade-ab-{label}", master=f"local[{cpus}]",
+                      shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
     out = {}
@@ -46,7 +49,7 @@ def main():
         out[name] = {"sec": round(min(times), 3), "rows": n}
     with open("/proc/loadavg") as f:
         load_after = f.read().split()[:3]
-    print("RESULT " + json.dumps({"label": label, "queries": out,
+    print("RESULT " + json.dumps({"label": label, "cpus": cpus, "queries": out,
                                   "loadavg_before": load_before,
                                   "loadavg_after": load_after}))
 

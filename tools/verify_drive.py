@@ -52,7 +52,6 @@ boosted = [r for r in hy if r.votes >= 2]; assert boosted, "no agreement boost r
 ti = tiered(ents, clf); n_ti = ti.count(); assert n_ti > 0; release_intermediates(ti)
 par = infer_parents(m, bfo_closure_df(spark), bfo_classes=bfo_classes_df(spark)).collect()
 assert par and all(r.source == "inferred" for r in par)
-release_intermediates(m)
 print(f"flow2 OK: cascade({len(tr)} trace rows) ensemble({len(ens)}) hybrid(boost {len(boosted)}) tiered({n_ti}) parents({len(par)})")
 
 # --- flow 3: flagship pipeline with resume ---
