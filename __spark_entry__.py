@@ -2001,11 +2001,10 @@ def q_cascade_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hierarchical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C5 — hierarchical traversal; path flattened for stable schema."""
-    from bfokg.ontology import bfo_children_df
     from bfokg.operators.hierarchy import classify_hierarchical
 
     ents = with_entity_text(entities_df(spark))
-    out = classify_hierarchical(ents, bfo_children_df(spark))
+    out = classify_hierarchical(ents)
     return out.select(
         "entity_id", "class_uri", "class_label",
         F.round("confidence", 6).alias("confidence"),
@@ -2475,12 +2474,8 @@ def q_embedding_lsh_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
     )
     both = embs.unionByName(pert)
-    # production-default kernel bucketing (one BLAS matmul per batch). The
-    # oracle is the EXACT all-pairs answer, so it checks recall — measured
-    # identical output to impl="expr" on this table and 4× less fixed cost
-    # (the 8×8-table expr variant's plan-compile time dominated at 550
-    # rows); the bucketing EXPRESSION family is separately SQL-replayed by
-    # the embedding_lsh_topk oracle
+    # kernel bucketing (one BLAS matmul per batch); the oracle is the EXACT
+    # all-pairs answer, so it checks recall
     pairs = embedding_near_dups(both, threshold=0.95, bucketed=True)
     return pairs.select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
 

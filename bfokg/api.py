@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .config import EngineConfig
 from .functions.text import with_entity_text
-from .ontology import bfo_children_df, bfo_classes_df, bfo_closure_df
+from .ontology import bfo_classes_df, bfo_closure_df
 
 
 class Classifier:
@@ -50,7 +50,6 @@ class Classifier:
             self.config = EngineConfig()
         self.classes = bfo_classes_df(spark)
         self.closure = bfo_closure_df(spark)
-        self.children = bfo_children_df(spark)
         self.classifiers = default_classifiers(spark, self.config)
 
     def classify(
@@ -70,9 +69,7 @@ class Classifier:
         if hierarchical:
             # strategy is intentionally ignored in hierarchical mode, like
             # the reference (hybrid.py:332, 338-342) — scoring is semantic.
-            return classify_hierarchical(
-                ents, self.children, source=f"hierarchical_{strategy}"
-            )
+            return classify_hierarchical(ents, source=f"hierarchical_{strategy}")
         matches = classify(ents, self.classifiers, strategy=strategy, top_k=k)
         if self.config.infer_parent_classes:
             parents = infer_parents(matches, self.closure, bfo_classes=self.classes)

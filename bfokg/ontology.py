@@ -512,11 +512,3 @@ def bfo_closure_df(spark: SparkSession) -> DataFrame:
     from .util import local_df
 
     return local_df(spark, closure_rows(), CLOSURE_SCHEMA)
-
-
-def bfo_children_df(spark: SparkSession) -> DataFrame:
-    """(parent_uri, child_uri) direct-children dim for hierarchical traversal."""
-    classes = bfo_classes_df(spark)
-    return classes.where(F.col("parent_uri").isNotNull()).select(
-        F.col("parent_uri"), F.col("class_uri").alias("child_uri")
-    )

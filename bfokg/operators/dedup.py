@@ -3,7 +3,8 @@
 No reference counterpart (the reference dedups only via tiny ``set()``
 membership, SURVEY.md §2.4) — these are the training-data-pipeline
 operators a 100 TB corpus engine needs. All are DataFrame compositions;
-the only Python is the MinHash kernel (Arrow-batched, numpy).
+Python runs only in the Arrow-batched numpy kernels (MinHash, SimHash,
+embedding-LSH bucketing).
 
 Scale notes per operator:
 - exact:        one hash-aggregate on a normalized key. Map-side partial
@@ -24,12 +25,13 @@ Scale notes per operator:
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..util import attach_cleanup
 
@@ -67,160 +69,53 @@ def dedup_components(
     id_b: str = "doc_b",
     max_iter: int = 50,
     checkpoint_dir: str | None = None,
-    materialize: str = "auto",
 ) -> DataFrame:
     """Near-dup PAIRS → transitive duplicate CLUSTERS:
     (doc_id, component_id) where component_id = min doc id reachable
-    through the pair graph. The missing tail of every dedup pipeline:
-    MinHash/SimHash/embedding operators emit pairs, but the keep/drop
-    decision needs components (A~B, B~C ⇒ {A,B,C} is ONE cluster even
-    though (A,C) was never emitted).
+    through the pair graph (A~B, B~C ⇒ {A,B,C} is ONE cluster even though
+    (A,C) was never emitted). Nodes appearing in no pair are their own
+    singleton components and are NOT emitted (``dedup_keep_list`` joins
+    back against the corpus for a full keep-list).
 
-    Iterative min-label propagation — each round joins current labels
-    across the (undirected) edge set and takes the per-node min; the min
-    label spreads one hop per round, so rounds = cluster diameter (small
-    for dup clusters by construction; ``max_iter`` is a guard, raising
-    if the graph hasn't converged). Same scale discipline as
-    ontology.build_closure: every round's frame is RELIABLY checkpointed
-    to parquet under ``checkpoint_dir`` — the plan never accretes round
-    history (Catalyst re-analysis stays O(1) per round), and unlike the
-    previous ``localCheckpoint`` rounds the intermediate state survives
-    executor loss, which on a multi-hour 10^9-doc cluster run is the
-    difference between losing one task and losing the whole job (VERDICT
-    r4 item 2). Superseded rounds are deleted as soon as the convergence
-    probe has consumed them, so peak scratch footprint is edges + 2 label
-    rounds; the returned frame carries a ``release_intermediates`` handle
-    that removes the remaining scratch (after which it must not be
-    consumed again). ``checkpoint_dir`` resolution matches
-    ``ontology.build_closure``: explicit arg → session checkpoint dir →
-    (local masters only) a temp dir deleted at exit; a multi-node master
-    with neither raises. A unique per-run subdir is always created under
-    the explicit/configured dir, so releasing never deletes a caller's
-    shared checkpoint root and concurrent runs cannot collide. Convergence is one exact-decimal SUM aggregate
-    over the new round (labels only ever DECREASE under min-propagation,
-    so an unchanged Σcomponent_id ⟺ no label changed — decimal(38,0)
-    so 10^9 nodes × int64 ids cannot overflow); before round 5 this probe
-    was a per-round shuffle JOIN of two full label tables, which at 10^9
-    nodes costs as much as the propagation step itself. Non-integral ids
-    (strings) have no exact monotone sum and keep the join probe. Shuffle per round
-    is O(|edges| + |nodes in pairs|) — at
-    10^9 docs with a few percent dup rate this is orders below the
-    pair-generation stage it follows. Nodes appearing in no pair are
-    their own singleton components and are NOT emitted (join back against
-    the corpus for a full keep-list, or use ``dedup_keep_list``).
+    Routing: without ``checkpoint_dir``, a bounded collect-probe
+    (``_probe_driver_components``) pulls at most cap+1 undirected edges
+    off the pair plan (cap = session broadcast threshold / 16 B). A
+    complete, under-threshold result resolves by driver union-find with
+    no scratch written. A clipped or over-budget probe, or an explicit
+    ``checkpoint_dir`` (a request for durable scratch), runs the
+    distributed loop instead.
 
-    ``materialize="local"`` swaps the parquet rounds for
-    ``localCheckpoint(eager=True)`` — executor-local RDD blocks, NOT
-    durable (one lost executor fails the whole iterative job) and freed
-    only by ContextCleaner GC. It exists for single-box ephemeral runs
-    and as the measured alternative in BENCH/DEDUP.md's checkpoint A/B.
-
-    ``materialize="auto"`` (round-6 default): small graphs are routed to
-    a driver-side union-find, big graphs to the durable parquet loop.
-    The route is decided by a BOUNDED collect-probe
-    (``_probe_driver_components``): at most cap+1 undirected edges are
-    collected straight off the pair plan (cap = broadcast threshold /
-    16 B — the same session threshold as ``ontology._driver_closure``
-    and the IVF centroid sample's bounded-collect rule). A complete,
-    under-threshold result resolves by union-find in one pass with NO
-    scratch written at all — for a graph this small the durable edges
-    write bought nothing (the whole query re-runs in under a second on
-    failure) and its write + read-back + collect were three jobs where
-    the probe is one. A clipped or over-budget probe falls through to
-    the loop, which writes the edge table durably first (its recovery
-    anchor) exactly as before; the fall-through costs one partial extra
-    pass over the pair plan (the probe's CollectLimit stops growing jobs
-    once cap+1 rows arrive), which at loop scale is noise against the
-    multi-round loop itself. Output-identical by construction
-    (component_id = min id reachable through the pair graph) and pinned
-    against the loop in tests. Big edge tables — the multi-hour 10^9-doc
-    runs the durability argument is about — keep the reliable parquet
-    rounds. Pass ``"parquet"`` to force the durable distributed loop at
-    any size (``"local"`` likewise forces the loop, with localCheckpoint
-    rounds); an explicit ``checkpoint_dir`` also skips the probe — it is
-    a request for durable scratch."""
-    import os
-
-    from ..util import PathCleanup, resolve_scratch_dir
-
+    The loop is iterative min-label propagation: each round unions the
+    labels with the edge-joined neighbour labels and takes the per-node
+    min, so rounds = cluster diameter (``max_iter`` guards, raising on
+    non-convergence). The edge table and every round ≥ 1 are written to
+    parquet under a unique per-run subdir of ``checkpoint_dir`` (explicit
+    arg → session checkpoint dir → a temp dir on local masters; a
+    multi-node master with neither raises), so the plan never accretes
+    round history and the state survives executor loss. Superseded
+    rounds are deleted as soon as they are consumed; the returned frame
+    carries a ``release_intermediates`` handle for the rest. Convergence
+    rides each round's write: an exact decimal(38,0) Σcomponent_id
+    (labels only decrease, so an unchanged sum ⟺ no label changed);
+    non-integral ids (strings) use a join probe instead. Both routes are
+    pinned output-identical in tests."""
     spark = pairs.sparkSession
-    if materialize not in ("auto", "parquet", "local"):
-        raise ValueError(
-            f"materialize must be auto|parquet|local, got {materialize!r}"
-        )
-
-    def _local_materialize(df: DataFrame, name: str, probe=None):
-        # localCheckpoint is an RDD-level action — no QueryExecution
-        # listener fires, so the convergence sum cannot ride it; the
-        # caller computes it with a separate (cheap, cache-backed) agg
-        return df.localCheckpoint(eager=True), None, None
-
-    if materialize == "local":
-        if checkpoint_dir is not None:
-            # ADVICE r5: the local branch never touches checkpoint_dir —
-            # surface the conflicting intent instead of silently running
-            # non-durable localCheckpoint rounds
-            import warnings
-
-            warnings.warn(
-                "dedup_components: checkpoint_dir is ignored with "
-                "materialize='local' (localCheckpoint rounds are "
-                "executor-local and NOT durable); drop checkpoint_dir or "
-                "use materialize='parquet'",
-                stacklevel=2,
-            )
-
-        def _release_noop(handle) -> None:
-            pass  # executor-local blocks; ContextCleaner GC frees them
-
-        def _final_plain(labels_df: DataFrame) -> DataFrame:
-            return labels_df
-
-        edges, _, _ = _components_edges(
-            pairs, id_a, id_b, _local_materialize
-        )
-        return _dedup_components_loop(
-            edges, max_iter, _local_materialize, _release_noop, _final_plain
-        )
-    explicit_dir = checkpoint_dir is not None
-    if materialize == "auto" and not explicit_dir:
+    if checkpoint_dir is None:
         comp = _probe_driver_components(spark, pairs, id_a, id_b)
         if comp is not None:
             return comp
+    from ..util import PathCleanup, resolve_scratch_dir
+
     checkpoint_dir = resolve_scratch_dir(
         spark, "bfokg_components", explicit=checkpoint_dir
     )
-
-    def _pq_materialize(df: DataFrame, name: str, probe=None):
-        # the convergence probe rides the round's own write action via
-        # df.observe (an AggregatingAccumulator): previously each round
-        # paid a SEPARATE scan-and-sum job over the parquet it had just
-        # written — at any scale that job and its scan are pure overhead
-        # (guide §1.2: don't compute things twice). Same decimal(38,0)
-        # exact sum, same convergence semantics.
-        from pyspark.sql import Observation
-
-        obs = None
-        if probe is not None:
-            obs = Observation()
-            df = df.observe(obs, F.sum(probe.cast("decimal(38,0)")).alias("s"))
-        path = os.path.join(checkpoint_dir, name)
-        df.write.mode("overwrite").parquet(path)
-        observed = obs.get["s"] if obs is not None else None
-        return spark.read.parquet(path), path, observed
-
-    def _release(path) -> None:
-        if path is not None:
-            PathCleanup(path, spark).unpersist()
-
-    def _final(labels_df: DataFrame) -> DataFrame:
-        return attach_cleanup(labels_df, PathCleanup(checkpoint_dir, spark))
-
     try:
-        edges, _, _ = _components_edges(pairs, id_a, id_b, _pq_materialize)
-        return _dedup_components_loop(
-            edges, max_iter, _pq_materialize, _release, _final
+        edges, _ = _write_round(
+            _undirected_edges(pairs, id_a, id_b),
+            os.path.join(checkpoint_dir, "edges"),
         )
+        labels = _dedup_components_loop(edges, max_iter, checkpoint_dir)
+        return attach_cleanup(labels, PathCleanup(checkpoint_dir, spark))
     except BaseException:
         # failed runs (non-convergence, mid-loop write/job failure) must
         # not leak the per-run scratch on shared checkpoint storage —
@@ -229,17 +124,27 @@ def dedup_components(
         raise
 
 
-def _components_edges(pairs, id_a, id_b, _materialize):
-    """Materialize the undirected, deduplicated edge table — the loop's
-    recovery anchor (and, in auto mode, the size probe for choosing the
-    round materialization)."""
+def _undirected_edges(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """Distinct (src, dst) edges in both directions."""
     edges_ab = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    return _materialize(
-        edges_ab.unionByName(
-            edges_ab.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct(),
-        "edges",
-    )
+    return edges_ab.unionByName(
+        edges_ab.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+
+
+def _write_round(df: DataFrame, path: str, probe=None):
+    """Write ``df`` durably to ``path`` and read it back. ``probe``'s
+    exact decimal(38,0) sum rides the write itself via ``df.observe``, so
+    convergence costs no extra scan. Returns (read-back frame, observed sum)."""
+    from pyspark.sql import Observation
+
+    obs = None
+    if probe is not None:
+        obs = Observation()
+        df = df.observe(obs, F.sum(probe.cast("decimal(38,0)")).alias("s"))
+    df.write.mode("overwrite").parquet(path)
+    observed = obs.get["s"] if obs is not None else None
+    return df.sparkSession.read.parquet(path), observed
 
 
 def _probe_driver_components(spark, pairs: DataFrame, id_a: str,
@@ -261,10 +166,7 @@ def _probe_driver_components(spark, pairs: DataFrame, id_a: str,
     if threshold <= 0:
         return None
     cap = max(1, threshold // 16)
-    edges_ab = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = edges_ab.unionByName(
-        edges_ab.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    edges = _undirected_edges(pairs, id_a, id_b)
     rows = edges.limit(cap + 1).collect()
     if len(rows) > cap:
         return None
@@ -331,39 +233,27 @@ def _driver_components_rows(spark, rows, src_type) -> DataFrame:
     return local_df(spark, out, schema)
 
 
-def _dedup_components_loop(edges, max_iter, _materialize,
-                           _release, _final) -> DataFrame:
-    """The min-label-propagation loop shared by the ``materialize``
-    modes of ``dedup_components`` — the dataflow is identical; only how
-    each round's frame is pinned (reliable parquet vs localCheckpoint)
-    differs. ``edges`` is the already-materialized undirected edge
-    table from ``_components_edges``."""
+def _dedup_components_loop(edges: DataFrame, max_iter: int,
+                           checkpoint_dir: str) -> DataFrame:
+    """The min-label-propagation loop over the durably written undirected
+    edge table; each round ≥ 1 is written under ``checkpoint_dir``."""
+    from ..util import PathCleanup
+
+    spark = edges.sparkSession
     integral_ids = edges.schema["src"].dataType.typeName() in (
         "byte", "short", "integer", "long"
     )
     probe = F.col("component_id") if integral_ids else None
 
-    # round 0 is NOT materialized (round 6): the initial label table is a
-    # pure function of the durably-written edges table (distinct src,
-    # label = own id), so durability adds nothing — losing an executor
-    # recomputes it from edges. Rounds >= 1 keep the reliable write.
+    # round 0 is NOT materialized: the initial label table is a pure
+    # function of the durably-written edges table (distinct src, label =
+    # own id), so losing an executor recomputes it from edges
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("component_id", F.col("doc_id"))
     )
     prev_path = None
-
-    def _label_sum(df: DataFrame):
-        # exact convergence probe: min-propagation only ever DECREASES
-        # labels, so Σcomponent_id is strictly decreasing until the fixed
-        # point — equality ⟺ converged. decimal(38,0) keeps the sum exact
-        # at 10^9 nodes × int64 ids (a bare long sum could wrap). Where
-        # the materializer could not observe the sum on its own action
-        # (localCheckpoint rounds), compute it here instead.
-        return df.agg(
-            F.sum(F.col("component_id").cast("decimal(38,0)"))
-        ).first()[0]
 
     def _changed_join(new: DataFrame, old: DataFrame) -> bool:
         # non-integral ids (strings) have no exact monotone sum — fall
@@ -376,38 +266,40 @@ def _dedup_components_loop(edges, max_iter, _materialize,
             .count()
         )
 
-    prev_sum = _label_sum(labels) if integral_ids else None
+    prev_sum = None
+    if integral_ids:
+        # decimal(38,0) keeps the sum exact at 10^9 nodes × int64 ids
+        prev_sum = labels.agg(
+            F.sum(F.col("component_id").cast("decimal(38,0)"))
+        ).first()[0]
     for i in range(1, max_iter + 1):
         # one propagation round = min over {own label} ∪ {neighbor labels}:
         # UNION the label table with the edge-joined neighbor labels and
-        # take one hash-aggregate min per node. Identical to the previous
-        # (join → per-src min → left-join back → least) shape but with one
-        # fewer exchange per round (guide §2.4) — the map-side partial min
-        # also shrinks the union before it shuffles (§2.3).
+        # take one hash-aggregate min per node (one exchange per round;
+        # the map-side partial min shrinks the union before it shuffles)
         propagated = edges.join(labels, edges.dst == labels.doc_id).select(
             F.col("src").alias("doc_id"), "component_id"
         )
-        new_labels, new_path, new_sum = _materialize(
+        new_path = os.path.join(checkpoint_dir, f"round_{i:02d}")
+        new_labels, new_sum = _write_round(
             labels.unionByName(propagated)
             .groupBy("doc_id")
             .agg(F.min("component_id").alias("component_id")),
-            f"round_{i:02d}",
+            new_path,
             probe=probe,
         )
         if integral_ids:
-            if new_sum is None:
-                new_sum = _label_sum(new_labels)
             converged = new_sum == prev_sum
             prev_sum = new_sum
         else:
             converged = not _changed_join(new_labels, labels)
         # round i-1 is no longer referenced by any future plan — release
-        # it now instead of leaving round history to accumulate (ADVICE
-        # r4 #3); only edges + the final round remain for the handle.
-        _release(prev_path)
+        # it now; only edges + the final round remain for the handle
+        if prev_path is not None:
+            PathCleanup(prev_path, spark).unpersist()
         labels, prev_path = new_labels, new_path
         if converged:
-            return _final(labels)
+            return labels
     raise RuntimeError(
         f"dedup_components did not converge in {max_iter} rounds "
         "(pair graph diameter exceeds max_iter — raise it)"
@@ -427,7 +319,7 @@ def dedup_keep_list(
     ``docs.where(F.col("is_keeper"))`` is the deduplicated corpus;
     non-keepers are the drop set. One broadcast-or-shuffle left join of
     the corpus against the (small) component table. Extra keyword args
-    (``checkpoint_dir``, ``materialize``, ``max_iter``) pass through to
+    (``checkpoint_dir``, ``max_iter``) pass through to
     ``dedup_components``."""
     comp = dedup_components(pairs, id_a, id_b, **component_kwargs)
     out = docs.select(F.col(id_col).alias("doc_id")).join(comp, "doc_id", "left")
@@ -942,23 +834,17 @@ def embedding_near_dups(
     n_planes: int = 8,
     n_tables: int = 8,
     seed: int = 42,
-    bucket_impl: str = "kernel",
 ) -> DataFrame:
-    """Cosine near-duplicate pairs over an embedding column, built-ins only
-    (F.aggregate/zip_with dot products — JVM-side, no Python).
+    """Cosine near-duplicate pairs (id_a < id_b, cosine ≥ ``threshold``)
+    over an embedding column; the cosine verify is JVM built-ins
+    (F.aggregate/zip_with dot products).
 
     ``bucketed=False`` (default) is exact all-pairs — quadratic, the
-    small-input oracle. ``bucketed=True`` is the 100 TB path: candidate
-    pairs come from ``similarity_search.lsh_bucket_candidates`` (multi-table
+    small-input oracle. ``bucketed=True`` is the scale path: candidate
+    pairs come from ``similarity_search.lsh_bucket_candidates`` (numpy
     signed-projection LSH, shuffle O(n·n_tables)) and only candidates pay
     the exact-cosine verify. Same output contract; recall < 1 in theory but
-    ≈ 1 for genuinely-near pairs with the default table count (see the
-    candidate generator's docstring for the math).
-
-    ``bucket_impl`` defaults to ``"kernel"`` — one BLAS matmul per Arrow
-    batch, the right per-row cost at 10^9 rows. Pass ``"expr"`` for the
-    pure-JVM expression variant (plan-folded, SQL-replayable — the DuckDB
-    oracle queries use it)."""
+    ≈ 1 for genuinely-near pairs with the default table count."""
     norm = F.sqrt(F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x))
     e = embeddings.select(
         F.col(id_col).alias("vid"),
@@ -972,7 +858,7 @@ def embedding_near_dups(
 
         cand = lsh_bucket_candidates(
             embeddings, n_planes=n_planes, n_tables=n_tables,
-            id_col=id_col, vec_col=vec_col, seed=seed, impl=bucket_impl,
+            id_col=id_col, vec_col=vec_col, seed=seed,
         )
         pairs = cand.join(a, "id_a").join(b, "id_b")
         cleanup = getattr(cand, "_bfokg_cached", ())

@@ -12,15 +12,13 @@ into the best child or stop with a reason:
 - CONFIDENCE_DROP   cur_conf − child_conf > adaptive threshold
                     (depth ≤ 1 → 0.50, else 0.15 — hybrid.py:253-277)
 
-Spark design: semantic scores for ALL classes are computed ONCE per entity
-up front (mirroring the reference's top_k=50-then-filter at hybrid.py:345)
-and persisted; the walk itself is a bounded driver loop (tree depth ≤ 7,
-README.md:389) over a compact per-entity state DataFrame — each iteration is
-one broadcast join against the 34-row children dim plus one join against the
-persisted score table keyed by entity_id. State rows are tiny; the loop's
-shuffle is bounded by |entities| per level and shrinks as rows finish.
-This is the same iterative-join machinery as the P31/P279 closure
-(ontology.build_closure), per the north_rule.
+Spark design: the whole walk runs inside ONE ``mapInPandas`` pass. Per
+Arrow batch the texts are encoded once, scored against every class (the
+reference's top_k=50-then-filter at hybrid.py:345), and each row descends
+the static 35-node tree (``ontology._BFO_TREE``, depth ≤ 7) with no
+cross-row coordination — zero shuffles at any scale. Pinned against the
+DuckDB recursive-CTE replay (``hierarchical_exact`` in
+``__spark_entry__.oracle_sql``).
 """
 
 from __future__ import annotations
@@ -30,7 +28,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame
 
 from ..config import (
     HIER_CONFIDENCE_DROP,
@@ -40,7 +38,7 @@ from ..config import (
     HIER_SHALLOW_DROP,
 )
 from ..ontology import OBO, ROOT_URI, _BFO_TREE
-from .semantic import class_index, classify_semantic, default_class_encoder
+from .semantic import class_index, default_class_encoder
 
 PATH_STRUCT = "array<struct<class_uri:string,class_label:string,confidence:double,decision:string,depth:int>>"
 
@@ -49,161 +47,6 @@ HIER_SCHEMA = (
     "confidence double, source string, rank int, stop_reason string, "
     f"depth int, path {PATH_STRUCT}"
 )
-
-
-def classify_hierarchical(
-    entities: DataFrame,
-    children_dim: DataFrame | None = None,
-    encoder=None,
-    min_confidence: float = HIER_MIN_CONFIDENCE,
-    drop_threshold: float = HIER_CONFIDENCE_DROP,
-    max_depth: int = HIER_MAX_DEPTH,
-    source: str = "hierarchical_semantic",
-    impl: str = "kernel",
-    subtree_smoothing: bool = True,
-) -> DataFrame:
-    """Returns one row per entity:
-    (entity_id, class_uri, class_label, confidence, source, rank=1,
-    stop_reason, depth, path).
-
-    ``impl="kernel"`` (default): the whole walk — encode, score all classes,
-    descend the 35-node broadcast tree with the 4 stop rules — happens
-    inside ONE mapInPandas pass. Zero shuffles, embarrassingly parallel:
-    the right physical plan at any scale because the tree is a small static
-    dimension, so per-row descent needs no cross-row coordination. The
-    numerics are identical to the iterative path (same float64 score
-    matrix, same argmax tiebreak).
-
-    ``impl="iterative"``: bounded driver loop of per-level joins + windows —
-    kept as the machinery demo for GENUINELY unbounded hierarchies (the
-    P31/P279 closure uses this shape, ontology.build_closure) and as a
-    cross-check oracle for the kernel (test_hierarchy_and_eval pins both
-    to identical output).
-    """
-    if impl == "kernel":
-        return _hierarchical_kernel(
-            entities, encoder, min_confidence, drop_threshold, max_depth,
-            source, subtree_smoothing=subtree_smoothing,
-        )
-    if children_dim is None:
-        raise ValueError("iterative impl needs children_dim")
-    scores = (
-        classify_semantic(entities, encoder=encoder, top_k=None,
-                          subtree_smoothing=subtree_smoothing)
-        .select("entity_id", "class_uri", "class_label", "confidence")
-        .persist()
-    )
-    cached = [scores]
-
-    state = entities.select(
-        F.col("id").alias("entity_id"),
-        F.lit(ROOT_URI).alias("cur_uri"),
-        F.lit("Entity").alias("cur_label"),
-        F.lit(1.0).alias("cur_conf"),
-        F.lit(0).alias("depth"),
-        F.array(
-            F.struct(
-                F.lit(ROOT_URI).alias("class_uri"),
-                F.lit("Entity").alias("class_label"),
-                F.lit(1.0).alias("confidence"),
-                F.lit("START").alias("decision"),
-                F.lit(0).alias("depth"),
-            )
-        ).cast(PATH_STRUCT).alias("path"),
-        F.lit(None).cast("string").alias("stop_reason"),
-    )
-
-    done_parts: list[DataFrame] = []
-    children_b = F.broadcast(children_dim)
-
-    for _level in range(max_depth):
-        # candidate = children of the current node, scored for this entity
-        cand = (
-            state.join(children_b, state["cur_uri"] == children_dim["parent_uri"], "left")
-            .join(
-                scores.select(
-                    F.col("entity_id").alias("s_eid"),
-                    F.col("class_uri").alias("s_uri"),
-                    F.col("class_label").alias("s_label"),
-                    F.col("confidence").alias("s_conf"),
-                ),
-                (F.col("entity_id") == F.col("s_eid"))
-                & (F.col("child_uri") == F.col("s_uri")),
-                "left",
-            )
-        )
-        best_w = Window.partitionBy("entity_id").orderBy(
-            F.desc_nulls_last("s_conf"), F.asc_nulls_last("s_uri")
-        )
-        best = (
-            cand.withColumn("rn", F.row_number().over(best_w))
-            .where(F.col("rn") == 1)
-            .withColumn("has_children", F.col("child_uri").isNotNull())
-            .withColumn("has_scored_child", F.col("s_conf").isNotNull())
-        )
-        adaptive_drop = F.when(
-            F.col("depth") <= HIER_SHALLOW_DEPTH, F.lit(HIER_SHALLOW_DROP)
-        ).otherwise(F.lit(drop_threshold))
-        decided = best.withColumn(
-            "stop_reason",
-            F.when(~F.col("has_children"), "LEAF_NODE")
-            .when(~F.col("has_scored_child"), "NO_CHILD_MATCH")
-            .when(F.col("s_conf") < min_confidence, "LOW_CONFIDENCE")
-            .when(F.col("cur_conf") - F.col("s_conf") > adaptive_drop, "CONFIDENCE_DROP")
-            .otherwise(F.lit(None).cast("string")),
-        )
-        finished = decided.where(F.col("stop_reason").isNotNull()).select(
-            "entity_id", "cur_uri", "cur_label", "cur_conf", "depth", "path", "stop_reason"
-        )
-        done_parts.append(finished)
-        descending = decided.where(F.col("stop_reason").isNull())
-        state = descending.select(
-            "entity_id",
-            F.col("s_uri").alias("cur_uri"),
-            F.col("s_label").alias("cur_label"),
-            F.col("s_conf").alias("cur_conf"),
-            (F.col("depth") + 1).alias("depth"),
-            F.concat(
-                "path",
-                F.array(
-                    F.struct(
-                        F.col("s_uri").alias("class_uri"),
-                        F.col("s_label").alias("class_label"),
-                        F.col("s_conf").alias("confidence"),
-                        F.lit("DESCEND").alias("decision"),
-                        (F.col("depth") + 1).alias("depth"),
-                    )
-                ),
-            ).alias("path"),
-            F.lit(None).cast("string").alias("stop_reason"),
-        ).persist()  # not localCheckpoint: AQE materializes .rdd eagerly
-        cached.append(state)
-        # rows that reached max_depth fall out of the loop below
-
-    # anything still descending at max_depth stops there (tree depth ≤ 7)
-    done_parts.append(
-        state.withColumn("stop_reason", F.lit("MAX_DEPTH")).select(
-            "entity_id", "cur_uri", "cur_label", "cur_conf", "depth", "path", "stop_reason"
-        )
-    )
-
-    from ..util import attach_cleanup
-
-    out = done_parts[0]
-    for p in done_parts[1:]:
-        out = out.unionByName(p)
-    out = out.select(
-        "entity_id",
-        F.col("cur_uri").alias("class_uri"),
-        F.col("cur_label").alias("class_label"),
-        F.col("cur_conf").alias("confidence"),
-        F.lit(source).alias("source"),
-        F.lit(1).alias("rank"),
-        "stop_reason",
-        "depth",
-        "path",
-    )
-    return attach_cleanup(out, *cached)
 
 
 def _tree_children_by_uri() -> dict[str, list[str]]:
@@ -216,18 +59,19 @@ def _tree_children_by_uri() -> dict[str, list[str]]:
     return {k: sorted(v) for k, v in children.items()}
 
 
-def _hierarchical_kernel(
+def classify_hierarchical(
     entities: DataFrame,
-    encoder,
-    min_confidence: float,
-    drop_threshold: float,
-    max_depth: int,
-    source: str,
-    id_col: str = "id",
-    text_col: str = "text",
+    *,
+    encoder=None,
+    min_confidence: float = HIER_MIN_CONFIDENCE,
+    drop_threshold: float = HIER_CONFIDENCE_DROP,
+    max_depth: int = HIER_MAX_DEPTH,
+    source: str = "hierarchical_semantic",
     subtree_smoothing: bool = True,
 ) -> DataFrame:
-    """One-pass vectorized walk (see classify_hierarchical docstring).
+    """Returns one row per entity:
+    (entity_id, class_uri, class_label, confidence, source, rank=1,
+    stop_reason, depth, path). ``entities`` needs (id, text).
 
     Per Arrow batch: encode all texts once (batched — the reference never
     batched, ARCHITECTURE.md:284-286), build the dense [n, n_classes]
@@ -247,14 +91,13 @@ def _hierarchical_kernel(
     drop = float(drop_threshold)
     shallow_depth = int(HIER_SHALLOW_DEPTH)
     shallow_drop = float(HIER_SHALLOW_DROP)
-    src = source
 
     def walk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
             n = len(pdf)
-            vecs = enc.encode(pdf[text_col].fillna("").tolist())
+            vecs = enc.encode(pdf["text"].fillna("").tolist())
             conf = ((vecs @ matrix.T) + 1.0) / 2.0  # P7, float64
             cur = np.full(n, root_col, dtype=np.int64)
             cur_conf = np.ones(n, dtype=np.float64)
@@ -303,11 +146,11 @@ def _hierarchical_kernel(
             stop[stop == None] = "MAX_DEPTH"  # noqa: E711
             yield pd.DataFrame(
                 {
-                    "entity_id": pdf[id_col].to_numpy(),
+                    "entity_id": pdf["id"].to_numpy(),
                     "class_uri": uris[cur],
                     "class_label": labels[cur],
                     "confidence": cur_conf,
-                    "source": src,
+                    "source": source,
                     "rank": np.ones(n, dtype=np.int32),
                     "stop_reason": stop,
                     "depth": depth.astype(np.int32),
@@ -315,4 +158,4 @@ def _hierarchical_kernel(
                 }
             )
 
-    return entities.select(id_col, text_col).mapInPandas(walk_batches, HIER_SCHEMA)
+    return entities.select("id", "text").mapInPandas(walk_batches, HIER_SCHEMA)

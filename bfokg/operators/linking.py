@@ -1,8 +1,9 @@
 """Mention detection + entity linking (north_rule axis).
 
-- Mention detection runs as ONE Arrow-batched ``mapInPandas`` pass over
-  turn text with a single compiled alternation regex (longest surface form
-  first). No per-row Python outside the vectorized pandas str machinery.
+- Mention detection is one pass over turn text, routed by dictionary
+  size: a JVM ``regexp_extract_all`` alternation (longest surface form
+  first) for small dictionaries, an Arrow-batched Aho-Corasick kernel
+  beyond ``AUTO_SQL_MAX_SURFACES``. Both emit identical rows.
 - Linking is a BROADCAST hash join of exploded mentions against the alias
   dictionary (tiny dim); candidate scoring picks the max-prior QID with a
   deterministic (prior DESC, qid ASC) tiebreak.
@@ -178,19 +179,16 @@ def extract_mentions(
     surfaces: list[str] | None = None,
     impl: str = "auto",
 ) -> DataFrame:
-    """Text → exploded (mention, position) rows.
+    """Text → exploded (mention, position) rows: greedy leftmost-longest,
+    non-overlapping, word-boundary matches of the lowercased surfaces.
 
-    ``impl="auto"`` (default): picks by dictionary size — ``"sql"`` up to
-    ``AUTO_SQL_MAX_SURFACES`` surfaces, ``"aho"`` beyond (the measured
-    crossover, BENCH/MENTIONS.md).
-    ``impl="sql"``: JVM ``regexp_extract_all`` + ``posexplode`` —
-    codegen, no Python; right while the dictionary alternation stays
-    compilable AND cheap to scan (small dictionaries).
-    ``impl="aho"``: Arrow-batched Aho-Corasick kernel — O(|text|) per row
-    independent of dictionary size; the scale path for real alias dicts
-    (pinned output-identical to the sql path in tests/test_pipeline.py).
-    ``impl="pandas"``: the regex kernel (the plug-in shape for a
-    model-based mention detector)."""
+    ``impl="auto"`` (default) picks by dictionary size: ``"sql"`` up to
+    ``AUTO_SQL_MAX_SURFACES`` surfaces, ``"aho"`` beyond.
+    ``impl="sql"``: JVM ``regexp_extract_all`` + ``posexplode``, no Python.
+    ``impl="aho"``: Arrow-batched Aho-Corasick kernel, O(|text|) per row
+    independent of dictionary size. Any other value raises ValueError."""
+    if impl not in ("auto", "sql", "aho"):
+        raise ValueError(f"impl must be auto|sql|aho, got {impl!r}")
     if impl == "auto":
         n_surfaces = len(set(surfaces)) if surfaces is not None else len(
             {r[0] for r in alias_rows()}
@@ -217,33 +215,15 @@ def extract_mentions(
         ).mapInPandas(scan_ac, MENTIONS_SCHEMA)
 
     pattern = surface_pattern(surfaces)
-    if impl == "sql":
-        return transcripts.select(
-            "conv_id",
-            "turn_idx",
-            "role",
-            "ts",
-            F.posexplode(
-                F.regexp_extract_all(F.lower("text"), F.lit(pattern), F.lit(1))
-            ).alias("mention_pos", "mention"),
-        ).select("conv_id", "turn_idx", "role", "ts", "mention", "mention_pos")
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rx = re.compile(pattern, re.IGNORECASE)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            hits = pdf["text"].fillna("").str.findall(rx)
-            counts = hits.str.len().to_numpy()
-            idx = pdf.index.repeat(counts)
-            out = pdf.loc[idx, ["conv_id", "turn_idx", "role", "ts"]].reset_index(drop=True)
-            out["mention"] = [m.lower() for row in hits for m in row]
-            out["mention_pos"] = [p for c in counts for p in range(c)]
-            yield out
-
-    return transcripts.select("conv_id", "turn_idx", "role", "ts", "text").mapInPandas(
-        scan, MENTIONS_SCHEMA
-    )
+    return transcripts.select(
+        "conv_id",
+        "turn_idx",
+        "role",
+        "ts",
+        F.posexplode(
+            F.regexp_extract_all(F.lower("text"), F.lit(pattern), F.lit(1))
+        ).alias("mention_pos", "mention"),
+    ).select("conv_id", "turn_idx", "role", "ts", "mention", "mention_pos")
 
 
 def link_mentions(

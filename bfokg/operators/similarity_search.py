@@ -5,15 +5,15 @@ product, window top-k), correct at any scale but O(Q×N).
 Scale path: LSH-bucketed search — random signed projections assign each
 vector a bucket signature; queries probe only their own bucket. The
 projection vectors are Rademacher (±1) patterns derived from
-``xxhash64(seed, table, plane, element_index)`` — a pure JVM expression, so
+``xxhash64(seed, 0, plane, element_index)`` — a pure JVM expression, so
 bucketing is dim-agnostic (no driver-side action to infer the vector
 length), deterministic, and stays inside whole-stage codegen.
 
 ``lsh_bucket_candidates`` is the multi-table candidate generator the dedup
-family composes with (``dedup.embedding_near_dups(bucketed=True)``):
-OR-amplification over ``n_tables`` independent bucket tables keeps recall
-high for genuinely-near pairs while candidate counts stay
-O(Σ bucket²) ≪ O(n²).
+family composes with (``dedup.embedding_near_dups(bucketed=True)``); it
+buckets with one numpy matmul per Arrow batch. OR-amplification over
+``n_tables`` independent bucket tables keeps recall high for
+genuinely-near pairs while candidate counts stay O(Σ bucket²) ≪ O(n²).
 """
 
 from __future__ import annotations
@@ -61,17 +61,17 @@ def brute_force_topk(
 
 
 def rademacher_bucket_col(vec_col, n_planes: int = 8, seed: int = 42,
-                          table: int = 0, hash_fn: str = "xxhash64") -> Column:
+                          hash_fn: str = "xxhash64") -> Column:
     """Signed-projection bucket id as a pure JVM expression.
 
     Plane j's projection vector is the Rademacher pattern
-    r[i] = ±1 chosen by hash(seed, table, j, i); bit_j = (Σ v[i]·r[i]) > 0;
+    r[i] = ±1 chosen by hash(seed, 0, j, i); bit_j = (Σ v[i]·r[i]) > 0;
     bucket = Σ bit_j << j. No Python at execution, no dim needed up front —
     the element index comes from zip_with against sequence(0, size-1), so
     the same expression works for any (even ragged) vector length.
 
     ``hash_fn``: ``"xxhash64"`` (default — cheapest JVM hash) or
-    ``"crc32"`` (hashes the string ``lsh:<seed>:<table>:<plane>:<i>``) —
+    ``"crc32"`` (hashes the string ``lsh:<seed>:0:<plane>:<i>``) —
     the crc32 family exists so an external engine without xxhash64 can
     replay the EXACT bucket assignment (the DuckDB oracle for
     ``embedding_lsh_topk`` rebuilds it from a recursive-CTE crc32).
@@ -83,12 +83,12 @@ def rademacher_bucket_col(vec_col, n_planes: int = 8, seed: int = 42,
             if hash_fn == "crc32":
                 h = F.crc32(
                     F.concat_ws(
-                        ":", F.lit("lsh"), F.lit(seed), F.lit(table),
+                        ":", F.lit("lsh"), F.lit(seed), F.lit(0),
                         F.lit(plane), i.cast("string"),
                     ).cast("binary")
                 )
             else:
-                h = F.xxhash64(F.lit(seed), F.lit(table), F.lit(plane), i)
+                h = F.xxhash64(F.lit(seed), F.lit(0), F.lit(plane), i)
             return F.when(F.pmod(h, F.lit(2)) == 0, v).otherwise(-v)
 
         return sign
@@ -387,29 +387,43 @@ def ivf_topk(
                       vec_col, round_to)
 
 
-def _kernel_buckets(
+def lsh_bucket_candidates(
     embeddings: DataFrame,
-    n_planes: int,
-    n_tables: int,
-    id_col: str,
-    vec_col: str,
-    seed: int,
+    n_planes: int = 8,
+    n_tables: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
 ) -> DataFrame:
-    """(id, tbl, bucket) rows via one Arrow-batched numpy pass: ALL
-    n_tables × n_planes projections are a single [batch, dim] @ [dim, T·P]
-    matmul. Plane matrices are seeded Gaussians generated lazily per
-    observed vector length (deterministic per dim — a dim change between
-    batches regenerates, it does not crash) — no driver-side action, no
-    per-row hashing. The per-row cost is what matters at 10^9 rows: the JVM
-    expression variant pays n_tables·n_planes·dim xxhash64 calls per row
-    (~4k for the defaults at dim 64); this kernel pays one BLAS matmul
-    per batch. Same contract as ``impl="expr"``: any id column type, any
-    (per-row-constant) vector length; a RAGGED batch (mixed lengths inside
-    one batch) raises a clear ValueError from both impls' caller."""
+    """Candidate near-duplicate pairs by multi-table signed-projection LSH.
+
+    Each of ``n_tables`` independent tables hashes every vector into a
+    2^n_planes-bucket space; a pair is a candidate when it collides in ANY
+    table (OR-amplification). For a pair at angle θ the per-table collision
+    probability is ≈ (1−θ/π)^n_planes, so the miss probability decays as
+    (1−p)^n_tables. The planes are seeded Gaussians, so recall on a given
+    dataset is fixed, not a coin flip per run.
+
+    Bucketing is one Arrow-batched numpy pass: all n_tables × n_planes
+    projections are a single [batch, dim] @ [dim, T·P] matmul, with the
+    planes generated per observed vector length. Any id column type and
+    any per-row-constant vector length work; a RAGGED batch (mixed
+    lengths inside one batch) raises ValueError. NULL vectors get no
+    bucket — they can never pass a cosine verify.
+
+    Scale shape: explode to (id, table, bucket) — n_tables rows per vector —
+    then self-join within (table, bucket) only. Shuffle is O(n·n_tables);
+    the join output is Σ_buckets |bucket|², never all-pairs.
+
+    Returns distinct (id_a, id_b) with id_a < id_b, carrying a
+    ``release_intermediates`` handle for the persisted bucket table.
+    """
     from typing import Iterator
 
     import numpy as np
     import pandas as pd
+
+    from ..util import attach_cleanup
 
     weights = (1 << np.arange(n_planes, dtype=np.int64))
     id_type = embeddings.schema[id_col].dataType.simpleString()
@@ -422,9 +436,8 @@ def _kernel_buckets(
             lens = {len(v) for v in pdf[vec_col]}
             if len(lens) != 1:
                 raise ValueError(
-                    f"lsh_bucket_candidates(impl='kernel'): ragged vector "
-                    f"lengths within one batch ({sorted(lens)}); pad or "
-                    f"split by dim first"
+                    f"lsh_bucket_candidates: ragged vector lengths within "
+                    f"one batch ({sorted(lens)}); pad or split by dim first"
                 )
             mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
             dim = mat.shape[1]
@@ -444,71 +457,14 @@ def _kernel_buckets(
                 }
             )
 
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        kernel, f"bid {id_type}, tbl int, bucket long"
+    # persist the narrow (id, int, long) bucket table: the self-join
+    # otherwise runs the kernel twice over every vector
+    buckets = (
+        embeddings.select(id_col, vec_col)
+        .where(F.col(vec_col).isNotNull())
+        .mapInPandas(kernel, f"bid {id_type}, tbl int, bucket long")
+        .persist()
     )
-
-
-def lsh_bucket_candidates(
-    embeddings: DataFrame,
-    n_planes: int = 8,
-    n_tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    impl: str = "expr",
-) -> DataFrame:
-    """Candidate near-duplicate pairs by multi-table signed-projection LSH.
-
-    Each of ``n_tables`` independent tables hashes every vector into a
-    2^n_planes-bucket space; a pair is a candidate when it collides in ANY
-    table (OR-amplification). For a pair at angle θ the per-table collision
-    probability is ≈ (1−θ/π)^n_planes, so the miss probability decays as
-    (1−p)^n_tables — with the defaults, pairs at cosine ≥ 0.95 are missed
-    with probability < 1e-2 per table-set and both implementations are
-    deterministic (seeded), so recall on a given dataset is fixed, not a
-    coin flip per run.
-
-    ``impl="expr"`` (default): Rademacher projections as pure JVM
-    expressions — zero Python, plan-folded, DuckDB-free oracle-friendly;
-    per-row cost grows as n_tables·n_planes·dim hash calls.
-    ``impl="kernel"``: Arrow-batched numpy — all projections in one BLAS
-    matmul per batch; the cheap path at billion-row / high-dim scale.
-    Bucket assignments differ between impls (different projection
-    families); the candidate-set CONTRACT (recall for near pairs) is the
-    same and both are pinned in tests.
-
-    Scale shape: explode to (id, table, bucket) — n_tables rows per vector —
-    then self-join within (table, bucket) only. Shuffle is O(n·n_tables);
-    the join output is Σ_buckets |bucket|², never all-pairs.
-
-    Returns distinct (id_a, id_b) with id_a < id_b, carrying a
-    ``release_intermediates`` handle for the persisted bucket table.
-    """
-    from ..util import attach_cleanup
-
-    if impl == "kernel":
-        buckets = _kernel_buckets(
-            embeddings, n_planes, n_tables, id_col, vec_col, seed
-        )
-    else:
-        buckets = embeddings.select(
-            F.col(id_col).alias("bid"),
-            F.posexplode(
-                F.array(
-                    *[
-                        rademacher_bucket_col(F.col(vec_col), n_planes, seed, table=t)
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("tbl", "bucket"),
-        )
-    # persist the (narrow: id, int, long — no array columns, so the
-    # columnar-cache decode caveat of BENCH/DEDUP.md does not apply)
-    # bucket table: the self-join otherwise computes the bucketing twice —
-    # two full kernel/hash passes over every vector (measured 0.78 → 0.59 s
-    # at sf0.1; at 10^9 rows a second full pass dwarfs the cache cost)
-    buckets = buckets.persist()
     out = (
         buckets.alias("x")
         .join(buckets.alias("y"), ["tbl", "bucket"])

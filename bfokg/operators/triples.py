@@ -1,7 +1,7 @@
 """(subj, pred, obj) triple extraction, dedup, and graph materialization.
 
-north_star dataflow: transcripts → batched triple extraction (vectorized
-pandas UDF over turn text) → entity linking of subj/obj mentions
+north_star dataflow: transcripts → triple extraction (JVM
+``regexp_extract_all`` over turn text) → entity linking of subj/obj mentions
 (broadcast alias join) → canonicalization of each linked entity into its
 BFO class (classifier strategies + P31/P279 closure) → per
 (subj_qid, pred, obj_qid) window dedup keeping FIRST by
@@ -9,27 +9,17 @@ BFO class (classifier strategies + P31/P279 closure) → per
 
 The extraction grammar is the closed relation grammar planted by
 datagen.RELATION_PREDICATES — subject and object must be known surface
-forms, the predicate one of the closed phrase set. At production scale the
-same kernel shape holds (regex/model-based extractor inside mapInPandas);
-only the pattern/model changes.
+forms, the predicate one of the closed phrase set.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..datagen import RELATION_PREDICATES
 from .linking import surface_alternation
-
-RAW_TRIPLES_SCHEMA = (
-    "conv_id string, turn_idx int, ts timestamp, "
-    "subj_mention string, pred string, obj_mention string"
-)
 
 # phrase → predicate id, e.g. "is related to" → related_to
 _PHRASE_TO_PRED = {
@@ -53,79 +43,47 @@ def extract_triples(
     transcripts: DataFrame,
     surfaces: list[str] | None = None,
     prefilter: bool = True,
-    impl: str = "sql",
 ) -> DataFrame:
-    """Turn text → raw mention-level triples.
-
-    Two implementations with identical semantics:
-
-    - ``impl="sql"`` (default): pure JVM — ``regexp_extract_all`` over the
-      three capture groups, ``arrays_zip`` + ``explode``, predicate mapped
-      by a literal map. Whole-stage-codegen eligible, no Arrow transfer,
-      no Python process in the path at all. This is the scale path for a
-      CLOSED extraction grammar.
-    - ``impl="pandas"``: the Arrow-batched mapInPandas kernel — the shape a
-      model-based extractor (NER/RE model) plugs into, kept exercised by
-      tests as the north_rule's vectorized-UDF surface.
+    """Turn text → raw mention-level triples (conv_id, turn_idx, ts,
+    subj_mention, pred, obj_mention), pure JVM:
+    ``regexp_extract_all`` pulls whole matches, the three capture groups
+    are re-extracted from each short match, and the predicate is mapped by
+    a literal map. No Python process in the path.
 
     ``prefilter`` pushes a cheap ``rlike`` on the closed predicate phrases
-    ahead of either implementation: a row with no relation phrase cannot
-    produce a triple, so the expensive scan only sees candidate rows.
+    ahead of the scan: a row with no relation phrase cannot produce a
+    triple, so the expensive scan only sees candidate rows.
     """
     pattern = triple_pattern(surfaces)
     if prefilter:
         phrase_rx = "(?i)" + "|".join(re.escape(p) for p in _PHRASE_TO_PRED)
         transcripts = transcripts.where(F.col("text").rlike(phrase_rx))
-    if impl == "sql":
-        lt = F.lower(F.col("text"))
-        # ONE regex pass over the (long) turn text — group 0 pulls whole
-        # matches; the three capture groups are then re-extracted from each
-        # SHORT matched substring (anchored — a full match trivially
-        # re-matches itself). The previous shape ran the same automaton
-        # over the full text three times, once per group (guide §1.2 /
-        # §4.2: do the expensive scan once, the cheap slicing after).
-        # Match sets are identical: group 0 and group i come from the same
-        # automaton at the same positions.
-        pred_map = F.create_map(
-            *[F.lit(x) for kv in _PHRASE_TO_PRED.items() for x in kv]
+    lt = F.lower(F.col("text"))
+    # ONE regex pass over the (long) turn text; the capture groups are
+    # re-extracted from each SHORT matched substring (anchored — a full
+    # match trivially re-matches itself). Group 0 and group i come from
+    # the same automaton at the same positions, so the match sets agree.
+    pred_map = F.create_map(
+        *[F.lit(x) for kv in _PHRASE_TO_PRED.items() for x in kv]
+    )
+    anchored = "^" + pattern + "$"
+    return (
+        transcripts.select(
+            "conv_id", "turn_idx", "ts",
+            F.explode(
+                F.regexp_extract_all(lt, F.lit(pattern), F.lit(0))
+            ).alias("m"),
         )
-        anchored = "^" + pattern + "$"
-        return (
-            transcripts.select(
-                "conv_id", "turn_idx", "ts",
-                F.explode(
-                    F.regexp_extract_all(lt, F.lit(pattern), F.lit(0))
-                ).alias("m"),
-            )
-            .select(
-                "conv_id",
-                "turn_idx",
-                "ts",
-                F.regexp_extract("m", anchored, 1).alias("subj_mention"),
-                F.element_at(
-                    pred_map, F.regexp_extract("m", anchored, 2)
-                ).alias("pred"),
-                F.regexp_extract("m", anchored, 3).alias("obj_mention"),
-            )
+        .select(
+            "conv_id",
+            "turn_idx",
+            "ts",
+            F.regexp_extract("m", anchored, 1).alias("subj_mention"),
+            F.element_at(
+                pred_map, F.regexp_extract("m", anchored, 2)
+            ).alias("pred"),
+            F.regexp_extract("m", anchored, 3).alias("obj_mention"),
         )
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rx = re.compile(pattern, re.IGNORECASE)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            hits = pdf["text"].fillna("").str.findall(rx)
-            counts = hits.str.len().to_numpy()
-            idx = pdf.index.repeat(counts)
-            out = pdf.loc[idx, ["conv_id", "turn_idx", "ts"]].reset_index(drop=True)
-            flat = [m for row in hits for m in row]
-            out["subj_mention"] = [s.lower() for s, _p, _o in flat]
-            out["pred"] = [_PHRASE_TO_PRED[p.lower()] for _s, p, _o in flat]
-            out["obj_mention"] = [o.lower() for _s, _p, o in flat]
-            yield out
-
-    return transcripts.select("conv_id", "turn_idx", "ts", "text").mapInPandas(
-        scan, RAW_TRIPLES_SCHEMA
     )
 
 

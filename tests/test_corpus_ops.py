@@ -190,9 +190,11 @@ def test_embedding_near_dups(spark):
     assert (0, 1) in out and (2, 3) in out and (0, 4) not in out
 
 
-def clustered_embs(spark, n_clusters=12, per_cluster=4, dim=16):
+def clustered_embs(spark, n_clusters=12, per_cluster=4, dim=16,
+                   null_row=False):
     """Deterministic clustered vectors: near-dups within a cluster (tiny
-    perturbations of a shared base), near-orthogonal across clusters."""
+    perturbations of a shared base), near-orthogonal across clusters.
+    ``null_row`` appends one row with a NULL embedding."""
     import numpy as np
 
     rng = np.random.RandomState(7)
@@ -205,23 +207,25 @@ def clustered_embs(spark, n_clusters=12, per_cluster=4, dim=16):
             v = base + 0.01 * j * rng.standard_normal(dim)
             rows.append((vid, [float(x) for x in v]))
             vid += 1
+    if null_row:
+        rows.append((vid, None))
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
 def test_embedding_lsh_bucket_recall(spark):
     """The bucketed (scale) path must recover every exact near-dup pair —
     the same recall pin as test_minhash_recall_vs_exact. Deterministic:
-    buckets are xxhash64-seeded, so this is a fixed property of the data,
-    not a per-run coin flip."""
-    e = clustered_embs(spark)
+    the projection planes are seeded, so this is a fixed property of the
+    data, not a per-run coin flip. A NULL embedding is no near-dup of
+    anything on either path (the bucketing kernel must skip it, not
+    crash)."""
+    e = clustered_embs(spark, null_row=True)
     exact = {(r.id_a, r.id_b) for r in embedding_near_dups(e, 0.95).collect()}
     assert len(exact) > 10          # the fixture really has near-dups
-    for impl in ("expr", "kernel"):
-        buck = {(r.id_a, r.id_b) for r in
-                embedding_near_dups(e, 0.95, bucketed=True,
-                                    bucket_impl=impl).collect()}
-        assert exact <= buck, impl  # recall: no exact pair missed
-        assert buck <= exact, impl  # verify stage kills false candidates
+    buck = {(r.id_a, r.id_b) for r in
+            embedding_near_dups(e, 0.95, bucketed=True).collect()}
+    assert exact <= buck  # recall: no exact pair missed
+    assert buck <= exact  # verify stage kills false candidates
 
 
 def test_lsh_bucket_candidates_prunes(spark):
@@ -411,10 +415,6 @@ def test_dedup_components_and_keep_list(spark):
     assert s_comp == {"a": "a", "b": "a", "c": "a", "d": "a",
                       "x": "x", "y": "x"}
 
-    # both materialize modes agree (the A/B contract in BENCH/DEDUP.md)
-    local = {r.doc_id: r.component_id
-             for r in dedup_components(pairs, materialize="local").collect()}
-    assert local == comp
 
 
 def test_dedup_components_explicit_checkpoint_dir_survives_release(spark, tmp_path):
@@ -860,26 +860,24 @@ def test_lsh_topk_multi_probe_radius2(spark):
 
 
 def test_kernel_buckets_id_types_and_ragged(spark):
-    """ADVICE r2: impl='kernel' honors the same contract as impl='expr' —
-    non-long id columns work (output id type follows the input schema),
-    and a ragged batch raises a clear error instead of a numpy shape
-    crash."""
+    """The bucketing kernel takes any id column type (output id type
+    follows the input schema), and a ragged batch raises a clear error
+    instead of a numpy shape crash."""
     import pytest
 
     from bfokg.operators.similarity_search import lsh_bucket_candidates
 
     rows = [(f"doc-{i}", [float(i), 1.0, 0.5, -1.0]) for i in range(20)]
     e = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    for impl in ("expr", "kernel"):
-        out = lsh_bucket_candidates(e, n_planes=2, n_tables=2, impl=impl)
-        assert dict(out.dtypes) == {"id_a": "string", "id_b": "string"}
-        assert out.count() > 0  # 4-bucket space over 20 vectors must collide
+    out = lsh_bucket_candidates(e, n_planes=2, n_tables=2)
+    assert dict(out.dtypes) == {"id_a": "string", "id_b": "string"}
+    assert out.count() > 0  # 4-bucket space over 20 vectors must collide
 
     ragged = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>"
     ).coalesce(1)
     with pytest.raises(Exception, match="ragged"):
-        lsh_bucket_candidates(ragged, impl="kernel").count()
+        lsh_bucket_candidates(ragged).count()
 
 
 def test_ivf_topk_recall_and_degeneracy(spark):
@@ -1006,28 +1004,11 @@ def test_sampling_guards_and_null_ids(spark):
     assert labeled.where(F.col("doc_id").isNull()).count() == 2
 
 
-def test_components_local_with_checkpoint_dir_warns(spark, tmp_path):
-    """ADVICE r5: materialize='local' ignores checkpoint_dir — that
-    conflict must be surfaced, not silent."""
-    import warnings as _warnings
-
-    from bfokg.operators.dedup import dedup_components
-
-    pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        out = dedup_components(pairs, materialize="local",
-                               checkpoint_dir=str(tmp_path))
-        assert out.count() == 2
-    assert any("checkpoint_dir is ignored" in str(w.message) for w in caught)
-
-
 def test_components_auto_materialization_routing(spark, tmp_path):
-    """Round-6 auto mode: the edge table is always durably written; a
-    broadcast-small edge table is then resolved by driver union-find
-    (LocalRelation result, scratch released eagerly — no cleanup handle),
-    while an explicit checkpoint_dir keeps fully durable parquet rounds.
-    Results identical across modes."""
+    """Without checkpoint_dir a broadcast-small edge table is resolved by
+    driver union-find (LocalRelation result, no scratch — no cleanup
+    handle), while an explicit checkpoint_dir keeps fully durable parquet
+    rounds. Results identical across routes."""
     import os
 
     from bfokg.operators.dedup import dedup_components
@@ -1040,7 +1021,7 @@ def test_components_auto_materialization_routing(spark, tmp_path):
     expected = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
                 (20, 20), (21, 20), (22, 20), (23, 20)}
 
-    out_auto = dedup_components(pairs)  # default auto → driver union-find
+    out_auto = dedup_components(pairs)  # no checkpoint_dir → union-find
     rows_auto = {(r.doc_id, r.component_id) for r in out_auto.collect()}
     scratch = [h.path for h in getattr(out_auto, "_bfokg_cached", ())
                if hasattr(h, "path")]
@@ -1048,24 +1029,15 @@ def test_components_auto_materialization_routing(spark, tmp_path):
     assert "LocalTableScan" in out_auto._jdf.queryExecution().executedPlan().toString(), \
         "small-graph components should come back as a LocalRelation"
 
-    out_pq = dedup_components(pairs, materialize="parquet",
-                              checkpoint_dir=str(tmp_path))
-    rows_pq = {(r.doc_id, r.component_id) for r in out_pq.collect()}
-    handles_pq = getattr(out_pq, "_bfokg_cached", ())
-    sub = [h.path for h in handles_pq if hasattr(h, "path")][0]
-    assert any(n.startswith("round_") for n in os.listdir(sub)), \
-        "parquet mode keeps the final durable round"
-    release_intermediates(out_pq)
-
     out_auto_dir = dedup_components(pairs, checkpoint_dir=str(tmp_path))
     rows_dir = {(r.doc_id, r.component_id) for r in out_auto_dir.collect()}
     sub2 = [h.path for h in getattr(out_auto_dir, "_bfokg_cached", ())
             if hasattr(h, "path")][0]
     assert any(n.startswith("round_") for n in os.listdir(sub2)), \
-        "auto with an explicit checkpoint_dir keeps durable rounds"
+        "an explicit checkpoint_dir keeps durable rounds"
     release_intermediates(out_auto_dir)
 
-    assert rows_auto == rows_pq == rows_dir == expected
+    assert rows_auto == rows_dir == expected
 
 
 def test_components_probe_clip_falls_through_to_loop(spark):
@@ -1094,7 +1066,7 @@ def test_components_probe_clip_falls_through_to_loop(spark):
     assert rows == expected
 
 
-def test_components_driver_matches_loop(spark):
+def test_components_driver_matches_loop(spark, tmp_path):
     """The driver union-find route is output-identical to the distributed
     min-label-propagation loop — pinned on a seeded random graph (long
     ids) and on string ids (which also exercise the loop's join-probe
@@ -1111,7 +1083,7 @@ def test_components_driver_matches_loop(spark):
     driver = {(r.doc_id, r.component_id)
               for r in dedup_components(pairs).collect()}
     loop = {(r.doc_id, r.component_id)
-            for r in dedup_components(pairs, materialize="parquet").collect()}
+            for r in dedup_components(pairs, checkpoint_dir=str(tmp_path)).collect()}
     assert driver == loop and driver
 
     s_pairs = spark.createDataFrame(
@@ -1121,6 +1093,6 @@ def test_components_driver_matches_loop(spark):
     s_driver = {(r.doc_id, r.component_id)
                 for r in dedup_components(s_pairs).collect()}
     s_loop = {(r.doc_id, r.component_id)
-              for r in dedup_components(s_pairs, materialize="parquet").collect()}
+              for r in dedup_components(s_pairs, checkpoint_dir=str(tmp_path)).collect()}
     assert s_driver == s_loop
     assert ("é", "z") in s_driver  # non-ASCII min agrees across engines

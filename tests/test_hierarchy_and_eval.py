@@ -6,13 +6,13 @@ from pyspark.sql import functions as F
 from bfokg.evaluation.evaluator import accuracy, per_class_accuracy, precision_recall
 from bfokg.fixtures import entities_df, fixtures_df
 from bfokg.functions.text import with_entity_text
-from bfokg.ontology import ROOT_URI, bfo_children_df, uri_for_label
+from bfokg.ontology import ROOT_URI, uri_for_label
 from bfokg.operators.hierarchy import classify_hierarchical
 
 
 def test_hierarchical_shape_and_stops(spark):
     ents = with_entity_text(entities_df(spark)).limit(6)
-    out = classify_hierarchical(ents, bfo_children_df(spark)).collect()
+    out = classify_hierarchical(ents).collect()
     assert len(out) == 6  # exactly one row per entity
     valid = {"LEAF_NODE", "LOW_CONFIDENCE", "CONFIDENCE_DROP", "NO_CHILD_MATCH", "MAX_DEPTH"}
     for r in out:
@@ -23,15 +23,17 @@ def test_hierarchical_shape_and_stops(spark):
         assert r.path[0].class_uri == ROOT_URI
         assert r.path[0].confidence == 1.0
         assert r.depth == len(r.path) - 1
-        # the final path node is the result class
+        assert [p.depth for p in r.path] == list(range(r.depth + 1))
+        # the final path node is the result class, at the result confidence
         assert r.path[-1].class_uri == r.class_uri
+        assert r.path[-1].confidence == r.confidence
 
 
 def test_hierarchical_descends_for_clear_cases(spark):
     """'Blue: color …' has strong Quality overlap — traversal should leave
     the root (depth ≥ 1) and land inside the continuant subtree."""
     ents = with_entity_text(entities_df(spark)).where(F.col("id") == "Q_SYNTH_40")
-    row = classify_hierarchical(ents, bfo_children_df(spark)).first()
+    row = classify_hierarchical(ents).first()
     assert row.depth >= 1
     assert row.class_uri != ROOT_URI
 
@@ -104,25 +106,18 @@ def test_hierarchical_gt_on_path_floor(spark):
     assert onpath >= 20, f"gt-on-path degraded: {onpath}/29 (floor: 20)"
 
 
-def test_hierarchical_kernel_matches_iterative(spark):
-    """The zero-shuffle mapInPandas walk and the iterative join/window loop
-    produce IDENTICAL rows (same stop reasons, same float64 confidences,
-    same full paths) on all fixture entities."""
-    ents = with_entity_text(entities_df(spark, include_micro=True))
-    children = bfo_children_df(spark)
+def test_hierarchical_exact_matches_duckdb_oracle(spark):
+    """The mapInPandas walk equals the DuckDB replay of the whole machine
+    (class matrix, (cos+1)/2 scoring, recursive-CTE descent with the stop
+    rules and the argmax tiebreak) as exact multisets. The oracle SQL
+    inlines the fixtures, so no test data is read."""
+    import duckdb
 
-    def canon(rows):
-        return sorted(
-            (
-                r.entity_id, r.class_uri, r.class_label, r.confidence,
-                r.stop_reason, r.depth,
-                tuple((p.class_uri, p.confidence, p.decision, p.depth) for p in r.path),
-            )
-            for r in rows
-        )
+    import __spark_entry__ as entrymod
+    from tools.check_oracles import duck_multiset, spark_multiset
 
-    kern = canon(classify_hierarchical(ents, impl="kernel").collect())
-    iter_ = canon(
-        classify_hierarchical(ents, children, impl="iterative").collect()
-    )
-    assert kern == iter_
+    got = spark_multiset(entrymod.queries()["hierarchical_exact"](spark, None))
+    want = duck_multiset(duckdb.connect(),
+                         entrymod.oracle_sql()["hierarchical_exact"])
+    assert got == want
+    assert sum(got[1].values()) == 29

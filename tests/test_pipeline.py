@@ -52,24 +52,25 @@ def test_mention_extraction_and_linking(spark):
 
 
 def test_extraction_impls_agree(spark):
-    """The JVM regexp_extract_all scale path and the Arrow mapInPandas
-    kernel produce identical multisets (mentions and triples)."""
+    """The JVM regexp_extract_all path and the O(|text|)
+    dictionary-size-independent Aho-Corasick kernel produce identical
+    mention multisets (leftmost-longest, word boundaries,
+    non-overlapping)."""
     from collections import Counter
 
     df = _transcripts(spark)
     m_cols = ["conv_id", "turn_idx", "mention", "mention_pos"]
     m_sql = Counter(map(tuple, extract_mentions(df, impl="sql").select(m_cols).collect()))
-    m_pd = Counter(map(tuple, extract_mentions(df, impl="pandas").select(m_cols).collect()))
-    assert m_sql == m_pd
-    # the O(|text|) dictionary-size-independent Aho-Corasick kernel must
-    # reproduce the regex path exactly (leftmost-longest, word boundaries,
-    # non-overlapping)
     m_aho = Counter(map(tuple, extract_mentions(df, impl="aho").select(m_cols).collect()))
-    assert m_sql == m_aho
-    t_cols = ["conv_id", "turn_idx", "subj_mention", "pred", "obj_mention"]
-    t_sql = Counter(map(tuple, extract_triples(df, impl="sql").select(t_cols).collect()))
-    t_pd = Counter(map(tuple, extract_triples(df, impl="pandas").select(t_cols).collect()))
-    assert t_sql == t_pd
+    assert m_sql and m_sql == m_aho
+
+
+def test_extract_mentions_rejects_unknown_impl(spark):
+    """A mistyped impl must raise, not silently run some other route."""
+    import pytest
+
+    with pytest.raises(ValueError, match="auto|sql|aho"):
+        extract_mentions(_transcripts(spark), impl="pandas")
 
 
 def test_aho_corasick_matches_regex_semantics():
