@@ -233,43 +233,34 @@ def get_text_for_embedding_col():
     )
 
 
-def _broadcast_threshold(spark) -> int:
-    """The session's autoBroadcastJoinThreshold in bytes (\"10485760\" or
-    \"10MB\" forms both appear); -1 (disabled) parses to -1 so callers
-    treating it as an upper bound correctly never match."""
-    raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    s = raw.strip().lower().removesuffix("b")
-    if s and s[-1] in units:
-        return int(float(s[:-1]) * units[s[-1]])
-    try:
-        return int(s)
-    except ValueError:
-        return 10 << 20
-
-
-def _driver_closure(spark, edges: DataFrame, child_col: str, parent_col: str,
-                    max_iterations: int) -> DataFrame:
-    """``build_closure``'s driver-side twin for broadcast-small edge sets:
-    the SAME level-by-level BFS (frontier ⋈ direct edges, first occurrence
-    of a pair wins = min distance, cycle-guarded by the iteration cap,
-    identical non-exhausted RuntimeWarning), run over a bounded collect and
-    returned as a LocalRelation. Output-identical to the loop by
-    construction and pinned in tests."""
+def _warn_not_exhausted(max_iterations: int, stacklevel: int) -> None:
     import warnings
 
-    from .util import attach_cleanup, local_df
+    warnings.warn(
+        f"build_closure hit max_iterations={max_iterations} with a "
+        f"non-empty frontier: transitive paths longer than "
+        f"{max_iterations + 1} edges are missing from the closure. "
+        f"Raise max_iterations to cover the graph's depth.",
+        RuntimeWarning,
+        stacklevel=stacklevel + 1,
+    )
 
-    rows = edges.select(child_col, parent_col).collect()
+
+def _driver_closure(spark, rows, schema, max_iterations: int) -> DataFrame:
+    """``build_closure``'s driver twin: the same level-by-level BFS over the
+    collected (child, parent) ``rows`` (frontier ⋈ direct edges, first
+    occurrence of a pair = min distance, same iteration cap and warning),
+    returned as a LocalRelation. Pinned against the loop in tests."""
+    from .util import local_df
+
     direct: dict = {}
     for c, p in rows:
-        if c != p:
+        if c is not None and p is not None and c != p:  # SQL: NULL != x drops
             direct.setdefault(c, set()).add(p)
     closure = {
         (c, p): 1 for c, parents in direct.items() for p in parents
     }
     frontier = dict(closure)
-    exhausted = False
     for _i in range(max_iterations):
         stepped = {}
         for (d, a), dist in frontier.items():
@@ -277,28 +268,18 @@ def _driver_closure(spark, edges: DataFrame, child_col: str, parent_col: str,
                 if d != p and (d, p) not in closure and (d, p) not in stepped:
                     stepped[(d, p)] = dist + 1
         if not stepped:
-            exhausted = True
             break
         closure.update(stepped)
         frontier = stepped
-    if not exhausted:
-        warnings.warn(
-            f"build_closure hit max_iterations={max_iterations} with a "
-            f"non-empty frontier: transitive paths longer than "
-            f"{max_iterations + 1} edges are missing from the closure. "
-            f"Raise max_iterations to cover the graph's depth.",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    child_t = edges.schema[child_col].dataType.simpleString()
-    parent_t = edges.schema[parent_col].dataType.simpleString()
-    out = local_df(
+    else:
+        _warn_not_exhausted(max_iterations, stacklevel=3)
+    child_t, parent_t = (f.dataType.simpleString() for f in schema.fields)
+    return local_df(
         spark,
         [(d, a, dist) for (d, a), dist in
          sorted(closure.items(), key=lambda kv: (str(kv[0][0]), str(kv[0][1])))],
         f"descendant_uri {child_t}, ancestor_uri {parent_t}, distance int",
     )
-    return attach_cleanup(out)
 
 
 def build_closure(
@@ -307,100 +288,46 @@ def build_closure(
     parent_col: str = "parent",
     max_iterations: int = 12,
     checkpoint_dir: str | None = None,
-    checkpoint_interval: int = 1,
-    impl: str = "auto",
 ) -> DataFrame:
-    """Transitive-closure by iterative DataFrame self-join.
+    """Transitive closure of a (child, parent) edge set — the BFO tree and
+    the Wikidata P31/P279 chains — as (descendant_uri, ancestor_uri,
+    distance) with distance >= 1 and the MINIMUM distance per pair
+    (the reference's recursive ``get_ancestors``, ARCHITECTURE.md:214-223).
+    Self-edges are dropped; cycles are bounded by ``max_iterations``, and
+    a still-growing frontier at the cap raises a ``RuntimeWarning`` (pairs
+    beyond ``max_iterations + 1`` hops are missing).
 
-    Generic over any (child, parent) edge set — used for both the 35-node
-    BFO tree and the Wikidata P31/P279 superclass chains (north_rule).
-    Semantics of the reference's recursive ``get_ancestors``
-    (ARCHITECTURE.md:214-223) made distributed:
-
-    - frontier starts at distance-1 edges;
-    - each iteration joins the frontier to direct edges, extending paths by
-      one hop; new pairs not yet in the accumulated closure survive;
-    - ``dropDuplicates`` per step + iteration cap guard against P279 cycles
-      (SURVEY.md §7.2);
-    - every round RELIABLY checkpoints its frontier: the new pairs are
-      written to parquet under ``checkpoint_dir`` (a temp dir by default;
-      an Iceberg/HDFS path in production — the north_rule's snapshot
-      checkpoints) and read back as a fresh scan. Load-bearing twice over:
-      (a) round k's plan otherwise embeds the full union history of every
-          earlier round and Catalyst re-analyzes it as a TREE — driver-side
-          analysis grows super-linearly and, being single-threaded, caps
-          strong scaling no matter how many executors run tasks (measured:
-          a 2M-node run went 190s → 35s from per-round truncation alone);
-      (b) ``localCheckpoint`` is NOT a substitute — its LogicalRDD copies
-          the origin plan's constraints including references to PRIOR-round
-          attribute ids, and Spark's ``Union.rewriteConstraints`` crashes
-          on them (``key not found: descendant_uri#N``) as soon as a
-          downstream window/filter triggers constraint propagation (hit by
-          ``canonicalize_qids`` on any graph deep enough to checkpoint).
-          A parquet scan carries no constraint baggage, and unlike
-          localCheckpoint it also survives executor loss.
-
-    Returns (descendant_uri, ancestor_uri, distance) with distance >= 1,
-    keeping the MINIMUM distance per pair.
-
-    The returned DataFrame carries a cleanup handle
-    (``bfokg.util.release_intermediates``) for the persisted edge table;
-    callers in long-lived sessions should release it after the consuming
-    action. Checkpoint files live until ``checkpoint_dir`` is deleted —
-    pass an explicit dir to manage their lifecycle (each run writes into
-    a unique ``bfokg_closure_<uuid>`` subdir of it, so concurrent
-    closures never collide and deleting one run's subdir cannot touch
-    another's). Resolution (shared ``util.resolve_scratch_dir`` ladder):
-    explicit dir → the session's configured Spark checkpoint dir
-    (``sc.setCheckpointDir``) → on ``local[*]`` masters only, a
-    driver-local temp dir deleted at interpreter exit. On a multi-node
-    master with none, a ``ValueError`` is raised instead of silently
-    writing a driver-local path the executors cannot read.
-
-    ``checkpoint_interval``: reliably checkpoint every k-th round instead
-    of every round; in-between rounds persist their frontier (bounding
-    the un-truncated plan depth at ``interval`` unions). Interval 1 (the
-    default) is right for deep/large graphs — the per-round write is
-    what keeps Catalyst's re-analysis linear there; a small interval > 1
-    amortizes the write+read-back jobs on SHALLOW graphs where they are
-    pure fixed cost (the 64-node fixture claims graph: interval 4 cuts
-    closure construction ~2.4 s → ~1.5 s warm).
-
-    If the loop exits via the iteration cap with a still-growing frontier,
-    a ``RuntimeWarning`` is raised: pairs beyond ``max_iterations + 1`` hops
-    are MISSING from the result — size ``max_iterations`` to the graph's
-    known depth (real Wikidata P279 chains exceed the default).
-
-    ``impl``: ``"auto"`` (default) routes a BROADCAST-SMALL edge set —
-    optimizer size estimate under the session's broadcast threshold — to a
-    driver-side BFS that returns the closure as a LocalRelation; the
-    iterative distributed loop runs for everything larger or of unknown
-    size. Rationale (round 6): an edge table this small would be collected
-    to the driver by the very first broadcast join anyway, so the bounded
-    collect moves no more data than the distributed plan — and it replaces
-    one Spark job per closure level with zero (the same bounded-collect
-    rule as the IVF centroid sample). ``"loop"`` forces the distributed
-    path (tests pin both paths output-identical; the scale benches drive
-    the loop explicitly).
+    Routing (``bfokg.routing``): without ``checkpoint_dir``, an edge set
+    whose size estimate fits the session budget is collected with the
+    bounded ``driver_rows`` (a row cap on the executors, then a byte
+    count) and walked by the driver BFS twin (returns a LocalRelation).
+    Everything else — an estimate over budget,
+    a collect that passes it, or an explicit ``checkpoint_dir`` — runs the
+    distributed loop: each round joins the frontier to the pre-shuffled
+    direct edges, anti-joins the accumulated closure, and writes the new
+    pairs to parquet under a unique ``bfokg_closure_<uuid>`` subdir of
+    ``checkpoint_dir`` (``util.resolve_scratch_dir`` ladder), so the plan
+    never accretes round history. The result carries a
+    ``release_intermediates`` handle for the persisted edge table.
+    Design history: BENCH/CLOSURE.md.
     """
     import os
-    import warnings
 
-    from .util import attach_cleanup, plan_size_bytes, resolve_scratch_dir
+    from . import routing
+    from .util import attach_cleanup, resolve_scratch_dir
 
     spark = edges.sparkSession
-    if impl not in ("auto", "loop"):
-        raise ValueError(f"impl must be auto|loop, got {impl!r}")
-    if impl == "auto":
-        size_est = plan_size_bytes(edges)
-        if size_est is not None and 0 <= size_est <= _broadcast_threshold(spark):
-            return _driver_closure(
-                spark, edges, child_col, parent_col, max_iterations
-            )
+    if checkpoint_dir is None and routing.fits(edges):
+        pairs = edges.select(child_col, parent_col)
+        rows = routing.driver_rows(pairs)
+        if rows is not None:
+            return _driver_closure(spark, rows, pairs.schema, max_iterations)
     checkpoint_dir = resolve_scratch_dir(
         spark, "bfokg_closure", explicit=checkpoint_dir
     )
-    cached: list[DataFrame] = []
+    n_part = spark.sparkContext.defaultParallelism
+    # the static side of every round's join, pre-shuffled and sorted by
+    # its key once: each round then exchanges only the frontier
     direct = (
         edges.select(
             F.col(child_col).alias("descendant_uri"),
@@ -409,35 +336,12 @@ def build_closure(
         )
         .where(F.col("descendant_uri") != F.col("ancestor_uri"))
         .dropDuplicates(["descendant_uri", "ancestor_uri"])
+        .repartition(n_part, "descendant_uri")
+        .sortWithinPartitions("descendant_uri")
+        .persist()
     )
-    # Pre-shuffle the STATIC side of every round's extension join by its
-    # join key and persist it sorted: sort-merge join then re-uses the
-    # cached partitioning+ordering, so each round exchanges only the
-    # (shrinking) frontier, never the full edge table. SIZE-ADAPTIVE
-    # (guide §2.2/§3.1): when the optimizer's size estimate for the edge
-    # table is under the session's broadcast threshold the rounds plan as
-    # broadcast joins anyway, making the pre-shuffle two exchanges plus a
-    # many-task persist of pure fixed cost per closure — skip it and
-    # persist the table as-is. LocalRelation/parquet-backed edges carry
-    # real estimates; unknown-stat sources (raw RDD scans) estimate huge
-    # and keep the pre-shuffle, the safe default at scale.
-    from .util import plan_size_bytes
-
-    size_est = plan_size_bytes(edges)
-    small_edges = size_est is not None and 0 <= size_est <= _broadcast_threshold(spark)
-    if small_edges:
-        direct = direct.persist()
-    else:
-        n_part = direct.sparkSession.sparkContext.defaultParallelism
-        direct = (
-            direct.repartition(n_part, "descendant_uri")
-            .sortWithinPartitions("descendant_uri")
-            .persist()
-        )
-    cached.append(direct)
     closure = direct
     frontier = direct
-    exhausted = False
     for i in range(max_iterations):
         stepped = (
             frontier.alias("f")
@@ -454,36 +358,18 @@ def build_closure(
             ["descendant_uri", "ancestor_uri"],
             "left_anti",
         ).dropDuplicates(["descendant_uri", "ancestor_uri"])
-        # Materialize the frontier ONCE per iteration — reliable parquet
-        # checkpoint at interval boundaries, persist in between (see
-        # docstring). Without per-round materialization the isEmpty
-        # probe, the next anti-join, and the final consumer each
-        # recompute the whole per-level lineage — measured 2-4x wall
-        # amplification at 1M nodes.
-        if i % checkpoint_interval == checkpoint_interval - 1:
-            round_path = os.path.join(checkpoint_dir, f"round_{i:02d}")
-            new_pairs.write.mode("overwrite").parquet(round_path)
-            new_pairs = spark.read.parquet(round_path)
-        else:
-            new_pairs = new_pairs.persist()
-            cached.append(new_pairs)
+        round_path = os.path.join(checkpoint_dir, f"round_{i:02d}")
+        new_pairs.write.mode("overwrite").parquet(round_path)
+        new_pairs = spark.read.parquet(round_path)
         if new_pairs.isEmpty():
-            exhausted = True
             break
-        # plain union of cached parts — persisting the cumulative union
-        # itself would store each level's rows once per later level
+        # plain union of written parts — persisting the cumulative union
+        # would store each level's rows once per later level
         closure = closure.unionByName(new_pairs)
         frontier = new_pairs
-    if not exhausted:
-        warnings.warn(
-            f"build_closure hit max_iterations={max_iterations} with a "
-            f"non-empty frontier: transitive paths longer than "
-            f"{max_iterations + 1} edges are missing from the closure. "
-            f"Raise max_iterations to cover the graph's depth.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return attach_cleanup(closure, *cached)
+    else:
+        _warn_not_exhausted(max_iterations, stacklevel=2)
+    return attach_cleanup(closure, direct)
 
 
 def closure_rows() -> list[tuple[str, str, int]]:

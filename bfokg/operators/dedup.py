@@ -77,13 +77,16 @@ def dedup_components(
     singleton components and are NOT emitted (``dedup_keep_list`` joins
     back against the corpus for a full keep-list).
 
-    Routing: without ``checkpoint_dir``, a bounded collect-probe
-    (``_probe_driver_components``) pulls at most cap+1 undirected edges
-    off the pair plan (cap = session broadcast threshold / 16 B). A
-    complete, under-threshold result resolves by driver union-find with
-    no scratch written. A clipped or over-budget probe, or an explicit
-    ``checkpoint_dir`` (a request for durable scratch), runs the
-    distributed loop instead.
+    Routing (``bfokg.routing``): without ``checkpoint_dir``, the undirected
+    edges stream off the pair plan through the bounded ``driver_rows`` (a
+    row cap on the executors, then a byte count); a table within the
+    session budget resolves by driver union-find with no scratch written. One that passes the budget, or an
+    explicit ``checkpoint_dir`` (a request for durable scratch), runs the
+    distributed loop. No estimate gate precedes the collect, because lazy
+    MinHash pair plans estimate 1e20–1e24 B for tens to hundreds of pairs
+    (a gate would send every bench query to the loop) while
+    ``run_curation`` commits its pairs first (a 26 KB estimate) and so
+    runs the pair plan once (BENCH/DEDUP.md).
 
     The loop is iterative min-label propagation: each round unions the
     labels with the edge-joined neighbour labels and takes the per-node
@@ -99,21 +102,20 @@ def dedup_components(
     (labels only decrease, so an unchanged sum ⟺ no label changed);
     non-integral ids (strings) use a join probe instead. Both routes are
     pinned output-identical in tests."""
-    spark = pairs.sparkSession
-    if checkpoint_dir is None:
-        comp = _probe_driver_components(spark, pairs, id_a, id_b)
-        if comp is not None:
-            return comp
+    from .. import routing
     from ..util import PathCleanup, resolve_scratch_dir
 
+    spark = pairs.sparkSession
+    edges = _undirected_edges(pairs, id_a, id_b)
+    if checkpoint_dir is None:
+        rows = routing.driver_rows(edges)
+        if rows is not None:
+            return _driver_components_rows(spark, rows, edges.schema["src"].dataType)
     checkpoint_dir = resolve_scratch_dir(
         spark, "bfokg_components", explicit=checkpoint_dir
     )
     try:
-        edges, _ = _write_round(
-            _undirected_edges(pairs, id_a, id_b),
-            os.path.join(checkpoint_dir, "edges"),
-        )
+        edges, _ = _write_round(edges, os.path.join(checkpoint_dir, "edges"))
         labels = _dedup_components_loop(edges, max_iter, checkpoint_dir)
         return attach_cleanup(labels, PathCleanup(checkpoint_dir, spark))
     except BaseException:
@@ -125,8 +127,11 @@ def dedup_components(
 
 
 def _undirected_edges(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
-    """Distinct (src, dst) edges in both directions."""
-    edges_ab = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    """Distinct (src, dst) edges in both directions; a pair with a NULL id
+    links nothing and is dropped."""
+    edges_ab = pairs.select(
+        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+    ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     return edges_ab.unionByName(
         edges_ab.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
@@ -147,53 +152,19 @@ def _write_round(df: DataFrame, path: str, probe=None):
     return df.sparkSession.read.parquet(path), observed
 
 
-def _probe_driver_components(spark, pairs: DataFrame, id_a: str,
-                             id_b: str) -> DataFrame | None:
-    """Bounded collect-probe for ``dedup_components``' driver route: pull
-    at most cap+1 undirected edges straight off the pair plan (cap =
-    session broadcast threshold / 16 B — for int64 edges the row clip IS
-    the byte budget; string edges get an explicit byte check on the
-    collected rows). A complete, under-budget result resolves on the
-    driver with no scratch ever written; returns None otherwise and the
-    caller falls through to the durable loop. The clip bounds driver
-    memory the same way the old written-bytes gate did — the collect can
-    never grow past cap rows regardless of corpus size — and CollectLimit
-    executes partitions incrementally, so an over-cap graph aborts the
-    probe after a partial pass rather than a full one."""
-    from ..ontology import _broadcast_threshold
-
-    threshold = int(_broadcast_threshold(spark))
-    if threshold <= 0:
-        return None
-    cap = max(1, threshold // 16)
-    edges = _undirected_edges(pairs, id_a, id_b)
-    rows = edges.limit(cap + 1).collect()
-    if len(rows) > cap:
-        return None
-    nbytes = 0
-    for a, b in rows:
-        for v in (a, b):
-            nbytes += len(v.encode("utf-8")) + 8 if isinstance(v, str) else 16
-    if nbytes > threshold:
-        return None
-    return _driver_components_rows(spark, rows, edges.schema["src"].dataType)
-
-
 def _driver_components_rows(spark, rows, src_type) -> DataFrame:
-    """``dedup_components``' driver-side twin for broadcast-small edge
-    tables — the same bounded-collect rule as ``ontology._driver_closure``
-    and the IVF centroid sample: the size-gated undirected edge rows are
-    resolved by union-find (path-halving), then each component is
-    canonicalized to its min member id. Output-identical to the
-    min-label-propagation loop by construction — both emit
-    (doc_id, component_id = min id reachable through the pair graph) over
-    exactly the nodes that appear in a pair — and pinned against the loop
-    in tests (int and string ids; Python's str ordering and Spark's
-    UTF8String ordering agree because UTF-8 byte order preserves
-    code-point order). Small results return as a true LocalRelation so a
-    downstream join (``dedup_keep_list``) can broadcast them without a
-    build job; above that the plain createDataFrame path avoids rendering
-    a megabyte VALUES clause."""
+    """``dedup_components``' driver-side twin: the budget-bounded
+    undirected edge rows are resolved by union-find (path-halving), then
+    each component is canonicalized to its min member id.
+    Output-identical to the min-label-propagation loop by construction —
+    both emit (doc_id, component_id = min id reachable through the pair
+    graph) over exactly the nodes that appear in a pair — and pinned
+    against the loop in tests (int and string ids; Python's str ordering
+    and Spark's UTF8String ordering agree because UTF-8 byte order
+    preserves code-point order). Small results return as a true
+    LocalRelation so a downstream join (``dedup_keep_list``) can
+    broadcast them without a build job; above that the plain
+    createDataFrame path avoids rendering a megabyte VALUES clause."""
     from pyspark.sql import types as T
 
     from ..util import local_df
@@ -402,7 +373,6 @@ def lsh_jaccard_pairs(
     est_threshold: float | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    sig_storage: str = "auto",
 ) -> DataFrame:
     """LSH-bucketed candidates verified with EXACT n-gram Jaccard — the
     production composition ``ngram_jaccard_pairs``'s docstring mandates at
@@ -424,8 +394,7 @@ def lsh_jaccard_pairs(
     jaccard ≥ threshold.
 
     Shuffle shape at scale: banding/candidates as in ``minhash_lsh_pairs``
-    (the signature scratch-parquet discipline is inherited via
-    ``sig_storage``); the verify explodes each candidate pair by doc_a's
+    (including its size-routed signature storage); the verify explodes each candidate pair by doc_a's
     shingles and inner-joins on (doc_b, shingle) to count the shared ones
     — |candidates| × avg-shingles rows, independent of corpus size. The
     result carries the upstream scratch cleanup handle
@@ -433,7 +402,7 @@ def lsh_jaccard_pairs(
     if est_threshold is None:
         est_threshold = max(threshold - 0.15, 0.0)
     cand_raw = minhash_lsh_pairs(
-        docs, num_hashes, bands, n, est_threshold, id_col, text_col, sig_storage
+        docs, num_hashes, bands, n, est_threshold, id_col, text_col
     )
     cand = cand_raw.select("doc_a", "doc_b")
     sh = shingles_df(docs, n, id_col, text_col)
@@ -469,7 +438,8 @@ def lsh_jaccard_pairs(
 _MERSENNE = (1 << 31) - 1
 _A_MAX = 1 << 29
 
-# sig_storage="auto" crossover: inputs estimated under this stay on the
+# minhash_lsh_pairs' signature-storage crossover (also the fan-out gate of
+# minhash_signatures): inputs estimated under this stay on the
 # memory persist (the write+read round trip dominates); above it — or with
 # no usable estimate — the scratch-parquet table wins (640k-doc A/B in
 # BENCH/DEDUP.md: 2× on the banding scan). 64 MB is conservative: every
@@ -518,10 +488,9 @@ def minhash_signatures(
     groups, naturally parallel) is left untouched."""
     from zlib import crc32
 
-    from ..util import plan_size_bytes
+    from .. import routing
 
-    est = plan_size_bytes(docs)
-    if est is not None and 0 <= est <= _SIG_MEMORY_MAX_BYTES:
+    if routing.fits(docs, limit=_SIG_MEMORY_MAX_BYTES):
         docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
 
     a, b = _perm_params(num_hashes, seed)
@@ -558,23 +527,23 @@ def minhash_lsh_pairs(
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    sig_storage: str = "auto",
 ) -> DataFrame:
     """MinHash + LSH banding candidate generation, verified with estimated
     jaccard = matching-minhash fraction. Returns (doc_a, doc_b, est_jaccard).
 
-    ``sig_storage``: how the signature table (consumed 3×: banding + both
-    verify joins) is materialized. ``"auto"`` (default) writes it to a
-    scratch PARQUET dir — the configured Spark checkpoint dir when set,
-    else a local temp dir on local masters — and falls back to a memory
-    ``persist`` when neither exists; ``"memory"`` forces the persist.
-    Parquet wins decisively for this shape: Spark's in-memory columnar
-    cache stores array columns via generic object serialization, and
-    decoding it CONTENDS across threads (measured on the 640k-doc leg:
-    banding off the memory cache 13.9 s @8 / 13.5 s @32 — negative
-    scaling — vs 8.3 s / 6.6 s off parquet's vectorized reader, with
-    comparable fill cost). The returned frame's cleanup handle DELETES
-    the scratch dir — release only when done with the result.
+    Signature storage (the table is consumed 3×: banding + both verify
+    joins) is size-routed: an input whose estimate fits
+    ``_SIG_MEMORY_MAX_BYTES`` (``routing.fits``) persists it in memory,
+    where the write+read round trip would be pure fixed cost; anything
+    larger or of unknown size writes it to a scratch PARQUET dir (the
+    configured Spark checkpoint dir, else a temp dir on local masters;
+    the memory persist when neither exists). Parquet wins for big inputs
+    because Spark's in-memory columnar cache stores array columns via
+    generic object serialization, and decoding it CONTENDS across threads
+    (measured on the 640k-doc leg: banding off the memory cache 13.9 s @8
+    / 13.5 s @32 — negative scaling — vs 8.3 s / 6.6 s off parquet's
+    vectorized reader, BENCH/DEDUP.md). The returned frame's cleanup
+    handle DELETES the scratch dir — release only when done with it.
 
     Shuffle shape (the scale story — every byte here multiplies at 10^9
     docs, all MEASURED on the 640k-doc scaling leg, tools/
@@ -597,26 +566,16 @@ def minhash_lsh_pairs(
       self-join (single-shuffle on paper, but +9% wall at local[32] —
       the wide-row exchange costs more than the narrow candidate
       re-shuffle it saves)."""
-    from ..util import PathCleanup, plan_size_bytes, resolve_scratch_dir
+    from .. import routing
+    from ..util import PathCleanup, resolve_scratch_dir
 
     spark = docs.sparkSession
     sigs_raw = minhash_signatures(docs, num_hashes, n, id_col, text_col)
     store_dir = None
-    if sig_storage == "auto":
-        # SIZE-ADAPTIVE (round 6): the scratch-parquet signature table is
-        # the measured winner for big corpora (640k docs: banding off
-        # parquet 6.6 s vs 13.5 s off the block cache, BENCH/DEDUP.md) but
-        # for small inputs the write+read-back round trip is pure fixed
-        # cost — sf0.1 (≈3 MB of text) measures the memory persist 10-20%
-        # faster end-to-end. Route on the optimizer's input-size estimate:
-        # small/known → memory, large/unknown → parquet (the at-scale
-        # default; RDD-backed inputs estimate huge and land here).
-        est = plan_size_bytes(docs)
-        small_input = est is not None and 0 <= est <= _SIG_MEMORY_MAX_BYTES
-        if not small_input:
-            # require=False: with no executor-visible scratch available
-            # the operator falls back to the memory persist
-            store_dir = resolve_scratch_dir(spark, "bfokg_sigs", require=False)
+    if not routing.fits(docs, limit=_SIG_MEMORY_MAX_BYTES):
+        # require=False: with no executor-visible scratch available the
+        # operator falls back to the memory persist
+        store_dir = resolve_scratch_dir(spark, "bfokg_sigs", require=False)
     if store_dir is not None:
         # DOCUMENTED EXCEPTION to the plan-building-only operator contract
         # (test_no_jobs_at_operator_construction): parquet-backed signature
@@ -624,7 +583,6 @@ def minhash_lsh_pairs(
         # storage choice is the operator's whole point (measured 2.1×
         # faster reads than the block cache for array columns) and Spark
         # offers no defer-until-first-action hook for a parquet sink.
-        # Callers needing lazy construction pass sig_storage="memory".
         sigs_raw.write.mode("overwrite").parquet(store_dir)
         sigs = spark.read.parquet(store_dir)
         cleanup = PathCleanup(store_dir, spark)

@@ -141,7 +141,9 @@ def _driver_rule_based(entities_rows, cls_rows, p31_rows, kw_rows,
 
     - claim path: P31 claim values joined to the p31 rule dim, ranked by
       (claim_pos, wikidata_qid), top_k kept;
-    - short-circuit: any claim hit suppresses the keyword path;
+    - short-circuit: any claim hit suppresses the keyword path (except
+      for a NULL id, which the anti-join never matches);
+    - rows sharing an id rank together, as the windows partition by id;
     - keyword path: the same token SET as ``word_tokens_col`` (union of
       hyphen-keeping and hyphen-splitting ASCII token classes — Python
       ``re`` and Java regex agree on these patterns; only the set is
@@ -163,36 +165,40 @@ def _driver_rule_based(entities_rows, cls_rows, p31_rows, kw_rows,
     hyphen_re = _re.compile(r"[a-z0-9_\-]+")
     plain_re = _re.compile(r"[a-z0-9_]+")
 
-    out = []
+    by_id: dict = {}
     for er in entities_rows:
-        claims = er.claims or {}
+        by_id.setdefault(er.id, []).append(er)
+    out = []
+    for eid, ers in by_id.items():
         claim_matches = []
-        for pos, vq in enumerate(claims.get("P31") or []):
-            if vq is None:
-                continue
-            for bfo_label, conf in p31_by_qid.get(vq, ()):
-                if bfo_label in uri_by_label:
-                    claim_matches.append((pos, vq, bfo_label, conf))
-        if claim_matches:
-            claim_matches.sort(key=lambda m: (m[0], m[1]))
-            for rank, (_pos, _vq, bfo_label, conf) in enumerate(
-                    claim_matches[:top_k], start=1):
-                out.append((er.id, uri_by_label[bfo_label], bfo_label,
-                            conf, "rule_based", rank))
-            continue  # short-circuit: claim hit suppresses keywords
-        lower = (er.text or "").lower()
-        tokens = set(hyphen_re.findall(lower)) | set(plain_re.findall(lower))
+        for er in ers:
+            for pos, vq in enumerate((er.claims or {}).get("P31") or []):
+                if vq is None:
+                    continue
+                for bfo_label, conf in p31_by_qid.get(vq, ()):
+                    if bfo_label in uri_by_label:
+                        claim_matches.append((pos, vq, bfo_label, conf))
+        claim_matches.sort(key=lambda m: (m[0], m[1]))
+        for rank, (_pos, _vq, bfo_label, conf) in enumerate(
+                claim_matches[:top_k], start=1):
+            out.append((eid, uri_by_label[bfo_label], bfo_label,
+                        conf, "rule_based", rank))
+        if claim_matches and eid is not None:
+            continue  # short-circuit (the anti-join never matches a NULL id)
         scored = []
-        for kr in kw_rows:
-            n_matched = len(tokens.intersection(kr.keywords))
-            if n_matched > 0 and kr.bfo_label in uri_by_label:
-                score = n_matched / kr.n_keywords
-                scored.append((-score, kr.rule_order, kr.bfo_label,
-                               min(score * RULE_SCORE_SCALE, RULE_CONF_CAP)))
+        for er in ers:
+            lower = (er.text or "").lower()
+            tokens = set(hyphen_re.findall(lower)) | set(plain_re.findall(lower))
+            for kr in kw_rows:
+                n_matched = len(tokens.intersection(kr.keywords))
+                if n_matched > 0 and kr.bfo_label in uri_by_label:
+                    score = n_matched / kr.n_keywords
+                    scored.append((-score, kr.rule_order, kr.bfo_label,
+                                   min(score * RULE_SCORE_SCALE, RULE_CONF_CAP)))
         scored.sort(key=lambda s: (s[0], s[1]))
         for rank, (_ns, _ro, bfo_label, conf) in enumerate(
                 scored[:top_k], start=1):
-            out.append((er.id, uri_by_label[bfo_label], bfo_label,
+            out.append((eid, uri_by_label[bfo_label], bfo_label,
                         conf, "rule_based", rank))
     return local_df(
         spark, out,
@@ -235,17 +241,18 @@ def classify_rule_based(
 
     ``entities`` needs columns (id, text, claims). Returns MATCHES_SCHEMA
     (+ no extras), at most top_k rows per entity. Driver-resident inputs
-    (entity frame AND all three dims optimize to LocalRelations) fold to
-    ``_driver_rule_based`` and come back as a LocalRelation; any
-    distributed input keeps the dataflow below unchanged.
+    (entity frame AND all three dims are LocalRelations within the
+    session budget, ``routing.local_rows``) fold to ``_driver_rule_based``
+    and come back as a LocalRelation; anything else keeps the dataflow
+    below.
     """
-    from ..util import local_plan_rows
+    from .. import routing
 
-    entities_rows = local_plan_rows(entities.select("id", "text", "claims"))
+    entities_rows = routing.local_rows(entities.select("id", "text", "claims"))
     if entities_rows is not None:
-        cls_rows = local_plan_rows(bfo_classes.select("label", "class_uri"))
-        p31_rows = local_plan_rows(p31_rules)
-        kw_rows = local_plan_rows(keyword_rules)
+        cls_rows = routing.local_rows(bfo_classes.select("label", "class_uri"))
+        p31_rows = routing.local_rows(p31_rules)
+        kw_rows = routing.local_rows(keyword_rules)
         if cls_rows is not None and p31_rows is not None and kw_rows is not None:
             return _driver_rule_based(
                 entities_rows, cls_rows, p31_rows, kw_rows,

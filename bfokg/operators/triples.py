@@ -91,22 +91,23 @@ def link_triples(raw_triples: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """Resolve subj/obj mentions to QIDs via two broadcast joins against the
     max-prior-per-alias resolution (deterministic prior DESC, qid ASC).
 
-    When the alias dict is driver-resident (its optimized plan is a
-    LocalRelation — the vendored ``alias_dict_df`` always is), the
-    resolution is computed in Python and returned as a LocalRelation:
-    the row_number window over the dim otherwise forces a
+    When the alias dict is driver-resident (a LocalRelation within the
+    session budget, ``routing.local_rows`` — the vendored
+    ``alias_dict_df`` always is), the resolution is computed in Python
+    and returned as a LocalRelation: the row_number window over the dim
+    otherwise forces a
     Sort→Exchange→Sort→Window subtree under EACH of the two broadcast
     builds — two Spark jobs per query (and per stream_edges micro-batch)
     spent ranking the same bounded dim. Identical rule, identical rows;
     distributed alias dicts keep the window path unchanged."""
-    from ..util import local_plan_rows
+    from .. import routing
 
-    local_rows = local_plan_rows(alias_dict.select("alias", "qid", "prior"))
-    if local_rows is not None:
+    dict_rows = routing.local_rows(alias_dict.select("alias", "qid", "prior"))
+    if dict_rows is not None:
         from ..util import local_df
 
         best_by_alias: dict = {}
-        for r in local_rows:
+        for r in dict_rows:
             if r.alias is None:
                 continue  # a NULL alias never matches the join
             # the window's order: prior DESC NULLS LAST, qid ASC NULLS FIRST

@@ -109,6 +109,11 @@ def wd_anchors_df(spark: SparkSession) -> DataFrame:
     )
 
 
+def _nulls_first(v):
+    """Sort key ordering None before every value (Spark's ASC default)."""
+    return (v is not None, v)
+
+
 def p279_closure(claims: DataFrame) -> DataFrame:
     """Transitive superclass closure of the P279 subgraph, distance 0
     included (a class anchors itself). Iterative self-join; at Wikidata
@@ -117,51 +122,36 @@ def p279_closure(claims: DataFrame) -> DataFrame:
     edges = claims.where(F.col("property") == "P279").select(
         F.col("qid").alias("child"), F.col("value_qid").alias("parent")
     )
-    # interval 4: the fixture claims graph is shallow, so most per-round
-    # parquet checkpoints are pure fixed cost (build_closure docstring);
-    # deep production graphs should call build_closure directly with
-    # interval 1
-    walked = build_closure(edges, checkpoint_interval=4)
-    from bfokg.util import attach_cleanup, local_df, local_plan_rows
+    walked = build_closure(edges)
+    from bfokg import routing
+    from bfokg.util import attach_cleanup, local_df
 
-    # driver-resident edge dims (the vendored fixture graph always is):
-    # the distinct-node reflexive rows fold to Python — the dataflow form
-    # below otherwise plans a union + distinct whose Exchange runs as a
-    # tiny Spark job inside every broadcast build of the closure; and when
-    # build_closure ALSO routed to the driver BFS (broadcast-small graph),
-    # the whole closure collapses to ONE LocalRelation, so downstream
-    # broadcast joins need no job at all
-    edge_rows = local_plan_rows(edges)
-    if edge_rows is not None:
+    # driver-resident edges whose closure also took the driver BFS (the
+    # vendored fixture graph): add the reflexive rows in Python and return
+    # ONE LocalRelation, so downstream broadcast joins need no job
+    edge_rows = routing.local_rows(edges)
+    walked_rows = routing.local_rows(walked) if edge_rows is not None else None
+    if walked_rows is not None:
         node_t = edges.schema["child"].dataType.simpleString()
-        closure_schema = (
-            f"descendant_uri {node_t}, ancestor_uri {node_t}, distance int"
+        nodes = sorted({v for r in edge_rows for v in (r.child, r.parent)},
+                       key=_nulls_first)
+        return local_df(
+            edges.sparkSession,
+            [tuple(r) for r in walked_rows] + [(n, n, 0) for n in nodes],
+            f"descendant_uri {node_t}, ancestor_uri {node_t}, distance int",
         )
-        nodes = sorted({v for r in edge_rows for v in (r.child, r.parent)})
-        walked_rows = local_plan_rows(walked)
-        if walked_rows is not None:
-            rows = [tuple(r) for r in walked_rows]
-            rows += [(n, n, 0) for n in nodes]
-            return attach_cleanup(
-                local_df(edges.sparkSession, rows, closure_schema)
-            )
-        self_rows = local_df(edges.sparkSession, [(n, n, 0) for n in nodes],
-                             closure_schema)
-    else:
-        self_rows = (
-            edges.select(F.col("child").alias("node"))
-            .unionByName(edges.select(F.col("parent").alias("node")))
-            .distinct()
-            .select(
-                F.col("node").alias("descendant_uri"),
-                F.col("node").alias("ancestor_uri"),
-                F.lit(0).alias("distance"),
-            )
+    self_rows = (
+        edges.select(F.col("child").alias("node"))
+        .unionByName(edges.select(F.col("parent").alias("node")))
+        .distinct()
+        .select(
+            F.col("node").alias("descendant_uri"),
+            F.col("node").alias("ancestor_uri"),
+            F.lit(0).alias("distance"),
         )
-    # propagate build_closure's persisted-frame handles through the union
-    # so callers' release_intermediates() can actually unpersist them
-    # (ADVICE r3 #3: dropping the handle leaked up to interval-1 frontier
-    # frames + the edge table per call in long-lived sessions)
+    )
+    # propagate build_closure's persisted-frame handle through the union
+    # so callers' release_intermediates() can actually unpersist it
     return attach_cleanup(
         walked.unionByName(self_rows), *getattr(walked, "_bfokg_cached", ())
     )
@@ -180,53 +170,59 @@ def canonicalize_qids(
     winner window keyed by qid.
 
     When claims, anchors AND the closure are all driver-resident
-    (LocalRelations — the vendored fixture dims plus the driver-BFS
-    closure always are), the whole canonicalization folds to Python and
-    returns a LocalRelation: the dataflow form plans two broadcast
-    builds plus a winner-window Exchange whose jobs are pure fixed cost
-    for a bounded claims graph. Identical winner rule (min distance,
-    bfo_label ASC, via_class ASC — Python tuple order; UTF-8 byte order
-    preserves code-point order so string comparisons agree with Spark);
-    any distributed input keeps the dataflow path unchanged.
+    (LocalRelations within the session budget, ``routing.local_rows`` —
+    the vendored fixture dims plus the driver-BFS closure always are),
+    the whole canonicalization folds to Python and returns a
+    LocalRelation: the dataflow form plans two broadcast builds plus a
+    winner-window Exchange whose jobs are pure fixed cost for a bounded
+    claims graph. Identical winner rule (min distance, bfo_label ASC
+    NULLS FIRST, via_class ASC — Python tuple order; UTF-8 byte order
+    preserves code-point order so string comparisons agree with Spark)
+    and NULL join keys never match; any other input keeps the dataflow.
     """
     if closure is None:
         closure = p279_closure(claims)
 
-    from bfokg.util import local_df, local_plan_rows
+    from bfokg import routing
+    from bfokg.util import local_df
 
-    claims_rows = local_plan_rows(claims)
+    claims_rows = routing.local_rows(claims)
     if claims_rows is not None:
-        anchors_rows = local_plan_rows(anchors)
-        closure_rows = local_plan_rows(closure)
+        anchors_rows = routing.local_rows(anchors)
+        closure_rows = routing.local_rows(closure)
         if anchors_rows is not None and closure_rows is not None:
+            # NULL join keys never match, as in the broadcast joins
             by_desc: dict = {}
             for r in closure_rows:
-                by_desc.setdefault(r.descendant_uri, []).append(
-                    (r.ancestor_uri, r.distance)
-                )
+                if r.descendant_uri is not None:
+                    by_desc.setdefault(r.descendant_uri, []).append(
+                        (r.ancestor_uri, r.distance)
+                    )
             by_wd: dict = {}
             for r in anchors_rows:
-                by_wd.setdefault(r.wd_class, []).append(
-                    (r.bfo_label, r.class_uri)
-                )
+                if r.wd_class is not None:
+                    by_wd.setdefault(r.wd_class, []).append(
+                        (r.bfo_label, r.class_uri)
+                    )
             best: dict = {}
             for r in claims_rows:
                 if r.property != "P31":
                     continue
                 for via, dist in by_desc.get(r.value_qid, ()):
                     for bfo_label, class_uri in by_wd.get(via, ()):
-                        key = (dist, bfo_label, via)
+                        # the window's order; ASC puts a NULL label first
+                        key = (dist, _nulls_first(bfo_label), via)
                         cur = best.get(r.qid)
                         if cur is None or key < cur[0]:
-                            best[r.qid] = (key, class_uri)
+                            best[r.qid] = (key, (class_uri, bfo_label, via, dist))
             qid_t = claims.schema["qid"].dataType.simpleString()
             uri_t = anchors.schema["class_uri"].dataType.simpleString()
             lbl_t = anchors.schema["bfo_label"].dataType.simpleString()
             via_t = anchors.schema["wd_class"].dataType.simpleString()
             return local_df(
                 claims.sparkSession,
-                [(q, class_uri, k[1], k[2], k[0], CLAIM_CANON_CONFIDENCE)
-                 for q, (k, class_uri) in sorted(best.items())],
+                [(q, *winner, CLAIM_CANON_CONFIDENCE) for q, (_key, winner) in
+                 sorted(best.items(), key=lambda kv: _nulls_first(kv[0]))],
                 f"qid {qid_t}, class_uri {uri_t}, bfo_label {lbl_t}, "
                 f"via_class {via_t}, distance int, confidence double",
             )

@@ -72,24 +72,6 @@ def local_df(spark, rows, schema) -> DataFrame:
     return spark.sql(f"SELECT * FROM VALUES\n{vals}\nAS t({names})")
 
 
-def local_plan_rows(df: DataFrame):
-    """The DataFrame's rows when its OPTIMIZED plan is a LocalRelation
-    (driver-resident — collecting costs no Spark job), else None.
-
-    The detection is planning-only (no job, no action): operators use it
-    to route bounded vendored dims through driver-side Python instead of
-    running tiny per-dim Spark jobs (windows/aggregates do not fold
-    through ``ConvertToLocalRelation`` the way projections do). Real
-    distributed inputs return None and keep their dataflow path."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() == "LocalRelation":
-            return df.collect()
-    except Exception:
-        return None
-    return None
-
-
 def attach_cleanup(result: DataFrame, *cached: DataFrame) -> DataFrame:
     """Attach a ``release_intermediates()`` handle to an operator's output.
 
@@ -182,18 +164,6 @@ def release_intermediates(df: DataFrame, blocking: bool = False) -> int:
             pass
     df._bfokg_cached = ()
     return n
-
-
-def plan_size_bytes(df: DataFrame) -> int | None:
-    """The optimizer's size estimate for a DataFrame, or None when it
-    cannot be read. Sources with real statistics (LocalRelation, file
-    scans) give usable numbers; RDD-backed plans estimate huge — callers
-    using this to pick a small-input fast path therefore fail safe (an
-    unknown or huge estimate keeps the at-scale strategy)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
 
 
 def resolve_scratch_dir(spark, prefix: str, explicit: str | None = None,

@@ -275,10 +275,11 @@ def test_no_jobs_at_operator_construction(spark):
     launch until an action runs (VERDICT r1 item 8). Pinned via job-group
     tracking: any job triggered inside the block would inherit the group.
 
-    ONE documented exception: minhash_lsh_pairs(sig_storage="auto"/"parquet")
-    runs its signature-table parquet write at construction — the scratch
-    materialization IS the operator's storage decision (see the comment at
-    dedup.py's write site); sig_storage="memory" keeps it lazy."""
+    ONE documented exception: minhash_lsh_pairs on an input estimated over
+    64 MB (or of unknown size) runs its signature-table parquet write at
+    construction — the scratch materialization IS the operator's storage
+    decision (see the comment at dedup.py's write site); smaller inputs
+    keep the lazy memory persist."""
     from bfokg.operators.similarity_search import lsh_bucket_candidates, lsh_topk
     from bfokg.operators.strategies import tiered
 
@@ -325,7 +326,8 @@ def test_no_jobs_at_operator_construction(spark):
         asof_join_global(ev, ev.select("ts", "value"), on="ts")
         sessionize(ev, by="user_id")
         # interval_join's pre-flight guard is a DOCUMENTED construction-time
-        # aggregate (like minhash sig_storage); guard="off" must stay lazy
+        # aggregate (like the minhash parquet signatures); guard="off" must
+        # stay lazy
         interval_join(ev, iv, by="user_id", guard="off")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -1040,41 +1042,59 @@ def test_components_auto_materialization_routing(spark, tmp_path):
     assert rows_auto == rows_dir == expected
 
 
-def test_components_probe_clip_falls_through_to_loop(spark):
-    """Round-6 probe-first auto routing: when the bounded collect-probe
-    clips (edge table over the session broadcast threshold), auto must
-    fall through to the durable loop and still produce identical
-    components. Pinned by shrinking the threshold so a 60-edge graph
-    exceeds it (cap = threshold//16 = 4 rows)."""
+def test_components_probe_clip_falls_through_to_loop(spark, monkeypatch):
+    """When the bounded driver collect clips (edge table over the session
+    budget), dedup_components must fall through to the durable loop and
+    still produce identical components. Pinned by shrinking the budget so
+    a 60-edge graph over four partitions exceeds it: the streamed plan
+    carries the row cap (64 // 16 + 1 = 5 rows) as a CollectLimit, which
+    cuts every partition on the executors, so no whole partition is
+    shipped to the driver."""
     from bfokg.operators.dedup import dedup_components
 
+    streamed = []
+    cls = type(spark.range(1))
+    original = cls.toLocalIterator
+
+    def recording(self, *args, **kwargs):
+        streamed.append(self._jdf.queryExecution().executedPlan().toString())
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "toLocalIterator", recording)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "doc_a long, doc_b long"
-    )
+    ).repartition(4)
     expected = {(i, 0) for i in range(31)}
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     try:
         spark.conf.set(key, "64")
-        out = dedup_components(pairs)  # probe clips at cap=4 → loop
+        out = dedup_components(pairs)  # collect clips at 5 rows → loop
         rows = {(r.doc_id, r.component_id) for r in out.collect()}
         from bfokg.util import release_intermediates
 
         release_intermediates(out)
     finally:
         spark.conf.set(key, old)
+    assert len(streamed) == 1 and "CollectLimit 5" in streamed[0]
     assert rows == expected
 
 
 def test_components_driver_matches_loop(spark, tmp_path):
     """The driver union-find route is output-identical to the distributed
     min-label-propagation loop — pinned on a seeded random graph (long
-    ids) and on string ids (which also exercise the loop's join-probe
-    fallback), the same equivalence pattern as
-    test_driver_closure_matches_loop."""
+    ids), on string ids (which also exercise the loop's join-probe
+    fallback), and on generated pair lists with NULL ids, self-pairs,
+    duplicates, long string ids and empty frames; the same equivalence
+    pattern as test_driver_closure_matches_loop."""
     import random
+    from collections import Counter
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
 
     from bfokg.operators.dedup import dedup_components
+    from bfokg.routing import _is_local
 
     rng = random.Random(406)
     pairs_rows = [(rng.randrange(120), rng.randrange(120)) for _ in range(90)]
@@ -1096,3 +1116,30 @@ def test_components_driver_matches_loop(spark, tmp_path):
               for r in dedup_components(s_pairs, checkpoint_dir=str(tmp_path)).collect()}
     assert s_driver == s_loop
     assert ("é", "z") in s_driver  # non-ASCII min agrees across engines
+
+    long_ids = st.one_of(st.none(), st.integers(0, 5))
+    str_ids = st.one_of(st.none(), st.sampled_from(["a", "b", "é", "L" * 300 + "x",
+                                                    "L" * 300 + "y"]))
+    graph = lambda ids: st.lists(st.tuples(ids, ids), max_size=6)  # noqa: E731
+    # few examples, each a union of small disjoint graphs: the loop's
+    # rounds follow the diameter of one graph, not the size of the union
+    cases = st.one_of(
+        st.tuples(st.just("long"), st.lists(graph(long_ids), max_size=4)),
+        st.tuples(st.just("string"), st.lists(graph(str_ids), max_size=4)),
+    )
+
+    @settings(max_examples=3, deadline=None)
+    @given(cases)
+    def driver_matches_loop(case):
+        id_type, graphs = case
+        tag = (lambda k, v: v + 10 * k) if id_type == "long" else (lambda k, v: f"{k}{v}")
+        rows = [tuple(None if v is None else tag(k, v) for v in e)
+                for k, g in enumerate(graphs) for e in g]
+        pairs = spark.createDataFrame(rows, f"doc_a {id_type}, doc_b {id_type}")
+        out = dedup_components(pairs)
+        linked = any(a is not None and b is not None for a, b in rows)
+        assert _is_local(out) or not linked  # the driver route is taken
+        loop = dedup_components(pairs, checkpoint_dir=str(tmp_path))
+        assert Counter(map(tuple, out.collect())) == Counter(map(tuple, loop.collect()))
+
+    driver_matches_loop()

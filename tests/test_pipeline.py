@@ -409,7 +409,14 @@ def test_link_triples_fold_matches_window_on_null_keys(spark):
     with NULL aliases, priors and qids: a NULL alias never matches, a
     NULL prior ranks last (DESC NULLS LAST), a NULL qid first among equal
     priors (ASC NULLS FIRST), and an alias whose priors are all NULL
-    still resolves."""
+    still resolves. Generated dicts add duplicates, long aliases and
+    empty frames."""
+    from collections import Counter
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from bfokg.routing import _is_local
     from bfokg.util import local_df
 
     schema = "alias string, qid string, label string, prior double"
@@ -421,7 +428,8 @@ def test_link_triples_fold_matches_window_on_null_keys(spark):
         (None, "Q6", "n", 0.9), (None, "Q7", "n", None),
         ("delta", "Q8", "d", None), ("delta", "Q9", "d", 0.1),
     ]
-    mentions = ["alpha", "beta", "gamma", "delta", "missing"]
+    long_alias = "L" * 300
+    mentions = ["alpha", "beta", "gamma", "delta", "missing", long_alias, None]
     raw = spark.createDataFrame(
         [("c", i, None, s, "related_to", o)
          for i, (s, o) in enumerate((s, o) for s in mentions for o in mentions)],
@@ -438,6 +446,25 @@ def test_link_triples_fold_matches_window_on_null_keys(spark):
     resolved = {(r[3], r[5]) for r in got}
     assert ("Q1", "Q3") in resolved and ("Q9", None) in resolved
     assert len(got) == 16  # 4 resolvable aliases on each side
+
+    entry = st.tuples(
+        st.one_of(st.none(), st.sampled_from(["alpha", "beta", long_alias])),
+        st.one_of(st.none(), st.sampled_from(["Q1", "Q2", "Q3"])),
+        st.just("x"),
+        st.one_of(st.none(), st.sampled_from([0.0, 0.5, 1.0])),
+    )
+
+    @settings(max_examples=4, deadline=None)
+    @given(st.lists(entry, max_size=16))
+    def fold_matches_window(rows):
+        as_bag = lambda df: Counter(map(tuple, df.collect()))  # noqa: E731
+        local = local_df(spark, rows, schema)
+        assert not rows or _is_local(local)  # the fold route is taken
+        assert as_bag(link_triples(raw, local)) == as_bag(
+            link_triples(raw, spark.createDataFrame(rows, schema))
+        )
+
+    fold_matches_window()
 
 
 def test_snapshot_history_time_travel(spark, tmp_path):

@@ -114,8 +114,18 @@ def test_rule_based_driver_fold_matches_dataflow(spark):
     """Round-6 driver fold: LocalRelation inputs classify in Python (a
     LocalRelation result — the two rank windows, anti-join and union
     otherwise run as tiny jobs per call) and are row- and schema-identical
-    to the dataflow path forced via RDD-backed copies of every input."""
+    to the dataflow path forced via RDD-backed copies of every input —
+    on the fixtures and on generated entity frames with NULL and
+    duplicate ids, NULL texts and claims, long ids and empty frames."""
+    from collections import Counter
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
     from bfokg.functions.text import with_entity_text
+    from bfokg.operators.rule_based import KEYWORD_RULES
+    from bfokg.routing import _is_local
+    from bfokg.util import local_df
 
     ents = with_entity_text(entities_df(spark, include_micro=True))
     dims = (bfo_classes_df(spark), p31_rules_df(spark), keyword_rules_df(spark))
@@ -126,6 +136,33 @@ def test_rule_based_driver_fold_matches_dataflow(spark):
     dataflow = classify_rule_based(rdd_copy(ents), *[rdd_copy(d) for d in dims], top_k=3)
     assert {tuple(r) for r in folded.collect()} == {tuple(r) for r in dataflow.collect()}
     assert folded.schema == dataflow.schema and folded.count() == 28
+
+    schema = "id string, text string, claims map<string,array<string>>"
+    words = sorted({w for kws in KEYWORD_RULES.values() for w in kws})[:12]
+    words += ["Process", "self-sufficient", "well-known", "zzz"]
+    entity = st.tuples(
+        st.one_of(st.none(), st.sampled_from(["e1", "e2", "e3", "e4", "L" * 300])),
+        st.one_of(st.none(), st.lists(st.sampled_from(words), max_size=5).map(" ".join)),
+        st.one_of(st.none(), st.fixed_dictionaries({"P31": st.one_of(
+            st.none(),
+            st.lists(st.one_of(st.none(), st.sampled_from(["Q5", "Q6"])), max_size=3),
+        )})),
+    )
+
+    # few, large examples: each one pays a dataflow run's fixed job cost
+    @settings(max_examples=3, deadline=None)
+    @given(st.lists(entity, max_size=24), st.sampled_from([1, 3]))
+    def fold_matches_dataflow(rows, top_k):
+        local = local_df(spark, rows, schema)
+        assert not rows or _is_local(local)  # the fold route is taken
+        fold = classify_rule_based(local, *dims, top_k=top_k)
+        # an RDD-backed entity frame alone forces the dataflow path
+        flow = classify_rule_based(
+            spark.createDataFrame(rows, schema), *dims, top_k=top_k
+        )
+        assert Counter(map(tuple, fold.collect())) == Counter(map(tuple, flow.collect()))
+
+    fold_matches_dataflow()
 
 
 def test_rule_based_null_literal_claims_pruned(spark):

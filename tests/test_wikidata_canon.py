@@ -42,7 +42,17 @@ def test_canonicalize_driver_route_matches_dataflow(spark):
     (LocalRelation result, zero Spark jobs in the consumer), and the
     result is row-identical to the dataflow path forced via RDD-backed
     copies of the same dims (createDataFrame defeats the LocalRelation
-    detection, so the broadcast-join + winner-window plan runs)."""
+    detection, so the broadcast-join + winner-window plan runs) — on the
+    fixture graph and on generated claims/anchors with NULL keys,
+    duplicates, long ids and empty frames."""
+    from collections import Counter
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from bfokg.routing import _is_local
+    from bfokg.util import local_df
+
     local = canonicalize_qids(wikidata_claims_df(spark), wd_anchors_df(spark))
     assert "LocalTableScan" in local._jdf.queryExecution().executedPlan().toString()
 
@@ -57,6 +67,38 @@ def test_canonicalize_driver_route_matches_dataflow(spark):
     dataflow = canonicalize_qids(claims_rdd, anchors_rdd)
     as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
     assert as_set(local) == as_set(dataflow) and local.count() == 29
+
+    claims_schema = "qid string, property string, value_qid string"
+    anchors_schema = "wd_class string, bfo_label string, class_uri string"
+    classes = ["c1", "c2", "c3", "c4", "L" * 300]
+    node = st.one_of(st.none(), st.sampled_from(classes))
+    claim = st.tuples(
+        st.one_of(st.none(), st.sampled_from(["q1", "q2", "q3"])),
+        st.sampled_from(["P31", "P279", None]),
+        node,
+    )
+    # class_uri follows the label, so winner-window ties are identical rows
+    anchor = st.tuples(
+        node, st.one_of(st.none(), st.sampled_from(["Object", "Process"]))
+    ).map(lambda a: (a[0], a[1], a[1] and "u:" + a[1]))
+
+    # few, large examples: each one pays a dataflow run's fixed job cost
+    @settings(max_examples=3, deadline=None)
+    @given(st.lists(claim, max_size=16), st.lists(anchor, max_size=6))
+    def fold_matches_dataflow(claim_rows, anchor_rows):
+        as_bag = lambda df: Counter(map(tuple, df.collect()))  # noqa: E731
+        claims = local_df(spark, claim_rows, claims_schema)
+        anchors = local_df(spark, anchor_rows, anchors_schema)
+        assert not claim_rows or _is_local(claims)  # the fold route is taken
+        closure = p279_closure(claims)
+        fold = canonicalize_qids(claims, anchors, closure)
+        # RDD-backed claims alone force the dataflow path
+        flow = canonicalize_qids(
+            spark.createDataFrame(claim_rows, claims_schema), anchors, closure
+        )
+        assert as_bag(fold) == as_bag(flow)
+
+    fold_matches_dataflow()
 
 
 def test_nearest_anchor_wins(spark):
@@ -152,15 +194,22 @@ def test_closure_matches_python_bfs_on_random_dags(spark):
         assert got == expected, f"seed={seed}"
 
 
-def test_driver_closure_matches_loop(spark):
-    """Round-6 size routing: build_closure(impl="auto") computes broadcast-
-    small edge sets driver-side as a LocalRelation; the result must be
-    pair-and-distance identical to the forced distributed loop — on the
-    fixture claims graph and on a seeded random DAG (driven through a
-    LocalRelation so auto actually takes the driver route)."""
+def test_driver_closure_matches_loop(spark, tmp_path):
+    """build_closure computes budget-sized edge sets driver-side as a
+    LocalRelation; the result must be pair-and-distance identical to the
+    distributed loop (forced by an explicit checkpoint_dir) — on the
+    fixture claims graph, on a seeded random DAG, and on generated edge
+    sets with NULL nodes, self-loops, cycles, duplicates, long ids and
+    empty frames (all driven through a LocalRelation so the driver route
+    is actually taken)."""
     import random
+    from collections import Counter
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
 
     from bfokg.ontology import build_closure
+    from bfokg.routing import _is_local
     from bfokg.util import local_df
 
     rng = random.Random(13)
@@ -171,22 +220,34 @@ def test_driver_closure_matches_loop(spark):
     p279 = wikidata_claims_df(spark).where(F.col("property") == "P279").select(
         F.col("qid").alias("child"), F.col("value_qid").alias("parent")
     )
+    loop_dir = str(tmp_path)
+
+    def closure_bag(edges, **kw):
+        return Counter(map(tuple, build_closure(edges, "child", "parent", **kw).collect()))
+
     cases = [
         p279,
         local_df(spark, rand_edges, "child string, parent string"),
     ]
     for edges in cases:
-        auto = {
-            (r.descendant_uri, r.ancestor_uri): r.distance
-            for r in build_closure(edges, "child", "parent").collect()
-        }
-        loop = {
-            (r.descendant_uri, r.ancestor_uri): r.distance
-            for r in build_closure(edges, "child", "parent", impl="loop").collect()
-        }
-        assert auto == loop and auto
+        auto = closure_bag(edges)
+        assert auto == closure_bag(edges, checkpoint_dir=loop_dir) and auto
     # routing: the tiny LocalRelation edge set must have taken the driver
     # path (plan is a LocalTableScan / local-relation scan, no joins)
-    plan = build_closure(cases[1], "child", "parent")._jdf.queryExecution() \
-        .optimizedPlan().toString()
-    assert "Join" not in plan
+    assert _is_local(build_closure(cases[1], "child", "parent"))
+
+    node = st.one_of(st.none(), st.sampled_from(["a", "b", "c", "d", "L" * 300]))
+    graph = st.lists(st.tuples(node, node), max_size=6)
+
+    # few examples, each a union of small disjoint graphs: the loop's
+    # rounds follow the depth of one graph, not the size of the union
+    @settings(max_examples=4, deadline=None)
+    @given(st.lists(graph, max_size=4))
+    def twin_matches_loop(graphs):
+        rows = [tuple(v and f"{k}{v}" for v in e)
+                for k, g in enumerate(graphs) for e in g]
+        edges = local_df(spark, rows, "child string, parent string")
+        assert not rows or _is_local(edges)
+        assert closure_bag(edges) == closure_bag(edges, checkpoint_dir=loop_dir)
+
+    twin_matches_loop()

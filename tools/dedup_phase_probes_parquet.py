@@ -1,7 +1,8 @@
 """Phase probes for the PARQUET-SIGNATURE dedup path (VERDICT r4 item 6
-fallback): bound the shipped `minhash_lsh_pairs(sig_storage="parquet")`
-composite against the box's measured per-phase ceilings so the ×128
-leg's composite efficiency is conclusively substrate-limited.
+fallback): bound the shipped `minhash_lsh_pairs` parquet-signature route
+(taken by inputs estimated over 64 MB) against the box's measured
+per-phase ceilings so the ×128 leg's composite efficiency is
+conclusively substrate-limited.
 
 BENCH/DEDUP.md's round-3 phase probes decomposed the MEMORY-CACHED
 variant; the shipped path materializes signatures to scratch parquet.
@@ -119,7 +120,7 @@ def main():
 ## Parquet-sig phase probes — `tools/dedup_phase_probes_parquet.py` (round 5)
 
 Generated {datetime.now(timezone.utc).isoformat()}: the SHIPPED
-`sig_storage="parquet"` path decomposed at the ×{FACTOR} leg
+parquet-signature route decomposed at the ×{FACTOR} leg
 ({r8['pairs']:,} pairs), fresh JVM per parallelism, warm-up + best of
 {RUNS} per phase (per-sample (sec, 1-min-loadavg-at-start) recorded so
 an externally-bursted sample is visible and excluded by the min).
