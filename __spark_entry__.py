@@ -1886,9 +1886,8 @@ SELECT c_nationkey FROM customer WHERE c_acctbal < -995
 
 
 def q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time window aggregation (the batch shape of the
-    streaming windowed agg): per 6-hour window per event_type, count and
-    decimal-exact value sum."""
+    """Tumbling event-time window aggregation: per 6-hour window per
+    event_type, count and decimal-exact value sum."""
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     return (
         ev.groupBy(F.window("ts", "6 hours").alias("w"), "event_type")

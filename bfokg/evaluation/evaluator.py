@@ -1,6 +1,6 @@
 """Accuracy / P-R evaluation as DataFrame aggregations.
 
-Reference: src/evaluation/evaluator.py (SURVEY.md §2.4 A3-A5, §2.3 J5).
+Reference: src/evaluation/evaluator.py (SURVEY.md §2.4 A3-A4, §2.3 J5).
 correct ⇔ ground-truth URI ∈ top-k predicted URIs (hit@k, k=3 default,
 evaluator.py:60-74), optionally crediting inferred parent matches
 (evaluator.py:68-71). Plus the north_rule's A6: precision/recall of
@@ -58,41 +58,6 @@ def per_class_accuracy(predictions: DataFrame, golden: DataFrame,
         .groupBy("gt_bfo_label")
         .agg(F.avg("hit").alias("accuracy"), F.count("*").alias("n"))
         .orderBy("gt_bfo_label")
-    )
-
-
-def per_source_accuracy(predictions: DataFrame, golden: DataFrame,
-                        top_k: int = TOP_K_DEFAULT) -> DataFrame:
-    """A5 — accuracy per classifier source (evaluator.py:131-171).
-
-    One pass: every (source, golden entity) cell gets a hit flag, then one
-    groupBy(source) aggregate — no per-source driver loop / rescan."""
-    sources = predictions.select("source").distinct()
-    # grouping BY source already isolates each classifier's rows, so the
-    # rank filter alone is correct here (an 'inferred' source row, if
-    # present, is evaluated on its own rank sequence like any other source)
-    per_entity_hits = (
-        predictions.where(F.col("rank") <= top_k)
-        .join(
-            golden.select("entity_id", F.col("gt_bfo_uri").alias("class_uri")),
-            ["entity_id", "class_uri"],
-            "left_semi",
-        )
-        .select("source", "entity_id")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    cells = sources.crossJoin(golden.select("entity_id"))
-    return (
-        cells.join(per_entity_hits, ["source", "entity_id"], "left")
-        .withColumn("hit", F.coalesce(F.col("hit"), F.lit(0)))
-        .groupBy("source")
-        .agg(
-            F.avg("hit").alias("accuracy"),
-            F.sum("hit").alias("correct"),
-            F.count("*").alias("total"),
-        )
-        .select("accuracy", "correct", "total", "source")
     )
 
 

@@ -165,10 +165,6 @@ class SentenceTransformerEncoder:
         return (vecs / norms).astype(np.float32)
 
 
-def default_encoder(dim: int = 384) -> HashingEncoder:
-    return HashingEncoder(dim=dim)
-
-
 def encoder_for_model(name: str, dim: int = 384):
     """Resolve a catalog model name (config.MODEL_CATALOG) to an encoder:
     the SentenceTransformer adapter when the library is importable, else

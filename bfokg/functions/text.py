@@ -1,4 +1,4 @@
-"""Scalar text functions (SURVEY.md §2.2 P1-P2, P5-P6, P8-P9).
+"""Scalar text functions (SURVEY.md §2.2 P1-P2, P5-P6, P8).
 
 All are built-in Spark column expressions — JVM-side, whole-stage-codegen
 eligible; no Python in these paths.
@@ -83,13 +83,3 @@ def natural_label(label: str, definition: str | None) -> str:
     spaced = re.sub(r"(?<!^)([A-Z])", r" \1", label).lower()
     article = "an" if spaced[:1] in "aeiou" else "a"
     return f"{article} {spaced}"
-
-
-def hypothesis_col(entity_text: str = "text", template: str = "{entity_text} is {}.") -> Column:
-    """P9 — hypothesis templating (zeroshot.py:42-47; template from
-    configs/classification.yaml:52). '{entity_text}' ← the entity text
-    column, '{}' ← the per-class ``natural_label`` column."""
-    mid, _, suffix = template.partition("{}")
-    assert mid.startswith("{entity_text}"), "template must lead with {entity_text}"
-    infix = mid[len("{entity_text}"):]
-    return F.concat(F.col(entity_text), F.lit(infix), F.col("natural_label"), F.lit(suffix))

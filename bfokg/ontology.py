@@ -218,21 +218,6 @@ def bfo_classes_df(spark: SparkSession) -> DataFrame:
     return local_df(spark, _rows(), BFO_CLASSES_SCHEMA)
 
 
-def get_text_for_embedding_col():
-    """label + ': ' + definition + ' Examples: ' + '; '.join(examples)
-    (reference BFOClass.get_text_for_embedding — README.md:667-683)."""
-    return F.concat_ws(
-        "",
-        F.col("label"),
-        F.lit(": "),
-        F.coalesce(F.col("definition"), F.lit("")),
-        F.when(
-            F.size("examples") > 0,
-            F.concat(F.lit(" Examples: "), F.array_join("examples", "; ")),
-        ).otherwise(F.lit("")),
-    )
-
-
 def _warn_not_exhausted(max_iterations: int, stacklevel: int) -> None:
     import warnings
 

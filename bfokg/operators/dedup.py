@@ -469,8 +469,8 @@ def minhash_signatures(
     Two DELIBERATE scalar-vs-vector calls, both measured (VERDICT r2 item
     4 asked for full vectorization; the measurements said no):
     - per-shingle ``zlib.crc32`` C calls beat the bit-identical vectorized
-      numpy table-gather char loop 3× (kept as the documented experiment
-      in ``functions.hashing`` — short strings are C-call-bound);
+      numpy table-gather char loop 3× (BENCH/DEDUP.md records the
+      rejected kernel — short strings are C-call-bound);
     - the per-DOC k×|sh| universal-hash matrix beats a batched
       all-docs-at-once ``minimum.reduceat`` variant: the small per-doc
       temporaries stay in the allocator pool / CPU cache, while the
@@ -646,7 +646,7 @@ def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
 
     Per-token ``zlib.crc32`` C calls + a per-doc vectorized bit expansion —
     the measured-fastest shape (see ``minhash_signatures``' docstring and
-    ``functions.hashing``: both the vectorized-hash and the
+    BENCH/DEDUP.md: both the vectorized-hash and the
     batch-all-docs ``reduceat`` variants lost to small cache-resident
     per-doc temporaries under 32 parallel workers)."""
     from zlib import crc32

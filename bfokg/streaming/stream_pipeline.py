@@ -13,7 +13,7 @@ streaming relaxation of a global keep-first).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.linking import alias_dict_df
 from ..operators.triples import extract_triples, link_triples
@@ -52,288 +52,6 @@ def run_stream_to_memory(
     table (test/debug sink); returns the query after it finishes."""
     q = (
         stream_edges(spark, source_dir, watermark, max_files_per_trigger)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def stream_windowed_turns(
-    spark: SparkSession,
-    source_dir: str,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Watermarked event-time windowed aggregation: turns per
-    (window, role). The canonical late-data shape — rows whose event time
-    falls more than ``watermark`` behind the stream's max seen event time
-    are DROPPED (their window's state has been finalized and evicted); on
-    a real cluster this is what bounds state-store size at 10^12-turn
-    scale. Update output mode: each micro-batch emits refreshed counts for
-    the windows it touched; the last emit per window is the answer
-    (pinned against the batch equivalent, minus dropped-late rows, in
-    tests/test_entry_and_streaming.py)."""
-    reader = spark.readStream.schema(
-        "conv_id string, turn_idx int, role string, text string, tool string, "
-        "ts timestamp"
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    transcripts = reader.parquet(source_dir)
-    return (
-        transcripts.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "role")
-        .agg(F.count("*").alias("n_turns"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "role",
-            "n_turns",
-        )
-    )
-
-
-def run_windowed_turns_to_memory(
-    spark: SparkSession,
-    source_dir: str,
-    name: str = "windowed_turns_stream",
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    max_files_per_trigger: int | None = None,
-):
-    """Drain the windowed aggregation (availableNow) into a memory sink."""
-    q = (
-        stream_windowed_turns(spark, source_dir, window, watermark,
-                              max_files_per_trigger)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-# ------------------- custom stateful operator: sessionization -------------
-
-CONV_STATS_SCHEMA = (
-    "conv_id string, n_turns bigint, n_tool_calls bigint, "
-    "first_ts timestamp, last_ts timestamp"
-)
-_CONV_STATE_SCHEMA = "n bigint, ntool bigint, first_us bigint, last_us bigint"
-
-
-def _conv_stats_fn(key, pdf_iter, state):
-    """applyInPandasWithState kernel: accumulate per-conversation counters
-    across micro-batches; emit the running totals each batch (update-mode
-    semantics — the last emit per conv_id is the final answer). Timestamps
-    are carried in state as int64 microseconds (flat state schema)."""
-    import pandas as pd
-
-    n, ntool, first_us, last_us = (
-        state.get if state.exists else (0, 0, None, None)
-    )
-    for pdf in pdf_iter:
-        n += len(pdf)
-        tool = pdf["tool"]
-        ntool += int((tool.notna() & (tool != "")).sum())
-        ts_us = pdf["ts"].astype("int64") // 1000  # pandas ns → us
-        lo, hi = int(ts_us.min()), int(ts_us.max())
-        first_us = lo if first_us is None else min(first_us, lo)
-        last_us = hi if last_us is None else max(last_us, hi)
-    state.update((n, ntool, first_us, last_us))
-    yield pd.DataFrame(
-        {
-            "conv_id": [key[0]],
-            "n_turns": [n],
-            "n_tool_calls": [ntool],
-            "first_ts": [pd.Timestamp(first_us, unit="us")],
-            "last_ts": [pd.Timestamp(last_us, unit="us")],
-        }
-    )
-
-
-def stream_conversation_stats(
-    spark: SparkSession,
-    source_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState): per-
-    conversation rollup (turn count, tool-call count, first/last event time)
-    whose state survives across micro-batches. The reference has no
-    streaming at all (SURVEY.md §2.8); this is the transcripts-native
-    stateful shape — at scale the state store shards by conv_id across
-    executors, and conv_id grouping means no cross-partition state."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    reader = spark.readStream.schema(
-        "conv_id string, turn_idx int, role string, text string, tool string, "
-        "ts timestamp"
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    transcripts = reader.parquet(source_dir)
-    return transcripts.groupBy("conv_id").applyInPandasWithState(
-        _conv_stats_fn,
-        outputStructType=CONV_STATS_SCHEMA,
-        stateStructType=_CONV_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_conversation_stats_to_memory(
-    spark: SparkSession,
-    source_dir: str,
-    name: str = "conv_stats_stream",
-    max_files_per_trigger: int | None = None,
-):
-    """Drain the sessionization stream (availableNow) into a memory sink."""
-    q = (
-        stream_conversation_stats(spark, source_dir, max_files_per_trigger)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-# ------------------- native session windows (gap-based, streaming) --------
-
-
-def stream_sessions(
-    spark: SparkSession,
-    source_dir: str,
-    gap: str = "10 minutes",
-    watermark: str = "30 minutes",
-    by: str = "conv_id",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Gap-based session aggregation over the stream via Spark's native
-    ``session_window`` — the streaming twin of the batch
-    ``operators.temporal.sessionize`` (whose per-session aggregate it
-    matches row-for-row in batch mode, pinned in tests/test_temporal.py).
-    Append output: a session row emits once, when the watermark passes its
-    end (last event + gap) — which is what bounds state at 10^12-turn
-    scale: open sessions hold one merged window per key, closed sessions
-    leave the store."""
-    reader = spark.readStream.schema(
-        "conv_id string, turn_idx int, role string, text string, tool string, "
-        "ts timestamp"
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    transcripts = reader.parquet(source_dir)
-    return (
-        transcripts.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("sess"), F.col(by))
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            F.col(by),
-            F.col("sess.start").alias("sess_start"),
-            F.col("sess.end").alias("sess_end"),
-            "n_turns",
-        )
-    )
-
-
-def run_sessions_to_memory(
-    spark: SparkSession,
-    source_dir: str,
-    name: str = "sessions_stream",
-    gap: str = "10 minutes",
-    watermark: str = "30 minutes",
-    by: str = "conv_id",
-    max_files_per_trigger: int | None = None,
-):
-    """Drain the session stream (availableNow, append) into a memory sink."""
-    q = (
-        stream_sessions(spark, source_dir, gap, watermark, by,
-                        max_files_per_trigger)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-# ------------- stream-stream time-bounded join (interval enrich) ----------
-
-
-def stream_turn_replies(
-    spark: SparkSession,
-    source_dir: str,
-    horizon: str = "5 minutes",
-    watermark: str = "10 minutes",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Native stream-stream JOIN with an event-time range — the streaming
-    twin of ``operators.temporal.interval_join``: pair every user turn
-    with the assistant turns of the SAME conversation arriving within
-    ``horizon`` after it. Both sides carry watermarks and the join
-    condition bounds event-time distance, which is exactly what lets
-    Spark evict join state (a side's rows leave the state store once the
-    other side's watermark passes their ts + horizon) — unbounded-state
-    stream joins are refused by Spark, and this shape is the reason.
-
-    Inner-join semantics: matches emit as soon as both rows have
-    arrived; equal to the batch join over the same files when nothing
-    is late (pinned in tests/test_entry_and_streaming.py)."""
-    schema = ("conv_id string, turn_idx int, role string, text string, "
-              "tool string, ts timestamp")
-
-    def _reader():
-        r = spark.readStream.schema(schema)
-        if max_files_per_trigger:
-            r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-        return r.parquet(source_dir)
-
-    users = (
-        _reader().where(F.col("role") == "user")
-        .select("conv_id", F.col("turn_idx").alias("u_turn"),
-                F.col("ts").alias("u_ts"))
-        .withWatermark("u_ts", watermark)
-    )
-    replies = (
-        _reader().where(F.col("role") == "assistant")
-        .select(F.col("conv_id").alias("r_conv"),
-                F.col("turn_idx").alias("r_turn"),
-                F.col("ts").alias("r_ts"))
-        .withWatermark("r_ts", watermark)
-    )
-    cond = F.expr(
-        f"conv_id = r_conv AND r_ts >= u_ts AND r_ts <= u_ts + INTERVAL {horizon}"
-    )
-    return (
-        users.join(replies, cond, "inner")
-        .select("conv_id", "u_turn", "u_ts", "r_turn", "r_ts")
-    )
-
-
-def run_turn_replies_to_memory(
-    spark: SparkSession,
-    source_dir: str,
-    name: str = "turn_replies_stream",
-    horizon: str = "5 minutes",
-    watermark: str = "10 minutes",
-    max_files_per_trigger: int | None = None,
-):
-    """Drain the stream-stream join (availableNow, append) into memory."""
-    q = (
-        stream_turn_replies(spark, source_dir, horizon, watermark,
-                            max_files_per_trigger)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")

@@ -298,22 +298,6 @@ def test_no_jobs_at_operator_construction(spark):
     fake = lambda df, k: matches.join(  # noqa: E731
         df.select(F.col("id").alias("entity_id")), "entity_id", "left_semi"
     )
-    from bfokg.operators.temporal import (
-        asof_join,
-        asof_join_global,
-        interval_join,
-        sessionize,
-    )
-
-    ev = spark.createDataFrame(
-        [(1, __import__("datetime").datetime(2026, 1, 1), 0.5)],
-        "user_id long, ts timestamp, value double",
-    )
-    iv = spark.createDataFrame(
-        [(1, __import__("datetime").datetime(2026, 1, 1),
-          __import__("datetime").datetime(2026, 1, 2), 1.0)],
-        "user_id long, start timestamp, end timestamp, weight double",
-    )
     sc = spark.sparkContext
     sc.setJobGroup("construction-probe", "no jobs expected")
     try:
@@ -321,14 +305,6 @@ def test_no_jobs_at_operator_construction(spark):
         lsh_bucket_candidates(e)
         embedding_near_dups(e, bucketed=True)
         tiered(ents, {"rule_based": fake, "semantic": fake, "zeroshot": fake})
-        asof_join(ev, ev.drop("value").withColumn("v", F.lit(1.0)),
-                  on="ts", by="user_id")
-        asof_join_global(ev, ev.select("ts", "value"), on="ts")
-        sessionize(ev, by="user_id")
-        # interval_join's pre-flight guard is a DOCUMENTED construction-time
-        # aggregate (like the minhash parquet signatures); guard="off" must
-        # stay lazy
-        interval_join(ev, iv, by="user_id", guard="off")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("construction-probe") == []

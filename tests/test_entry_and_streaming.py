@@ -2,8 +2,7 @@
 
 import os
 import sys
-
-from pyspark.sql import functions as F
+import zlib
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -17,6 +16,23 @@ def test_oracle_keys_subset_of_queries():
     assert set(oracles) <= set(qs)
     # every oracle is nonempty SQL
     assert all(s.strip().upper().startswith(("SELECT", "WITH")) for s in oracles.values())
+
+
+def test_sql_crc32_matches_zlib():
+    """The oracles' recursive-CTE crc32 (``_sql_crc32_ctes``, DuckDB only)
+    equals zlib.crc32 on ASCII strings, including the empty string, a
+    single character and a 300-character walk."""
+    import duckdb
+
+    strs = ["", "a", "Q42#", "hello world",
+            "the quick brown fox jumps over the lazy dog",
+            ("abcdefghij0123456789 #" * 14)[:300]]
+    values = ", ".join("('" + s + "')" for s in strs)
+    rows = duckdb.sql(
+        f"WITH RECURSIVE strs(s) AS (VALUES {values}),"
+        f"{entrymod._sql_crc32_ctes('strs')} SELECT s, crc FROM crc32_out"
+    ).fetchall()
+    assert dict(rows) == {s: zlib.crc32(s.encode()) for s in strs}
 
 
 def test_entry_returns_edges(spark):
@@ -122,264 +138,3 @@ def test_streaming_triple_dedup_within_watermark(spark, tmp_path):
         ).collect()
     }
     assert set(keys) == batch_keys  # distinct stream set == batch dedup
-
-
-def test_windowed_watermark_drops_late_rows(spark, tmp_path):
-    """Watermark + event-time windowed agg (the late-data contract): a row
-    arriving a second micro-batch later with event time beyond the
-    watermark horizon is DROPPED — its finalized window keeps the on-time
-    count — while fresh rows aggregate normally. Batch over the same files
-    counts the late row, pinning the difference to watermark semantics."""
-    from datetime import datetime, timedelta
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from bfokg.streaming.stream_pipeline import run_windowed_turns_to_memory
-
-    base = datetime(2026, 1, 1, 12, 0, 0)
-
-    def table(rows):
-        return pa.table(
-            {
-                "conv_id": pa.array([r[0] for r in rows], pa.string()),
-                "turn_idx": pa.array([r[1] for r in rows], pa.int32()),
-                "role": pa.array([r[2] for r in rows], pa.string()),
-                "text": pa.array(["t"] * len(rows), pa.string()),
-                "tool": pa.array([""] * len(rows), pa.string()),
-                "ts": pa.array(
-                    [base + timedelta(minutes=r[3]) for r in rows],
-                    pa.timestamp("us"),
-                ),
-            }
-        )
-
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    # batch 0: on-time rows (max event +29min → watermark becomes +19min)
-    # batch 1: fresh row at +40min — the minute-0 window's state gets
-    #          EVICTED at this batch's end (update-mode eviction lags the
-    #          watermark by one batch: state cleanup runs with the batch's
-    #          own watermark, so the first batch after the advance evicts)
-    # batch 2: one LATE row at minute 0 (far below watermark +30) → DROPPED
-    #          plus a fresh row proving the batch still aggregates normally
-    pq.write_table(
-        table([("c1", 0, "user", 0), ("c1", 1, "user", 1), ("c2", 0, "user", 29)]),
-        src / "00.parquet")
-    pq.write_table(table([("c3", 1, "user", 40)]), src / "01.parquet")
-    pq.write_table(
-        table([("c4", 0, "user", 0), ("c4", 1, "assistant", 41)]),
-        src / "02.parquet")
-    for i, f in enumerate(["00.parquet", "01.parquet", "02.parquet"]):
-        os.utime(src / f, (1000000000 + i * 100,) * 2)
-
-    q = run_windowed_turns_to_memory(
-        spark, str(src), name="win_turns_test",
-        window="5 minutes", watermark="10 minutes", max_files_per_trigger=1,
-    )
-    dropped = sum(
-        so.get("numRowsDroppedByWatermark", 0)
-        for p in q.recentProgress for so in p.get("stateOperators", [])
-    )
-    assert dropped == 1                   # exactly the late row
-    got = {
-        (r.win_start.minute, r.role): r.n_turns
-        for r in spark.sql("SELECT * FROM win_turns_test").collect()
-    }
-    # on-time counts only: the late ('user', minute-0 window) row is absent
-    assert got[(0, "user")] == 2          # batch over all files would say 3
-    assert got[(25, "user")] == 1
-    assert got[(40, "user")] == 1 and got[(40, "assistant")] == 1
-    # cross-check: batch counts the late row — the delta IS the watermark
-    batch = (
-        spark.read.parquet(str(src))
-        .groupBy(F.window("ts", "5 minutes").alias("w"), "role")
-        .count()
-    )
-    b = {(r.w.start.minute, r.role): r["count"] for r in batch.collect()}
-    assert b[(0, "user")] == 3
-
-
-def test_stateful_sessionization_matches_batch(spark):
-    """applyInPandasWithState conversation rollup, drained one file per
-    micro-batch (state must survive across batches), converges to the
-    batch groupBy answer; last emit per conv_id is the final state."""
-    import tempfile
-
-    from pyspark.sql import Window
-    from bfokg.streaming.stream_pipeline import run_conversation_stats_to_memory
-
-    full = spark.read.parquet(generate_transcripts(0.001))
-    # two files, every conversation split across both → state must carry over
-    tmp = tempfile.mkdtemp(prefix="conv_stats_src_")
-    full.where("turn_idx % 2 = 0").coalesce(1).write.mode("append").parquet(tmp)
-    full.where("turn_idx % 2 = 1").coalesce(1).write.mode("append").parquet(tmp)
-    src = tmp
-    batch = spark.read.parquet(src)
-    expected = {
-        r.conv_id: (r.n_turns, r.n_tool_calls, r.first_ts, r.last_ts)
-        for r in batch.groupBy("conv_id")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum(
-                (F.col("tool").isNotNull() & (F.col("tool") != "")).cast("long")
-            ).alias("n_tool_calls"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        )
-        .collect()
-    }
-    run_conversation_stats_to_memory(
-        spark, src, name="conv_stats_test", max_files_per_trigger=1
-    )
-    emits = spark.sql("SELECT * FROM conv_stats_test")
-    w = Window.partitionBy("conv_id").orderBy(F.desc("n_turns"))
-    final = emits.withColumn("rk", F.row_number().over(w)).where("rk = 1")
-    got = {
-        r.conv_id: (r.n_turns, r.n_tool_calls, r.first_ts, r.last_ts)
-        for r in final.collect()
-    }
-    assert got == expected
-    # state really crossed micro-batches: some conv got >1 emit
-    assert emits.count() > len(expected)
-
-
-def test_streaming_session_windows_close_on_watermark(spark, tmp_path):
-    """Native session_window stream (append mode): a session row emits
-    exactly once, when the watermark passes its end (last event + gap);
-    open sessions never emit. The emitted set must equal the batch
-    session_window aggregate minus the still-open sentinel session."""
-    from datetime import datetime, timedelta
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from bfokg.streaming.stream_pipeline import run_sessions_to_memory
-
-    base = datetime(2026, 1, 1, 12, 0, 0)
-
-    def table(rows):
-        return pa.table(
-            {
-                "conv_id": pa.array([r[0] for r in rows], pa.string()),
-                "turn_idx": pa.array([r[1] for r in rows], pa.int32()),
-                "role": pa.array(["user"] * len(rows), pa.string()),
-                "text": pa.array(["t"] * len(rows), pa.string()),
-                "tool": pa.array([""] * len(rows), pa.string()),
-                "ts": pa.array(
-                    [base + timedelta(minutes=r[2]) for r in rows],
-                    pa.timestamp("us"),
-                ),
-            }
-        )
-
-    src = tmp_path / "sess_src"
-    src.mkdir()
-    # gap 10m, watermark 10m:
-    # batch 0: c1@0, c1@3 (one session [0,13]), c2@5 ([5,15])
-    # batch 1: c1@30 → wm 20: closes [0,13], [5,15] (eviction may lag 1 batch)
-    # batch 2: zz@120 → wm 110: closes c1's [30,40]
-    # batch 3: zz@240 → wm 230: closes zz's [120,130]; zz@240 stays OPEN
-    pq.write_table(table([("c1", 0, 0), ("c1", 1, 3), ("c2", 0, 5)]),
-                   src / "00.parquet")
-    pq.write_table(table([("c1", 2, 30)]), src / "01.parquet")
-    pq.write_table(table([("zz", 0, 120)]), src / "02.parquet")
-    pq.write_table(table([("zz", 1, 240)]), src / "03.parquet")
-    for i, f in enumerate(sorted(os.listdir(src))):
-        os.utime(src / f, (1000000000 + i * 100,) * 2)
-
-    run_sessions_to_memory(
-        spark, str(src), name="sessions_test",
-        gap="10 minutes", watermark="10 minutes", max_files_per_trigger=1,
-    )
-    got = sorted(
-        (r.conv_id, r.sess_start, r.sess_end, r.n_turns)
-        for r in spark.sql("SELECT * FROM sessions_test").collect()
-    )
-    batch_rows = (
-        spark.read.parquet(str(src))
-        .groupBy(F.session_window("ts", "10 minutes").alias("s"), "conv_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    open_start = base + timedelta(minutes=240)
-    want = sorted(
-        (r.conv_id, r.s.start, r.s.end, r.n)
-        for r in batch_rows
-        if r.s.start != open_start        # zz@240's session is still open
-    )
-    assert got == want and len(got) == 4
-    # every emitted row appeared exactly once (append mode: emit-on-close)
-    assert len(got) == len(set(got))
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Native stream-stream join with an event-time range (the streaming
-    interval_join): user turns paired with same-conversation assistant
-    replies within the horizon. Drained over multiple micro-batches with
-    conversations SPLIT across batches (join state must hold one side
-    until the other arrives), the emitted set equals the batch join."""
-    from datetime import datetime, timedelta
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from bfokg.streaming.stream_pipeline import run_turn_replies_to_memory
-
-    base = datetime(2026, 1, 1, 12, 0, 0)
-
-    def table(rows):
-        return pa.table(
-            {
-                "conv_id": pa.array([r[0] for r in rows], pa.string()),
-                "turn_idx": pa.array([r[1] for r in rows], pa.int32()),
-                "role": pa.array([r[2] for r in rows], pa.string()),
-                "text": pa.array(["t"] * len(rows), pa.string()),
-                "tool": pa.array([""] * len(rows), pa.string()),
-                "ts": pa.array(
-                    [base + timedelta(minutes=r[3], seconds=r[4]) for r in rows],
-                    pa.timestamp("us"),
-                ),
-            }
-        )
-
-    src = tmp_path / "ssj_src"
-    src.mkdir()
-    # batch 0: c1 user@0:00, c1 assistant@0:30 (match), c2 user@1:00
-    # batch 1: c2 assistant@2:00 (matches the batch-0 user — state carry),
-    #          c1 assistant@9:00 (OUTSIDE 5-min horizon of user@0 — no match)
-    # batch 2: c3 user@20:00 + c3 assistant@24:59 (match at horizon edge)
-    pq.write_table(
-        table([("c1", 0, "user", 0, 0), ("c1", 1, "assistant", 0, 30),
-               ("c2", 0, "user", 1, 0)]),
-        src / "00.parquet")
-    pq.write_table(
-        table([("c2", 1, "assistant", 2, 0), ("c1", 2, "assistant", 9, 0)]),
-        src / "01.parquet")
-    pq.write_table(
-        table([("c3", 0, "user", 20, 0), ("c3", 1, "assistant", 24, 59)]),
-        src / "02.parquet")
-    for i, f in enumerate(sorted(os.listdir(src))):
-        os.utime(src / f, (1000000000 + i * 100,) * 2)
-
-    run_turn_replies_to_memory(
-        spark, str(src), name="ssj_test",
-        horizon="5 minutes", watermark="10 minutes", max_files_per_trigger=1,
-    )
-    got = sorted(
-        (r.conv_id, r.u_turn, r.r_turn)
-        for r in spark.sql("SELECT * FROM ssj_test").collect()
-    )
-    assert got == [("c1", 0, 1), ("c2", 0, 1), ("c3", 0, 1)]
-    # batch cross-check: identical join over the full files
-    t = spark.read.parquet(str(src))
-    u = t.where("role='user'").select("conv_id", F.col("turn_idx").alias("u_turn"),
-                                      F.col("ts").alias("u_ts"))
-    a = t.where("role='assistant'").select(
-        F.col("conv_id").alias("r_conv"), F.col("turn_idx").alias("r_turn"),
-        F.col("ts").alias("r_ts"))
-    b = u.join(a, F.expr(
-        "conv_id = r_conv AND r_ts >= u_ts AND r_ts <= u_ts + INTERVAL 5 MINUTES"
-    ))
-    want = sorted((r.conv_id, r.u_turn, r.r_turn) for r in b.collect())
-    assert got == want

@@ -79,24 +79,6 @@ def test_minhash_estimates_jaccard(xs, ys):
     assert abs(est - true) <= 5 * math.sqrt(0.25 / 128) + 1e-9
 
 
-@settings(max_examples=50, deadline=None)
-@given(st.lists(st.text(alphabet="abcdefghij0123456789 ", max_size=30), max_size=40))
-def test_vectorized_crc32_matches_zlib(tokens):
-    """functions.hashing is bit-identical to zlib.crc32 (the contract that
-    keeps the DuckDB recursive-CTE oracles green), including the one-byte
-    suffix step used for SimHash's high word."""
-    from zlib import crc32
-
-    from bfokg.functions.hashing import _INIT, crc32_batch, crc32_states, crc32_step
-
-    got = crc32_batch(tokens)
-    want = np.array([crc32(t.encode()) for t in tokens], dtype=np.uint32)
-    assert got.shape == want.shape and (got == want).all()
-    stepped = crc32_step(crc32_states(tokens), ord("#")) ^ _INIT
-    want2 = np.array([crc32((t + "#").encode()) for t in tokens], dtype=np.uint32)
-    assert (stepped == want2).all()
-
-
 @settings(max_examples=60, deadline=None)
 @given(
     st.sampled_from(["444", "422", "420", "mono"]),

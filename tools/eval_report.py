@@ -113,7 +113,9 @@ def main():
         "vector is the L2-normalized sum of its subtree's vectors, giving the",
         "lexical encoder the 'anything below me' generalization SBERT gets",
         "from pretraining. Stop rules / thresholds are reference semantics",
-        "(kernel==iterative cross-check still pinned). Exact-stop stays low",
+        "(the walk is pinned against its DuckDB replay in",
+        "tests/test_hierarchy_and_eval.py::test_hierarchical_exact_matches_duckdb_oracle).",
+        "Exact-stop stays low",
         "by construction — the walk often (correctly) descends PAST the",
         "mid-level gt label into a more specific subclass, which mirrors the",
         "reference's own hierarchical fragility on mid-level labels.",

@@ -53,37 +53,6 @@ def main():
         with redirect_stdout(buf):
             df.explain("formatted")
         out.append(f"\n## {name}\n\n```\n{buf.getvalue().strip()}\n```\n")
-    # temporal operators (not registry queries): the one-shuffle shape —
-    # a single hashpartitioning exchange on the by-keys feeding the window
-    from pyspark.sql import functions as F
-    from bfokg.operators.temporal import (asof_join, asof_join_global,
-                                          interval_join, sessionize)
-
-    ev = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-    clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts", "event_id")
-    buys = (ev.where(F.col("event_type") == "purchase")
-            .select("user_id", "ts", "value").dropDuplicates(["user_id", "ts"]))
-    iv = buys.select("user_id", F.col("ts").alias("start"),
-                     (F.col("ts") + F.expr("INTERVAL 2 HOURS")).alias("end"),
-                     "value")
-    for name, df in (
-        ("asof_join (clicks ⟵ latest purchase per user)",
-         asof_join(clicks, buys, on="ts", by="user_id")),
-        ("sessionize (events, 30-min gap)",
-         sessionize(ev, ts_col="ts", by="user_id", tiebreak=["event_id"])),
-        ("asof_join_global (un-keyed, bucket-carry; note the broadcast of "
-         "the bucket-summary carry table)",
-         asof_join_global(clicks.drop("user_id"),
-                          buys.drop("user_id").dropDuplicates(["ts"]),
-                          on="ts")),
-        ("interval_join (bucket-explode equi-join; no theta-join — the "
-         "BETWEEN is a residual filter on a hash join)",
-         interval_join(clicks, iv, on="ts", by="user_id", guard="off")),
-    ):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        out.append(f"\n## {name}\n\n```\n{buf.getvalue().strip()}\n```\n")
 
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                         "BENCH", "PLANS.md")

@@ -107,33 +107,11 @@ for name in ("kg_nodes_canon", "eval_rule_accuracy", "image_features"):
     assert cnt > 0, name
 print("round2c OK: real PNM decode + 3 new oracle queries run")
 
-# round-5 surfaces: repetition stats + as-of join on the events table
+# round-5 surface: repetition stats
 from bfokg.operators.repetition import top_ngram_stats
-from bfokg.operators.temporal import asof_join
 docs5 = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 rep = top_ngram_stats(docs5.limit(50))
 assert rep.count() > 0 and rep.where(F.col("top_ngram_frac") > 1).count() == 0
-ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts", "event_id")
-buys = ev.where(F.col("event_type") == "purchase").select("user_id", "ts", "value") \
-         .dropDuplicates(["user_id", "ts"])
-aj = asof_join(clicks, buys, on="ts", by="user_id",
-               tolerance="INTERVAL 7 DAYS")
-n_aj = aj.count(); n_cl = clicks.count()
-assert n_aj == n_cl and n_aj > 0, (n_aj, n_cl)
-from bfokg.operators.temporal import asof_join_global, interval_join, sessionize
-sess = sessionize(t, ts_col="ts", by="conv_id", gap="INTERVAL 10 MINUTES",
-                  tiebreak=["turn_idx"])
-assert sess.count() == t.count()
-g = asof_join_global(clicks.drop("user_id"),
-                     buys.drop("user_id").dropDuplicates(["ts"]),
-                     on="ts", bucket_seconds=3600)
-assert g.count() == n_cl
-iv = buys.select("user_id", F.col("ts").alias("start"),
-                 (F.col("ts") + F.expr("INTERVAL 2 HOURS")).alias("end"),
-                 "value")
-ivj = interval_join(clicks, iv, on="ts", by="user_id", how="left", guard="strict")
-assert ivj.count() >= n_cl
-print(f"round5 OK: top_ngram_stats bounded, asof/global/interval joins keep all {n_cl} left rows, sessionize total-preserving")
+print("round5 OK: top_ngram_stats bounded")
 print("VERIFY_DRIVE_ALL_OK")
 spark.stop()
