@@ -1,5 +1,5 @@
-"""Temporal joins Spark lacks natively — as-of join via the union +
-keyed-window trick.
+"""Keyed temporal operators Spark lacks natively: the as-of join (union +
+keyed-window trick) and gap-based sessionization.
 
 No reference counterpart (the reference has no temporal data at all);
 this serves the transcripts/events side of the engine: "attach to each
@@ -13,12 +13,9 @@ Scale shape: ONE shuffle, both sides hash-partitioned together on the
 inequality join, no per-key Python). Cost is O((|L|+|R|) log) for the
 per-partition sort. The ``by`` keys are mandatory: a global (un-keyed)
 as-of is a single ordered sequence — one partition, no parallelism —
-so this operator refuses it rather than silently serializing; time-
-bucket the input and carry per-bucket maxima if you genuinely need a
-global as-of. Skew: per-key window state is one row (the running last
-right payload), so even a hub key costs only its own sort — and when
-that single sort is itself the straggler, ``asof_join_global(by=…)``
-time-buckets WITHIN keys with identical output (test-pinned).
+so both operators refuse it rather than silently serializing. Skew:
+per-key window state is one row (the running last right payload), so
+even a hub key costs only its own sort.
 
 Verification: pytest compares against DuckDB's native ASOF JOIN
 bit-for-bit (both directions, tolerance, composite keys, ties) — the
@@ -30,246 +27,6 @@ oracle-backed queries.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
-
-
-def _time_bucket(col_name: str, width_us: int):
-    """floor(us / width) bucket id. The cast makes TIMESTAMP_NTZ columns
-    (what parquet timestamps scanned without a session zone come back as —
-    ``unix_micros`` rejects them outright in Spark 4) bucket via the
-    session zone; a no-op for plain TIMESTAMP. Bucketing only needs a
-    consistent monotonic integer on both sides, which any single zone
-    gives."""
-    return F.floor(
-        F.unix_micros(F.col(col_name).cast("timestamp")) / F.lit(width_us)
-    )
-
-
-def asof_join_global(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    direction: str = "backward",
-    bucket_seconds: int = 3600,
-    tolerance: Column | str | None = None,
-    suffix: str = "_right",
-    by: list[str] | str | None = None,
-) -> DataFrame:
-    """Bucketed as-of join — the scale path for the two cases the plain
-    keyed ``asof_join`` can't spread: the GLOBAL (un-keyed) as-of, which
-    is inherently one ordered sequence, and a HUB key whose rows would
-    all sort in one straggler task. The decomposition is time-bucketing:
-
-      1. reduce ``right`` to ONE row per (``by``…, bucket) (``max_by``/
-         ``min_by`` payload — map-side partial agg, shuffle O(buckets));
-      2. compute each bucket's CARRY — the latest right payload in any
-         strictly-earlier bucket (strictly-later for forward) — with a
-         window over the BUCKET SUMMARIES: per ``by`` key when keyed
-         (fully parallel), single-partition when global — either way the
-         serial part shrinks from O(rows) to O(buckets);
-      3. resolve within-bucket matches with the same union+window trick
-         as ``asof_join`` partitioned by (``by``…, bucket);
-         ``coalesce(in_bucket, carry)``. The carry table broadcasts in
-         the global case; keyed, it joins on (``by``…, bucket) and AQE
-         picks the strategy.
-
-    Output semantics are IDENTICAL to ``asof_join`` (pinned in tests:
-    equal to the keyed operator on the same data at several widths, and
-    DuckDB-ASOF-pinned globally, including the degenerate single-bucket
-    and mostly-empty-bucket cases). ``bucket_seconds`` tunes the
-    straggler bound: one task sorts one (key, bucket), so pick it so a
-    hot key's densest bucket fits a task, while the bucket COUNT
-    (time span / width) stays broadcastable in the global case — at
-    10^12 rows over a year, hourly buckets are 8.8k summary rows.
-    ``right`` must be unique per (``by``…, ``on``). ``on`` must be a
-    timestamp column."""
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward: {direction!r}")
-    by = [by] if isinstance(by, str) else list(by or [])
-    clash = [c for c in left.columns + right.columns if c.startswith("_asof_")]
-    if clash:
-        raise ValueError(f"_asof_* column names are reserved: {clash}")
-    if isinstance(tolerance, str):
-        tolerance = F.expr(tolerance)
-    payload_cols = [c for c in right.columns if c != on and c not in by]
-    out_clash = [c for c in [on] + payload_cols if f"{c}{suffix}" in left.columns]
-    if out_clash:
-        raise ValueError(
-            f"output columns would shadow left columns: "
-            f"{[f'{c}{suffix}' for c in out_clash]} — pass a different suffix"
-        )
-    payload = F.struct(
-        F.col(on).alias(on), *[F.col(c).alias(c) for c in payload_cols]
-    )
-    bkt = _time_bucket(on, int(bucket_seconds * 1_000_000))
-    back = direction == "backward"
-
-    # 1. one summary row per non-empty right (by…, bucket)
-    agg = F.max_by(payload, F.col(on)) if back else F.min_by(payload, F.col(on))
-    rb = right.withColumn("_asof_bkt", bkt)
-    bucket_last = rb.groupBy(*by, "_asof_bkt").agg(agg.alias("_asof_payload"))
-
-    # 2. carry per LEFT bucket: last/first summary from strictly-adjacent-
-    #    side buckets, over O(buckets) summary rows — per key when keyed
-    #    (parallel), single-partition when global.
-    lb = left.withColumn("_asof_bkt", bkt)
-    need = (lb.select(*by, "_asof_bkt").distinct()
-            .withColumn("_asof_side", F.lit(0)))
-    summaries = bucket_last.withColumn("_asof_side", F.lit(1))
-    seq = need.unionByName(summaries, allowMissingColumns=True)
-    # left marker 0: a left bucket's frame edge excludes its OWN bucket's
-    # right summary (within-bucket rows are resolved exactly in step 3)
-    if back:
-        order = [F.asc("_asof_bkt"), F.asc("_asof_side")]
-    else:
-        # desc buckets, ASC side: (b, left=0) precedes (b, right=1), so a
-        # left bucket's frame still excludes its own bucket's summary
-        order = [F.desc("_asof_bkt"), F.asc("_asof_side")]
-    w = (Window.partitionBy(*by) if by else Window).orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    carry_expr = F.last("_asof_payload", ignorenulls=True).over(w)
-    carry = (
-        seq.withColumn("_asof_carry", carry_expr)
-        .where(F.col("_asof_side") == 0)
-        .select(*by, "_asof_bkt", "_asof_carry")
-    )
-
-    # 3. within-bucket resolution, partitioned by (by…, bucket)
-    r_mark = 0 if back else 1
-    r = rb.select(
-        *by, "_asof_bkt", F.col(on).alias("_asof_ts"),
-        payload.alias("_asof_payload"),
-        F.lit(r_mark).alias("_asof_side"),
-    )
-    l = lb.select(
-        "*", F.col(on).alias("_asof_ts"),
-        F.lit(None).cast(r.schema["_asof_payload"].dataType).alias("_asof_payload"),
-        F.lit(1 - r_mark).alias("_asof_side"),
-    )
-    unioned = l.unionByName(r, allowMissingColumns=True)
-    wb = Window.partitionBy(*by, "_asof_bkt").orderBy("_asof_ts", "_asof_side")
-    if back:
-        wb = wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        in_bucket = F.last("_asof_payload", ignorenulls=True).over(wb)
-    else:
-        wb = wb.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        in_bucket = F.first("_asof_payload", ignorenulls=True).over(wb)
-    carry_j = F.broadcast(carry) if not by else carry
-    out = (
-        unioned.withColumn("_asof_in", in_bucket)
-        .where(F.col("_asof_side") == (1 - r_mark))
-        .join(carry_j, [*by, "_asof_bkt"], "left")
-        .withColumn("_asof_match", F.coalesce("_asof_in", "_asof_carry"))
-    )
-    if tolerance is not None:
-        gap_ok = (
-            F.col("_asof_match")[on] >= F.col("_asof_ts") - tolerance
-            if back
-            else F.col("_asof_match")[on] <= F.col("_asof_ts") + tolerance
-        )
-        out = out.withColumn("_asof_match", F.when(gap_ok, F.col("_asof_match")))
-    return out.select(
-        *left.columns,
-        F.col("_asof_match")[on].alias(f"{on}{suffix}"),
-        *[F.col("_asof_match")[c].alias(f"{c}{suffix}") for c in payload_cols],
-    )
-
-
-def interval_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    on: str = "ts",
-    start: str = "start",
-    end: str = "end",
-    by: list[str] | str | None = None,
-    bucket_seconds: int = 3600,
-    how: str = "inner",
-    suffix: str = "_right",
-    guard: str = "warn",
-    max_expansion: float = 64.0,
-) -> DataFrame:
-    """Point-in-interval join: every ``points`` row paired with every
-    ``intervals`` row whose ``[start, end]`` contains its ``on``
-    timestamp (inclusive both ends — SQL ``BETWEEN`` semantics, and
-    1:N: a point can match several intervals). ``by`` adds equality
-    keys. ``how``: ``inner`` or ``left`` (unmatched points kept with
-    nulls). Intervals with ``start > end`` match nothing (as BETWEEN).
-
-    Scale shape: the naive form is a theta-join (cross product +
-    filter). Instead each point maps to ONE time bucket and each
-    interval EXPLODES into the buckets it covers, turning the range
-    predicate into an equi-join on (by…, bucket) + residual filter — a
-    plain shuffle join Catalyst/AQE can plan. A (point, interval) match
-    meets in exactly one bucket (the point's), so no dedup pass is
-    needed. Cost: O(points + Σ interval_length/bucket_seconds); pick
-    ``bucket_seconds`` near the median interval length. The pre-flight
-    ``guard`` (one aggregate over ``intervals``, same discipline as the
-    SimHash bucket-entropy guard) computes the exact expansion factor
-    and warns / raises (``strict``) / skips (``off``) when it exceeds
-    ``max_expansion`` — a mis-sized bucket fails in seconds, not hours."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be inner|left: {how!r}")
-    if guard not in ("warn", "strict", "off"):
-        raise ValueError(f"guard must be warn|strict|off: {guard!r}")
-    by = [by] if isinstance(by, str) else list(by or [])
-    clash = [c for c in points.columns + intervals.columns if c.startswith("_iv_")]
-    if clash:
-        raise ValueError(f"_iv_* column names are reserved: {clash}")
-    payload_cols = [c for c in intervals.columns if c not in by]
-    out_clash = [c for c in payload_cols if f"{c}{suffix}" in points.columns]
-    if out_clash:
-        raise ValueError(
-            f"output columns would shadow point columns: "
-            f"{[f'{c}{suffix}' for c in out_clash]} — pass a different suffix"
-        )
-    w_us = int(bucket_seconds * 1_000_000)
-    b_start = _time_bucket(start, w_us)
-    b_end = _time_bucket(end, w_us)
-    valid = intervals.where(F.col(start) <= F.col(end))
-
-    if guard != "off":
-        g = valid.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(b_end - b_start + 1).alias("rows_out"),
-        ).first()
-        if g.n and g.rows_out / g.n > max_expansion:
-            msg = (
-                f"interval_join expansion {g.rows_out / g.n:.1f}× over "
-                f"{g.n} intervals exceeds max_expansion={max_expansion} — "
-                f"bucket_seconds={bucket_seconds} is far below the typical "
-                f"interval length; raise it (or guard='off')"
-            )
-            if guard == "strict":
-                raise ValueError(msg)
-            import warnings
-
-            warnings.warn(msg)
-
-    iv = valid.select(
-        *by,
-        F.struct(*[F.col(c).alias(c) for c in payload_cols]).alias("_iv_payload"),
-        F.explode(F.sequence(b_start, b_end)).alias("_iv_bkt"),
-    )
-    pt = points.withColumn(
-        "_iv_bkt", _time_bucket(on, w_us)
-    )
-    cond = [pt["_iv_bkt"] == iv["_iv_bkt"]]
-    cond += [pt[k] == iv[k] for k in by]
-    cond.append(
-        F.col(on).between(iv["_iv_payload"][start], iv["_iv_payload"][end])
-    )
-    joined = pt.join(iv, _and_all(cond), how)
-    return joined.select(
-        *[pt[c] for c in points.columns],
-        *[iv["_iv_payload"][c].alias(f"{c}{suffix}") for c in payload_cols],
-    )
-
-
-def _and_all(conds: list[Column]) -> Column:
-    out = conds[0]
-    for c in conds[1:]:
-        out = out & c
-    return out
 
 
 def sessionize(
@@ -285,9 +42,7 @@ def sessionize(
     a strictly-larger gap starts a new one. ``session_id`` =
     ``"<by…>#<per-key session ordinal>"`` — deterministic, replayable.
 
-    The batch complement of ``streaming.stream_conversation_stats``
-    (session semantics over an unbounded stream need state; over a table
-    they are two keyed windows): lag → new-session flag → running sum.
+    Two keyed windows: lag → new-session flag → running sum.
     ONE shuffle on the ``by`` keys, linear per-key scan. ``tiebreak``
     columns order equal timestamps deterministically (e.g. ``turn_idx``
     for transcripts); without them, equal-``ts`` rows within a key make
@@ -346,8 +101,8 @@ def asof_join(
     if not by:
         raise ValueError(
             "asof_join requires by-keys: a global as-of is a single ordered "
-            "sequence (one partition, zero parallelism) — use asof_join_global, "
-            "which time-buckets it"
+            "sequence (one partition, zero parallelism); time-bucket the "
+            "input and carry per-bucket maxima instead"
         )
     by = [by] if isinstance(by, str) else list(by)
     if isinstance(tolerance, str):

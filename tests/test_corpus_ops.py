@@ -298,6 +298,12 @@ def test_no_jobs_at_operator_construction(spark):
     fake = lambda df, k: matches.join(  # noqa: E731
         df.select(F.col("id").alias("entity_id")), "entity_id", "left_semi"
     )
+    from bfokg.operators.temporal import asof_join, sessionize
+
+    ev = spark.createDataFrame(
+        [(1, __import__("datetime").datetime(2026, 1, 1), 0.5)],
+        "user_id long, ts timestamp, value double",
+    )
     sc = spark.sparkContext
     sc.setJobGroup("construction-probe", "no jobs expected")
     try:
@@ -305,6 +311,9 @@ def test_no_jobs_at_operator_construction(spark):
         lsh_bucket_candidates(e)
         embedding_near_dups(e, bucketed=True)
         tiered(ents, {"rule_based": fake, "semantic": fake, "zeroshot": fake})
+        asof_join(ev, ev.drop("value").withColumn("v", F.lit(1.0)),
+                  on="ts", by="user_id")
+        sessionize(ev, by="user_id")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("construction-probe") == []

@@ -1,4 +1,5 @@
-"""asof_join vs DuckDB's native ASOF JOIN — exact multiset equality.
+"""asof_join vs DuckDB's native ASOF JOIN — exact multiset equality;
+sessionize vs the same two-window SQL in DuckDB and Spark's session_window.
 
 In-test oracle (not a driver query: the driver's 50-entry artifact is
 kept at exactly the 50 oracle-backed queries), same evidence grade —
@@ -121,183 +122,6 @@ def test_asof_join_tolerance_and_unmatched(spark):
     assert len(got) == len(left)                # left join: every row kept
 
 
-def _duck_asof_global(left, right, direction, tolerance_s=None):
-    con = duckdb.connect()
-    con.register("l", left)
-    con.register("r", right)
-    cmp = "l.ts >= r.ts" if direction == "backward" else "l.ts <= r.ts"
-    out = con.sql(
-        f"""SELECT l.user_id, l.ts, l.turn, r.ts AS ts_right,
-                   r.value AS value_right
-            FROM l ASOF LEFT JOIN r ON {cmp}"""
-    ).df()
-    if tolerance_s is not None:
-        gap = (out["ts"] - out["ts_right"]).abs() > pd.Timedelta(seconds=tolerance_s)
-        out.loc[gap, ["ts_right", "value_right"]] = [pd.NaT, np.nan]
-    return out
-
-
-@pytest.mark.parametrize(
-    "direction,bucket_s",
-    [
-        ("backward", 60),          # mixed in-bucket + carry
-        ("backward", 1),           # most buckets right-less: carry-dominated
-        ("backward", 10**9),       # single bucket: pure within-bucket path
-        ("forward", 60),
-        ("forward", 10**9),
-    ],
-)
-def test_asof_join_global_matches_duckdb(spark, direction, bucket_s):
-    from bfokg.operators.temporal import asof_join_global
-
-    left, right = _frames(seed=5)
-    right = right.drop_duplicates(["ts"])  # global as-of: unique per ts
-    got = asof_join_global(
-        spark.createDataFrame(left),
-        spark.createDataFrame(right[["ts", "value"]]),
-        on="ts",
-        direction=direction,
-        bucket_seconds=bucket_s,
-    ).toPandas()
-    want = _duck_asof_global(left, right, direction)
-    assert _as_set(got) == _as_set(want)
-
-
-@pytest.mark.parametrize(
-    "direction,bucket_s",
-    [("backward", 60), ("backward", 1), ("backward", 10**9),
-     ("forward", 60), ("forward", 1)],
-)
-def test_asof_join_bucketed_keyed_equals_plain(spark, direction, bucket_s):
-    """asof_join_global(by=…) — the hub-key straggler-proof variant —
-    must produce byte-identical output to the plain keyed asof_join at
-    every bucket width (the carry window is per-key over bucket
-    summaries, so nothing about bucketing may change semantics)."""
-    from bfokg.operators.temporal import asof_join_global
-
-    left, right = _frames(seed=19)
-    sl = spark.createDataFrame(left)
-    sr = spark.createDataFrame(right)
-    plain = asof_join(sl, sr, on="ts", by="user_id", direction=direction)
-    bucketed = asof_join_global(
-        sl, sr, on="ts", by="user_id", direction=direction,
-        bucket_seconds=bucket_s,
-    )
-    assert _as_set(plain.toPandas()) == _as_set(bucketed.toPandas())
-
-
-def test_asof_join_bucketed_keyed_tolerance(spark):
-    from bfokg.operators.temporal import asof_join_global
-
-    left, right = _frames(seed=29)
-    sl, sr = spark.createDataFrame(left), spark.createDataFrame(right)
-    plain = asof_join(sl, sr, on="ts", by="user_id",
-                      tolerance="INTERVAL 90 SECONDS")
-    bucketed = asof_join_global(sl, sr, on="ts", by="user_id",
-                                bucket_seconds=120,
-                                tolerance="INTERVAL 90 SECONDS")
-    assert _as_set(plain.toPandas()) == _as_set(bucketed.toPandas())
-
-
-def test_asof_join_global_tolerance(spark):
-    from bfokg.operators.temporal import asof_join_global
-
-    left, right = _frames(seed=13)
-    right = right.drop_duplicates(["ts"])
-    got = asof_join_global(
-        spark.createDataFrame(left),
-        spark.createDataFrame(right[["ts", "value"]]),
-        on="ts",
-        bucket_seconds=120,
-        tolerance="INTERVAL 90 SECONDS",
-    ).toPandas()
-    want = _duck_asof_global(left, right, "backward", tolerance_s=90)
-    assert _as_set(got) == _as_set(want)
-    assert len(got) == len(left)
-
-
-def _interval_frames(seed=17, n_pts=250, n_iv=60, users=4):
-    rng = np.random.default_rng(seed)
-    pts = pd.DataFrame(
-        {
-            "user_id": rng.integers(1, users + 1, n_pts),
-            "ts": [BASE + dt.timedelta(seconds=int(s))
-                   for s in rng.integers(0, 50_000, n_pts)],
-            "turn": np.arange(n_pts),
-        }
-    )
-    starts = rng.integers(0, 50_000, n_iv)
-    lengths = rng.integers(-500, 20_000, n_iv)  # some start > end (invalid)
-    iv = pd.DataFrame(
-        {
-            "user_id": rng.integers(1, users + 1, n_iv),
-            "start": [BASE + dt.timedelta(seconds=int(s)) for s in starts],
-            "end": [BASE + dt.timedelta(seconds=int(s + l))
-                    for s, l in zip(starts, lengths)],
-            "label": [f"iv{i}" for i in range(n_iv)],
-        }
-    )
-    return pts, iv
-
-
-def _duck_interval(pts, iv, how, keyed):
-    con = duckdb.connect()
-    con.register("p", pts)
-    con.register("i", iv)
-    key = "AND p.user_id = i.user_id" if keyed else ""
-    join = "JOIN" if how == "inner" else "LEFT JOIN"
-    return con.sql(
-        f"""SELECT p.user_id, p.ts, p.turn, i.start AS start_right,
-                   i.end AS end_right, i.label AS label_right
-            FROM p {join} i ON p.ts BETWEEN i.start AND i.end {key}"""
-    ).df()
-
-
-@pytest.mark.parametrize(
-    "how,keyed,bucket_s",
-    [
-        ("inner", True, 3600),
-        ("inner", False, 600),
-        ("left", True, 3600),
-        ("inner", True, 10**7),   # single bucket: degenerates to plain join
-    ],
-)
-def test_interval_join_matches_duckdb(spark, how, keyed, bucket_s):
-    from bfokg.operators.temporal import interval_join
-
-    pts, iv = _interval_frames()
-    right = iv if keyed else iv.drop(columns=["user_id"])
-    got = interval_join(
-        spark.createDataFrame(pts),
-        spark.createDataFrame(right),
-        on="ts", by="user_id" if keyed else None,
-        bucket_seconds=bucket_s, how=how, guard="off",
-    ).toPandas()
-    want = _duck_interval(pts, iv, how, keyed)
-
-    def norm(df):
-        return sorted(
-            tuple(None if pd.isna(v) else v for v in row)
-            for row in df[["user_id", "ts", "turn", "start_right", "end_right",
-                           "label_right"]].itertuples(index=False)
-        )
-
-    assert norm(got) == norm(want)
-    if how == "inner":
-        assert len(got) > len(pts) * 0.5  # 1:N join actually multiplies
-
-
-def test_interval_join_expansion_guard(spark):
-    from bfokg.operators.temporal import interval_join
-
-    pts, iv = _interval_frames()
-    sp, si = spark.createDataFrame(pts), spark.createDataFrame(iv)
-    with pytest.raises(ValueError, match="expansion"):
-        interval_join(sp, si, by="user_id", bucket_seconds=1, guard="strict")
-    with pytest.warns(UserWarning, match="expansion"):
-        interval_join(sp, si, by="user_id", bucket_seconds=1, guard="warn")
-
-
 def test_sessionize_matches_duckdb(spark):
     """sessionize vs the identical two-window SQL in DuckDB, plus hand
     pins: a gap exactly equal to the threshold does NOT split."""
@@ -374,37 +198,6 @@ def test_sessionize_parity_with_spark_session_window(spark):
     a = sorted((r.user_id, r.start, r.n) for r in ours.collect())
     b = sorted((r.user_id, r.w.start, r.n) for r in theirs.collect())
     assert a == b and len(a) > 10
-
-
-def test_bucketed_ops_accept_timestamp_ntz(spark):
-    """Parquet timestamps come back TIMESTAMP_NTZ, which Spark 4's
-    unix_micros rejects outright — the bucketed operators must accept
-    both flavors and produce identical matches (caught by the verify
-    drive over the events table, not by pandas-built test frames, which
-    are always TIMESTAMP)."""
-    from pyspark.sql import functions as F
-
-    from bfokg.operators.temporal import asof_join_global, interval_join
-
-    left, right = _frames(seed=3)
-    right = right.drop_duplicates(["ts"])
-    sl, sr = spark.createDataFrame(left), spark.createDataFrame(right[["ts", "value"]])
-    ntz = lambda df: df.select(  # noqa: E731
-        *[F.col(c).cast("timestamp_ntz").alias(c) if c == "ts" else F.col(c)
-          for c in df.columns]
-    )
-    got_ts = asof_join_global(sl, sr, on="ts", bucket_seconds=600).toPandas()
-    got_ntz = asof_join_global(ntz(sl), ntz(sr), on="ts", bucket_seconds=600).toPandas()
-    assert _as_set(got_ts) == _as_set(got_ntz)
-
-    iv = sr.select(F.col("ts").alias("start"),
-                   (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("end"),
-                   "value")
-    iv_ntz = iv.select(F.col("start").cast("timestamp_ntz").alias("start"),
-                       F.col("end").cast("timestamp_ntz").alias("end"), "value")
-    a = interval_join(sl, iv, on="ts", guard="off").toPandas()
-    b = interval_join(ntz(sl), iv_ntz, on="ts", guard="off").toPandas()
-    assert len(a) == len(b) and sorted(a.turn) == sorted(b.turn)
 
 
 def test_temporal_ops_repartition_invariant(spark):
