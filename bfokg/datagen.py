@@ -234,43 +234,6 @@ def amplify_transcripts(spark, sf: float, factor: int, overwrite: bool = False) 
     return out_dir
 
 
-def skewed_mentions(spark, n_rows: int = 1_000_000, n_aliases: int = 100_000,
-                    hub_frac: float = 0.5):
-    """Deterministic hub-skewed mentions table + matching alias dim for the
-    skew-join evidence (VERDICT r3 item 7): one hub surface form carries
-    ``hub_frac`` of all mention rows (the 'einstein' of a real corpus —
-    head aliases are Zipfian), the rest spread uniformly over
-    ``n_aliases`` synthetic aliases. Returns (mentions, alias_dim):
-    mentions(conv_id, turn_idx, mention_pos, alias), alias_dim(alias, qid,
-    label, prior). Pure Spark expressions, no driver-side data."""
-    from pyspark.sql import functions as F
-
-    hub_every = max(int(round(1.0 / hub_frac)), 1)
-    mentions = spark.range(n_rows).select(
-        F.concat(F.lit("c"), (F.col("id") / 50).cast("long")).alias("conv_id"),
-        F.pmod(F.col("id"), F.lit(50)).cast("int").alias("turn_idx"),
-        F.lit(0).alias("mention_pos"),
-        F.when(F.pmod("id", F.lit(hub_every)) == 0, F.lit("hub_alias"))
-        .otherwise(
-            F.concat(F.lit("alias_"),
-                     F.pmod(F.xxhash64("id"), F.lit(n_aliases)))
-        )
-        .alias("alias"),
-    )
-    alias_dim = spark.range(n_aliases).select(
-        F.concat(F.lit("alias_"), F.col("id")).alias("alias"),
-        F.concat(F.lit("Q"), F.col("id")).alias("qid"),
-        F.concat(F.lit("L"), F.col("id")).alias("label"),
-        F.lit(1.0).alias("prior"),
-    ).unionByName(
-        spark.createDataFrame(
-            [("hub_alias", "Q_HUB", "Hub", 1.0)],
-            "alias string, qid string, label string, prior double",
-        )
-    )
-    return mentions, alias_dim
-
-
 def sf_from_dir(sf_dir: str) -> float:
     """'/root/testdata/sf0.01' → 0.01 (defaults to 0.01 when unparseable)."""
     base = os.path.basename(sf_dir.rstrip("/"))

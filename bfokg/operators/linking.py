@@ -4,15 +4,9 @@
   size: a JVM ``regexp_extract_all`` alternation (longest surface form
   first) for small dictionaries, an Arrow-batched Aho-Corasick kernel
   beyond ``AUTO_SQL_MAX_SURFACES``. Both emit identical rows.
-- Linking is a BROADCAST hash join of exploded mentions against the alias
-  dictionary (tiny dim); candidate scoring picks the max-prior QID with a
-  deterministic (prior DESC, qid ASC) tiebreak.
-- For skewed surface forms at scale (one alias appearing in a large share
-  of turns), ``link_mentions(..., salt_buckets=N)`` switches to a salted
-  repartition join: the mention side gets a random-but-deterministic salt
-  (hash of conv_id/turn_idx), the dim side is exploded ×N, so one hot key
-  spreads over N reducers (AQE skew-join also covers this when thresholds
-  trip; the explicit salt is for the pathological head alias).
+- Linking resolves each surface form once (``best_alias``: max prior,
+  then smallest qid) and BROADCAST hash joins the mentions against that
+  resolution.
 
 Reference counterpart: none — the reference fetches one entity at a time
 from the Wikidata API (SURVEY.md §2.1 S1); the north_rule replaces that
@@ -168,102 +162,106 @@ class AhoCorasick:
 # the JVM alternation's scan cost grows ~linearly with dictionary size
 # (≈10-15 ms/surface per 600k turns; 16.8 s at 1k surfaces, 103 s at
 # 10k, DNF at 100k) while the Aho-Corasick kernel stays flat at ~2 s —
-# the curves cross at ≈100 surfaces, and "auto" switches impl there. A
-# real Wikidata alias dict (millions of surfaces, SURVEY.md §2.3) always
-# lands on the automaton side.
+# the curves cross at ≈100 surfaces, and extract_mentions switches
+# there. A real Wikidata alias dict (millions of surfaces, SURVEY.md
+# §2.3) always lands on the automaton side.
 AUTO_SQL_MAX_SURFACES = 100
 
 
-def extract_mentions(
-    transcripts: DataFrame,
-    surfaces: list[str] | None = None,
-    impl: str = "auto",
-) -> DataFrame:
-    """Text → exploded (mention, position) rows: greedy leftmost-longest,
-    non-overlapping, word-boundary matches of the lowercased surfaces.
-
-    ``impl="auto"`` (default) picks by dictionary size: ``"sql"`` up to
-    ``AUTO_SQL_MAX_SURFACES`` surfaces, ``"aho"`` beyond.
-    ``impl="sql"``: JVM ``regexp_extract_all`` + ``posexplode``, no Python.
-    ``impl="aho"``: Arrow-batched Aho-Corasick kernel, O(|text|) per row
-    independent of dictionary size. Any other value raises ValueError."""
-    if impl not in ("auto", "sql", "aho"):
-        raise ValueError(f"impl must be auto|sql|aho, got {impl!r}")
-    if impl == "auto":
-        n_surfaces = len(set(surfaces)) if surfaces is not None else len(
-            {r[0] for r in alias_rows()}
-        )
-        impl = "sql" if n_surfaces <= AUTO_SQL_MAX_SURFACES else "aho"
-    if impl == "aho":
-        ac = AhoCorasick([r[0] for r in alias_rows()] if surfaces is None
-                         else list(surfaces))
-
-        def scan_ac(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                hits = [ac.search((t or "").lower()) for t in pdf["text"]]
-                counts = [len(h) for h in hits]
-                idx = pdf.index.repeat(counts)
-                out = pdf.loc[idx, ["conv_id", "turn_idx", "role", "ts"]].reset_index(drop=True)
-                out["mention"] = [m for row in hits for _s, m in row]
-                out["mention_pos"] = [p for c in counts for p in range(c)]
-                yield out
-
-        return transcripts.select(
-            "conv_id", "turn_idx", "role", "ts", "text"
-        ).mapInPandas(scan_ac, MENTIONS_SCHEMA)
-
-    pattern = surface_pattern(surfaces)
+def _mentions_sql(transcripts: DataFrame, surfaces: list[str]) -> DataFrame:
+    """JVM ``regexp_extract_all`` + ``posexplode``, no Python."""
     return transcripts.select(
         "conv_id",
         "turn_idx",
         "role",
         "ts",
         F.posexplode(
-            F.regexp_extract_all(F.lower("text"), F.lit(pattern), F.lit(1))
+            F.regexp_extract_all(
+                F.lower("text"), F.lit(surface_pattern(surfaces)), F.lit(1)
+            )
         ).alias("mention_pos", "mention"),
     ).select("conv_id", "turn_idx", "role", "ts", "mention", "mention_pos")
 
 
-def link_mentions(
-    mentions: DataFrame,
-    alias_dict: DataFrame,
-    salt_buckets: int | None = None,
+def _mentions_aho(transcripts: DataFrame, surfaces: list[str]) -> DataFrame:
+    """Arrow-batched Aho-Corasick kernel, O(|text|) per row independent of
+    dictionary size."""
+    ac = AhoCorasick(surfaces)
+
+    def scan_ac(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            hits = [ac.search((t or "").lower()) for t in pdf["text"]]
+            counts = [len(h) for h in hits]
+            idx = pdf.index.repeat(counts)
+            out = pdf.loc[idx, ["conv_id", "turn_idx", "role", "ts"]].reset_index(drop=True)
+            out["mention"] = [m for row in hits for _s, m in row]
+            out["mention_pos"] = [p for c in counts for p in range(c)]
+            yield out
+
+    return transcripts.select(
+        "conv_id", "turn_idx", "role", "ts", "text"
+    ).mapInPandas(scan_ac, MENTIONS_SCHEMA)
+
+
+def extract_mentions(
+    transcripts: DataFrame, surfaces: list[str] | None = None
 ) -> DataFrame:
-    """Mentions × alias dict → best QID per mention occurrence.
+    """Text → exploded (mention, position) rows: greedy leftmost-longest,
+    non-overlapping, word-boundary matches of the lowercased surfaces
+    (default: the fixture alias dictionary).
 
-    Default: broadcast hash join (dim is tiny). ``salt_buckets=N`` forces
-    the salted repartition join used when the dim outgrows broadcast and a
-    head alias skews a shuffle join.
+    Up to ``AUTO_SQL_MAX_SURFACES`` distinct surfaces the JVM alternation
+    scans; beyond, the Aho-Corasick kernel does."""
+    if surfaces is None:
+        surfaces = [r[0] for r in alias_rows()]
+    if len(set(surfaces)) <= AUTO_SQL_MAX_SURFACES:
+        return _mentions_sql(transcripts, surfaces)
+    return _mentions_aho(transcripts, surfaces)
 
-    Strategy matrix MEASURED on a 50%-hub-alias distribution (8M rows,
-    local[32], BENCH/SKEW.md): broadcast 1.75 s, salted ×32 1.52 s, AQE
-    skew-join 1.49 s WHEN its split fires but 2.67 s at the stock
-    threshold (the hub key's rows compress so well the compressed-size
-    skew detection never triggers), plain shuffle 2.96 s. Winning
-    default: broadcast while the dim fits; ``salt_buckets≈cores`` for
-    skew you KNOW about (the salt needs no size estimates, which
-    compression can defeat); AQE skew-join as the safety net for skew you
-    did not anticipate.
-    """
-    m = mentions.withColumnRenamed("mention", "alias")
-    if salt_buckets:
-        m = m.withColumn(
-            "salt", F.pmod(F.xxhash64("conv_id", "turn_idx", "mention_pos"), F.lit(salt_buckets))
+
+def best_alias(alias_dict: DataFrame) -> DataFrame:
+    """One row per non-NULL ``alias`` of ``alias_dict``, with every dict
+    column: the row first by ``prior DESC NULLS LAST, qid ASC NULLS FIRST``.
+
+    A driver-resident dict (``routing.local_rows``) is folded in Python and
+    returned as a LocalRelation; any other dict is ranked by a
+    ``row_number`` window."""
+    from .. import routing
+
+    dict_rows = routing.local_rows(alias_dict)
+    if dict_rows is None:
+        w = Window.partitionBy("alias").orderBy(F.desc("prior"), F.asc("qid"))
+        return (
+            alias_dict.where(F.col("alias").isNotNull())
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .drop("rn")
         )
-        dim = alias_dict.withColumn(
-            "salt", F.explode(F.array([F.lit(i) for i in range(salt_buckets)]))
-        )
-        joined = m.repartition("alias", "salt").join(dim, ["alias", "salt"]).drop("salt")
-    else:
-        joined = m.join(F.broadcast(alias_dict), "alias")
-    best = Window.partitionBy("conv_id", "turn_idx", "alias", "mention_pos").orderBy(
-        F.desc("prior"), F.asc("qid")
+    from ..util import local_df
+
+    best: dict = {}
+    for r in dict_rows:
+        if r.alias is None:
+            continue
+        key = (r.prior is None, -(r.prior or 0.0), r.qid is not None, r.qid or "")
+        cur = best.get(r.alias)
+        if cur is None or key < cur[0]:
+            best[r.alias] = (key, r)
+    return local_df(
+        alias_dict.sparkSession,
+        [best[a][1] for a in sorted(best)],
+        alias_dict.schema,
     )
+
+
+def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
+    """Mentions × ``best_alias(alias_dict)`` → one row per mention row,
+    carrying its surface form's QID and the dict's other columns, by a
+    broadcast hash join on the alias."""
     return (
-        joined.withColumn("cand_rank", F.row_number().over(best))
-        .where(F.col("cand_rank") == 1)
-        .drop("cand_rank")
+        mentions.withColumnRenamed("mention", "alias")
+        .join(F.broadcast(best_alias(alias_dict)), "alias")
         .withColumnRenamed("alias", "mention")
     )

@@ -19,7 +19,7 @@ import re
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..datagen import RELATION_PREDICATES
-from .linking import surface_alternation
+from .linking import best_alias, surface_alternation
 
 # phrase → predicate id, e.g. "is related to" → related_to
 _PHRASE_TO_PRED = {
@@ -40,9 +40,7 @@ def triple_pattern(surfaces: list[str] | None = None) -> str:
 
 
 def extract_triples(
-    transcripts: DataFrame,
-    surfaces: list[str] | None = None,
-    prefilter: bool = True,
+    transcripts: DataFrame, surfaces: list[str] | None = None
 ) -> DataFrame:
     """Turn text → raw mention-level triples (conv_id, turn_idx, ts,
     subj_mention, pred, obj_mention), pure JVM:
@@ -50,14 +48,13 @@ def extract_triples(
     are re-extracted from each short match, and the predicate is mapped by
     a literal map. No Python process in the path.
 
-    ``prefilter`` pushes a cheap ``rlike`` on the closed predicate phrases
-    ahead of the scan: a row with no relation phrase cannot produce a
-    triple, so the expensive scan only sees candidate rows.
+    A cheap ``rlike`` on the closed predicate phrases runs ahead of the
+    scan: a row with no relation phrase cannot produce a triple, so the
+    expensive scan only sees candidate rows.
     """
     pattern = triple_pattern(surfaces)
-    if prefilter:
-        phrase_rx = "(?i)" + "|".join(re.escape(p) for p in _PHRASE_TO_PRED)
-        transcripts = transcripts.where(F.col("text").rlike(phrase_rx))
+    phrase_rx = "(?i)" + "|".join(re.escape(p) for p in _PHRASE_TO_PRED)
+    transcripts = transcripts.where(F.col("text").rlike(phrase_rx))
     lt = F.lower(F.col("text"))
     # ONE regex pass over the (long) turn text; the capture groups are
     # re-extracted from each SHORT matched substring (anchored — a full
@@ -88,45 +85,9 @@ def extract_triples(
 
 
 def link_triples(raw_triples: DataFrame, alias_dict: DataFrame) -> DataFrame:
-    """Resolve subj/obj mentions to QIDs via two broadcast joins against the
-    max-prior-per-alias resolution (deterministic prior DESC, qid ASC).
-
-    When the alias dict is driver-resident (a LocalRelation within the
-    session budget, ``routing.local_rows`` — the vendored
-    ``alias_dict_df`` always is), the resolution is computed in Python
-    and returned as a LocalRelation: the row_number window over the dim
-    otherwise forces a
-    Sort→Exchange→Sort→Window subtree under EACH of the two broadcast
-    builds — two Spark jobs per query (and per stream_edges micro-batch)
-    spent ranking the same bounded dim. Identical rule, identical rows;
-    distributed alias dicts keep the window path unchanged."""
-    from .. import routing
-
-    dict_rows = routing.local_rows(alias_dict.select("alias", "qid", "prior"))
-    if dict_rows is not None:
-        from ..util import local_df
-
-        best_by_alias: dict = {}
-        for r in dict_rows:
-            if r.alias is None:
-                continue  # a NULL alias never matches the join
-            # the window's order: prior DESC NULLS LAST, qid ASC NULLS FIRST
-            key = (r.prior is None, -(r.prior or 0.0), r.qid is not None, r.qid or "")
-            cur = best_by_alias.get(r.alias)
-            if cur is None or key < cur[0]:
-                best_by_alias[r.alias] = (key, r.qid)
-        resolved = local_df(
-            raw_triples.sparkSession,
-            sorted((a, qid) for a, (_key, qid) in best_by_alias.items()),
-            "alias STRING, qid STRING",
-        )
-    else:
-        best = Window.partitionBy("alias").orderBy(F.desc("prior"), F.asc("qid"))
-        resolved = (
-            alias_dict.withColumn("rn", F.row_number().over(best))
-            .where(F.col("rn") == 1)
-            .select("alias", "qid")
-        )
+    """Resolve subj/obj mentions to QIDs: two broadcast joins against
+    ``best_alias(alias_dict)``."""
+    resolved = best_alias(alias_dict)
     subj = resolved.select(
         F.col("alias").alias("subj_mention"), F.col("qid").alias("subj_qid")
     )

@@ -1,8 +1,8 @@
 """The one size model behind every driver-vs-dataflow decision.
 
 Several operators keep a hand-written Python twin of their dataflow for
-bounded inputs (rule_based, link_triples, canonicalize, the closure BFS,
-union-find). This module is the only place that reads the session budget
+bounded inputs (rule_based, linking.best_alias, canonicalize, the closure
+BFS, union-find). This module is the only place that reads the session budget
 or the optimizer's size estimate, so every twin is chosen by the same
 rule:
 

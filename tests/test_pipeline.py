@@ -58,19 +58,14 @@ def test_extraction_impls_agree(spark):
     non-overlapping)."""
     from collections import Counter
 
+    from bfokg.operators.linking import _mentions_aho, _mentions_sql, alias_rows
+
     df = _transcripts(spark)
+    surfaces = [r[0] for r in alias_rows()]
     m_cols = ["conv_id", "turn_idx", "mention", "mention_pos"]
-    m_sql = Counter(map(tuple, extract_mentions(df, impl="sql").select(m_cols).collect()))
-    m_aho = Counter(map(tuple, extract_mentions(df, impl="aho").select(m_cols).collect()))
+    m_sql = Counter(map(tuple, _mentions_sql(df, surfaces).select(m_cols).collect()))
+    m_aho = Counter(map(tuple, _mentions_aho(df, surfaces).select(m_cols).collect()))
     assert m_sql and m_sql == m_aho
-
-
-def test_extract_mentions_rejects_unknown_impl(spark):
-    """A mistyped impl must raise, not silently run some other route."""
-    import pytest
-
-    with pytest.raises(ValueError, match="auto|sql|aho"):
-        extract_mentions(_transcripts(spark), impl="pandas")
 
 
 def test_aho_corasick_matches_regex_semantics():
@@ -130,34 +125,26 @@ def test_aho_corasick_property_matches_regex():
     check()
 
 
-def test_salted_join_agrees_with_broadcast(spark):
-    df = _transcripts(spark)
-    mentions = extract_mentions(df).persist()
-    a = link_mentions(mentions, alias_dict_df(spark))
-    b = link_mentions(mentions, alias_dict_df(spark), salt_buckets=4)
-    key = ["conv_id", "turn_idx", "mention", "mention_pos", "qid"]
-    assert a.select(key).exceptAll(b.select(key)).count() == 0
-    assert b.select(key).exceptAll(a.select(key)).count() == 0
+def test_link_mentions_keeps_every_mention_row(spark):
+    """link_mentions maps mention rows 1:1: two rows that share
+    (conv_id, turn_idx, mention, mention_pos) but differ in role both come
+    out, with the columns in their documented order. The fixture dict is
+    resolved on the driver, so the optimized plan ranks nothing."""
+    from bfokg.operators.linking import MENTIONS_SCHEMA
 
-
-def test_salted_join_on_skewed_hub_alias(spark):
-    """Salted == broadcast on a genuinely SKEWED distribution (VERDICT r3
-    item 7): one hub alias carries ~50% of mention rows. The timing
-    matrix lives in tools/skew_bench.py → BENCH/SKEW.md; this pins
-    correctness of the salt on the shape that motivates it."""
-    from bfokg.datagen import skewed_mentions
-
-    mentions, dim = skewed_mentions(spark, n_rows=20_000, n_aliases=500)
-    mentions = mentions.withColumnRenamed("alias", "mention").persist()
-    hub = mentions.where(F.col("mention") == "hub_alias").count()
-    assert abs(hub / 20_000 - 0.5) < 0.01  # the hub really is ~50%
-    a = link_mentions(mentions, dim)
-    b = link_mentions(mentions, dim, salt_buckets=8)
-    key = ["conv_id", "turn_idx", "mention", "mention_pos", "qid"]
-    assert a.select(key).exceptAll(b.select(key)).count() == 0
-    assert b.select(key).exceptAll(a.select(key)).count() == 0
-    assert a.where(F.col("qid") == "Q_HUB").count() == hub
-    mentions.unpersist()
+    mentions = spark.createDataFrame(
+        [("c", 0, role, None, "catalyst", 0) for role in ("user", "assistant")],
+        MENTIONS_SCHEMA,
+    )
+    linked = link_mentions(mentions, alias_dict_df(spark))
+    assert linked.columns == [
+        "mention", "conv_id", "turn_idx", "role", "ts", "mention_pos",
+        "qid", "label", "prior",
+    ]
+    assert sorted((r.role, r.qid) for r in linked.collect()) == [
+        ("assistant", "Q_SYNTH_61"), ("user", "Q_SYNTH_61"),
+    ]
+    assert "Window" not in linked._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_triples_extract_link_dedup(spark):
@@ -405,17 +392,19 @@ def test_cascade_and_node_stage_job_counts(spark, tmp_path):
 
 
 def test_link_triples_fold_matches_window_on_null_keys(spark):
-    """link_triples' driver fold equals the window path on an alias dict
-    with NULL aliases, priors and qids: a NULL alias never matches, a
-    NULL prior ranks last (DESC NULLS LAST), a NULL qid first among equal
-    priors (ASC NULLS FIRST), and an alias whose priors are all NULL
-    still resolves. Generated dicts add duplicates, long aliases and
-    empty frames."""
+    """best_alias' driver fold equals its window path, through both
+    linkers, on an alias dict with NULL aliases, priors and qids: a NULL
+    alias never matches, a NULL prior ranks last (DESC NULLS LAST), a NULL
+    qid first among equal priors (ASC NULLS FIRST), and an alias whose
+    priors are all NULL still resolves. link_mentions rows keep the
+    winner's label and prior. Generated dicts add duplicates, long aliases
+    and empty frames."""
     from collections import Counter
 
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
+    from bfokg.operators.linking import MENTIONS_SCHEMA
     from bfokg.routing import _is_local
     from bfokg.util import local_df
 
@@ -447,6 +436,19 @@ def test_link_triples_fold_matches_window_on_null_keys(spark):
     assert ("Q1", "Q3") in resolved and ("Q9", None) in resolved
     assert len(got) == 16  # 4 resolvable aliases on each side
 
+    ments = spark.createDataFrame(
+        [("c", 0, "user", None, m, i) for i, m in enumerate(mentions)],
+        MENTIONS_SCHEMA,
+    )
+    folded = link_mentions(ments, local)
+    assert "LocalTableScan" in folded._jdf.queryExecution().executedPlan().toString()
+    got = as_set(folded)
+    assert got == as_set(link_mentions(ments, distributed))
+    assert {(r.mention, r.qid, r.label, r.prior) for r in folded.collect()} == {
+        ("alpha", "Q1", "a", 0.5), ("beta", "Q3", "b", None),
+        ("gamma", None, "g", 0.7), ("delta", "Q9", "d", 0.1),
+    }
+
     entry = st.tuples(
         st.one_of(st.none(), st.sampled_from(["alpha", "beta", long_alias])),
         st.one_of(st.none(), st.sampled_from(["Q1", "Q2", "Q3"])),
@@ -460,8 +462,12 @@ def test_link_triples_fold_matches_window_on_null_keys(spark):
         as_bag = lambda df: Counter(map(tuple, df.collect()))  # noqa: E731
         local = local_df(spark, rows, schema)
         assert not rows or _is_local(local)  # the fold route is taken
+        distributed = spark.createDataFrame(rows, schema)
         assert as_bag(link_triples(raw, local)) == as_bag(
-            link_triples(raw, spark.createDataFrame(rows, schema))
+            link_triples(raw, distributed)
+        )
+        assert as_bag(link_mentions(ments, local)) == as_bag(
+            link_mentions(ments, distributed)
         )
 
     fold_matches_window()

@@ -1,9 +1,9 @@
 """Aho-vs-regex crossover for mention detection (VERDICT r4 item 4).
 
-``extract_mentions`` has two production implementations: ``impl="sql"``
-(JVM ``regexp_extract_all`` over one compiled alternation — codegen, no
-Python) and ``impl="aho"`` (Arrow-batched Aho-Corasick — O(|text|) per
-row regardless of dictionary size). The reference's real alias dict is
+``extract_mentions`` has two routes: ``_mentions_sql`` (JVM
+``regexp_extract_all`` over one compiled alternation — codegen, no
+Python) and ``_mentions_aho`` (Arrow-batched Aho-Corasick — O(|text|)
+per row regardless of dictionary size). The reference's real alias dict is
 millions of surfaces (SURVEY.md §2.3); this bench measures WHERE the
 alternation stops being the right default.
 
@@ -17,7 +17,7 @@ JVM, warm-up run, best of two timed runs, per-leg timeout so a
 pathological alternation dies without killing the bench (recorded DNF).
 
 Appends the crossover table to BENCH/MENTIONS.md; the measured crossover
-feeds ``extract_mentions(impl="auto")``'s size threshold
+feeds ``extract_mentions``' size threshold
 (``AUTO_SQL_MAX_SURFACES`` in bfokg/operators/linking.py).
 
     env PYTHONPATH=/root/repo python tools/mention_crossover_bench.py
@@ -40,10 +40,10 @@ JOB = r"""
 import json, sys, time
 sys.path.insert(0, {repo!r})
 from bfokg.session import get_spark
-from bfokg.operators.linking import alias_rows, extract_mentions
+from bfokg.operators import linking
 
 size, impl = {size}, {impl!r}
-real = sorted({{r[0] for r in alias_rows()}})
+real = sorted({{r[0] for r in linking.alias_rows()}})
 pad = [f"qq{{i}}xz" for i in range(max(0, size - len(real)))]
 surfaces = (real + pad)[:size]
 
@@ -55,7 +55,7 @@ turns = spark.read.parquet({data!r}).select(
 n_turns = turns.count()
 
 t0 = time.time()
-df = extract_mentions(turns, surfaces=surfaces, impl=impl)
+df = getattr(linking, f"_mentions_{{impl}}")(turns, surfaces)
 build_sec = time.time() - t0  # driver-side automaton/pattern build
 
 times, n = [], 0

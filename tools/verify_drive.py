@@ -89,9 +89,10 @@ print("round2 OK: preset classifier classify() works")
 from bfokg.operators.hierarchy import classify_hierarchical
 h = classify_hierarchical(with_entity_text(entities_df(spark)).limit(5)).collect()
 assert len(h) == 5 and all(r.rank == 1 for r in h)
-from bfokg.operators.linking import extract_mentions
-n_aho = extract_mentions(t, impl="aho").count()
-n_sql = extract_mentions(t, impl="sql").count()
+from bfokg.operators.linking import _mentions_aho, _mentions_sql, alias_rows
+surfaces = [r[0] for r in alias_rows()]
+n_aho = _mentions_aho(t, surfaces).count()
+n_sql = _mentions_sql(t, surfaces).count()
 assert n_aho == n_sql and n_aho > 0, (n_aho, n_sql)
 print(f"round2b OK: hierarchy walk {len(h)} rows, aho mentions == sql ({n_aho})")
 
