@@ -1,11 +1,9 @@
 """End-to-end corpus-curation DAG — the training-data twin of
 ``plans.pipeline.run_pipeline``: raw documents in, training-ready corpus
-out, every stage a committed warehouse snapshot with lineage rows and
-``resume=True`` skipping committed stages.
-
+out. Every stage is one ``LineageLog.stage`` call: a committed warehouse
+snapshot plus lineage rows, skipped by ``resume=True`` once committed.
 No reference counterpart (the reference classifies a fixed 29-example
-corpus); this is the job a 100 TB curation run needs around the corpus
-operators the package already ships:
+corpus).
 
   1. ``stats``     — textstats projection (tokens, lang-ID, quality,
                      duplicate-line fraction, fingerprint), partitioned
@@ -16,24 +14,13 @@ operators the package already ships:
   4. ``corpus``    — keepers ∧ quality gate, deterministic
                      train/val/test ``hash_split`` + per-language
                      ``stratified_sample``, partitioned by ``split``
-
-Scale shape: stats and the split/sample tail are pure projections (no
-shuffle); pairs is the banded-LSH path (linear for bounded buckets,
-signature table on scratch parquet); keep_list is the iterative
-component loop with durable parquet rounds. No all-pairs operator
-anywhere. Each stage re-reads its own committed snapshot, so downstream
-stages never re-execute upstream lineage and a resumed run touches only
-uncommitted stages. Lineage row counts ride on the writes' parquet
-footers (plus one ``Observation`` on the first stage) — no extra Spark
-jobs for metrics.
 """
 
 from __future__ import annotations
 
 import os
-import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.textstats import (
     dup_line_fraction_col,
@@ -44,14 +31,7 @@ from ..functions.textstats import (
 )
 from ..operators.dedup import dedup_keep_list, minhash_lsh_pairs
 from ..operators.sampling import hash_split, stratified_sample
-from ..sources.warehouse import (
-    LineageLog,
-    is_committed,
-    read_manifest,
-    read_table,
-    write_table,
-)
-from ..util import release_intermediates
+from ..sources.warehouse import LineageLog
 
 
 def run_curation(
@@ -74,8 +54,6 @@ def run_curation(
     Returns ``{'corpus': DataFrame, 'corpus_manifest': path,
     'lineage': manifest|None, 'skipped': [stages]}``."""
     log = LineageLog(spark)
-    skipped: list[str] = []
-
     # the quality gate shared by stages 2-4: composite score plus the
     # Gopher-style duplicate-line repetition cap when requested
     gate = F.col("quality") >= min_quality
@@ -87,67 +65,32 @@ def run_curation(
     keep_dir = os.path.join(out_dir, "keep_list")
     corpus_dir = os.path.join(out_dir, "corpus")
 
-    # -- stage 1: stats (pure projection; the only observed input count) ----
-    if resume and is_committed(stats_dir):
-        skipped.append("stats")
-        stats = read_table(spark, stats_dir)
-    else:
-        t0 = time.time()
-        obs_in = Observation("curation_docs_in")
-        observed = docs.observe(obs_in, F.count(F.lit(1)).alias("n"))
-        stats = observed.select(
+    stats = log.stage(
+        "stats", stats_dir,
+        lambda observed: observed.select(
             "doc_id",
             token_count_col("text").alias("n_tokens"),
             lang_id_col("text").alias("lang_pred"),
             quality_score_col("text").alias("quality"),
             dup_line_fraction_col("text").alias("dup_line_frac"),
             fingerprint_col("text").alias("fingerprint"),
-        )
-        sm = write_table(stats, stats_dir, partition_by=["lang_pred"])
-        stats = read_table(spark, stats_dir)
-        log.record("stats", int(obs_in.get["n"]), sm["rows"], t0)
-        log.record_partitions("stats", sm, t0)
+        ),
+        resume=resume, partition_by=["lang_pred"], source=docs,
+    )
+    eligible = docs.join(stats.where(gate).select("doc_id"), "doc_id")
+    pairs = log.stage(
+        "pairs", pairs_dir,
+        lambda: minhash_lsh_pairs(eligible, threshold=dup_threshold),
+        resume=resume, parents=[stats_dir], extra={"threshold": dup_threshold},
+    )
+    keep = log.stage("keep_list", keep_dir,
+                     lambda: dedup_keep_list(eligible, pairs),
+                     resume=resume, parents=[pairs_dir])
 
-    # -- stage 2: near-dup pairs over quality-passing docs ------------------
-    if resume and is_committed(pairs_dir):
-        skipped.append("pairs")
-    else:
-        t0 = time.time()
-        eligible = docs.join(
-            stats.where(gate).select("doc_id"),
-            "doc_id",
-        )
-        pairs = minhash_lsh_pairs(eligible, threshold=dup_threshold)
-        pm = write_table(pairs, pairs_dir, parents=[stats_dir])
-        release_intermediates(pairs)  # signature scratch consumed by the write
-        log.record("pairs", read_manifest(stats_dir)["rows"], pm["rows"], t0,
-                   extra={"threshold": dup_threshold})
-    pairs_t = read_table(spark, pairs_dir)
-
-    # -- stage 3: pairs → components → keep list ----------------------------
-    if resume and is_committed(keep_dir):
-        skipped.append("keep_list")
-    else:
-        t0 = time.time()
-        eligible = docs.join(
-            stats.where(gate).select("doc_id"),
-            "doc_id",
-        )
-        keep = dedup_keep_list(eligible, pairs_t)
-        km = write_table(keep, keep_dir, parents=[pairs_dir])
-        release_intermediates(keep)  # component-round scratch
-        log.record("keep_list", read_manifest(pairs_dir)["rows"], km["rows"],
-                   t0)
-    keep_t = read_table(spark, keep_dir)
-
-    # -- stage 4: final corpus — dedup + quality gate + split + sample ------
-    if resume and is_committed(corpus_dir):
-        skipped.append("corpus")
-    else:
-        t0 = time.time()
+    def final_corpus():
         kept = (
             docs.join(stats, "doc_id")
-            .join(keep_t.where(F.col("is_keeper")).select("doc_id"), "doc_id")
+            .join(keep.where(F.col("is_keeper")).select("doc_id"), "doc_id")
             .where(gate)
         )
         if redact_pii:
@@ -155,24 +98,23 @@ def run_curation(
 
             kept = kept.withColumn("text", redact_pii_col("text"))
         labeled = hash_split(kept, split_weights, seed=seed)
-        sampled = stratified_sample(
+        return stratified_sample(
             labeled, lang_fractions or {}, "lang_pred",
             default_fraction=default_fraction, seed=seed,
         ).select("doc_id", "text", "n_tokens", "lang_pred", "quality",
                  "fingerprint", "split")
-        cm = write_table(sampled, corpus_dir, partition_by=["split"],
-                         parents=[stats_dir, keep_dir])
-        log.record("corpus", read_manifest(keep_dir)["rows"], cm["rows"], t0,
-                   extra={"min_quality": min_quality,
-                          "max_dup_line_frac": max_dup_line_frac,
-                          "default_fraction": default_fraction,
-                          "redact_pii": redact_pii})
-        log.record_partitions("corpus", cm, t0)
 
-    lineage_manifest = log.write(os.path.join(out_dir, "lineage"))
+    corpus = log.stage(
+        "corpus", corpus_dir, final_corpus,
+        resume=resume, parents=[keep_dir, stats_dir], partition_by=["split"],
+        extra={"min_quality": min_quality,
+               "max_dup_line_frac": max_dup_line_frac,
+               "default_fraction": default_fraction,
+               "redact_pii": redact_pii},
+    )
     return {
-        "corpus": read_table(spark, corpus_dir),
+        "corpus": corpus,
         "corpus_manifest": os.path.join(corpus_dir, "_MANIFEST.json"),
-        "lineage": lineage_manifest,
-        "skipped": skipped,
+        "lineage": log.write(os.path.join(out_dir, "lineage")),
+        "skipped": log.skipped,
     }

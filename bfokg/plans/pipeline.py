@@ -1,21 +1,18 @@
 """The flagship KG-construction DAG, checkpoint-resumable.
 
-transcripts ─▶ extract_triples (JVM ``regexp_extract_all``) ─▶ link
-(broadcast) ─▶ dedup (window) ─▶ edges; distinct qids × cascade ─▶ nodes;
-every stage commits a warehouse snapshot + lineage rows, and a re-run with
-``resume=True`` skips every stage whose snapshot is already committed
-(north_rule: "resumable from checkpoint with per-partition lineage +
-metrics").
+Every stage is one ``LineageLog.stage`` call: a committed warehouse
+snapshot plus lineage rows, skipped by ``resume=True`` once committed.
 
-Stage boundaries are chosen at the expensive work so resume skips it: the
-extract stage (the regex scan over every turn) and the dedup shuffle each
-commit.
+  1. ``extract`` — ``extract_triples`` (JVM ``regexp_extract_all``) over
+                   every turn → ``raw_triples``
+  2. ``edges``   — link (broadcast) → dedup (window), partitioned by
+                   predicate
+  3. ``nodes``   — distinct qids × cascade, partitioned like the edges
 """
 
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -28,7 +25,7 @@ from ..operators.rule_based import classify_rule_based, keyword_rules_df, p31_ru
 from ..operators.semantic import classify_semantic
 from ..operators.strategies import cascade
 from ..operators.triples import dedup_triples, extract_triples, link_triples, nodes_df
-from ..sources.warehouse import LineageLog, is_committed, read_table, write_table
+from ..sources.warehouse import LineageLog
 
 
 def _semantic_encoder(cfg):
@@ -101,69 +98,31 @@ def run_pipeline(
     out_dir: str,
     resume: bool = False,
 ) -> dict:
-    """Run the full DAG; returns {'edges': manifest, 'nodes': manifest,
-    'lineage': manifest|None, 'skipped': [stages]}."""
-    alias_dict = alias_dict_df(spark)
+    """Run the full DAG; returns {'edges': DataFrame, 'nodes': DataFrame,
+    'edges_manifest': path, 'lineage': manifest|None, 'skipped': [stages]}."""
     log = LineageLog(spark)
-    skipped = []
-
     raw_dir = os.path.join(out_dir, "raw_triples")
     edges_dir = os.path.join(out_dir, "edges")
     nodes_dir = os.path.join(out_dir, "nodes")
 
-    # Lineage metrics cost NO extra Spark jobs (VERDICT r2 item 8):
-    # rows_in for the first stage rides on the write itself via
-    # df.observe; every other in/out count — including the per-partition
-    # rows — comes from the parquet footers recorded in the stage's own
-    # snapshot manifest.
-    from pyspark.sql import Observation
-
-    from ..sources.warehouse import read_manifest
-
-    # -- stage 1: extract (the regex scan — most expensive per row) ---------
-    if resume and is_committed(raw_dir):
-        skipped.append("extract")
-        raw = read_table(spark, raw_dir)
-    else:
-        t0 = time.time()
-        obs_in = Observation("extract_rows_in")
-        observed = transcripts.observe(obs_in, F.count(F.lit(1)).alias("n"))
-        raw = extract_triples(observed)
-        rm = write_table(raw, raw_dir)
-        raw = read_table(spark, raw_dir)
-        log.record("extract", int(obs_in.get["n"]), rm["rows"], t0)
-
-    # -- stage 2: link + dedup + edges --------------------------------------
-    if resume and is_committed(edges_dir):
-        skipped.append("edges")
-        edges = read_table(spark, edges_dir)
-    else:
-        t0 = time.time()
-        linked = link_triples(raw, alias_dict)
-        deduped = dedup_triples(linked).withColumn("part", F.col("pred"))
-        em = write_table(deduped, edges_dir, partition_by=["part"])
-        edges = read_table(spark, edges_dir)
-        log.record("edges", read_manifest(raw_dir)["rows"], em["rows"], t0,
-                   extra={"dedup_key": "(subj_qid,pred,obj_qid)"})
-        log.record_partitions("edges", em, t0)
-
-    # -- stage 3: nodes (classification join) -------------------------------
-    if resume and is_committed(nodes_dir):
-        skipped.append("nodes")
-        nodes = read_table(spark, nodes_dir)
-    else:
-        t0 = time.time()
-        nodes = nodes_df(edges, classify_entities(spark))
-        nm = write_table(nodes, nodes_dir, partition_by=["part"])
-        nodes = read_table(spark, nodes_dir)
-        log.record("nodes", read_manifest(edges_dir)["rows"], nm["rows"], t0)
-        log.record_partitions("nodes", nm, t0)
-
-    lineage_manifest = log.write(os.path.join(out_dir, "lineage"))
+    raw = log.stage("extract", raw_dir, extract_triples, resume=resume,
+                    source=transcripts)
+    edges = log.stage(
+        "edges", edges_dir,
+        lambda: dedup_triples(link_triples(raw, alias_dict_df(spark)))
+        .withColumn("part", F.col("pred")),
+        resume=resume, parents=[raw_dir], partition_by=["part"],
+        extra={"dedup_key": "(subj_qid,pred,obj_qid)"},
+    )
+    nodes = log.stage(
+        "nodes", nodes_dir,
+        lambda: nodes_df(edges, classify_entities(spark)),
+        resume=resume, parents=[edges_dir], partition_by=["part"],
+    )
     return {
-        "edges": read_table(spark, edges_dir),
+        "edges": edges,
         "nodes": nodes,
         "edges_manifest": os.path.join(edges_dir, "_MANIFEST.json"),
-        "lineage": lineage_manifest,
-        "skipped": skipped,
+        "lineage": log.write(os.path.join(out_dir, "lineage")),
+        "skipped": log.skipped,
     }

@@ -10,13 +10,17 @@ plain parquet + JSON manifests:
   and the upstream snapshot ids it was derived from.
 - ``read_table``    — reads the latest committed snapshot (readers never
   see half-written data: files land under a snapshot-suffixed dir first,
-  the manifest rename is the commit point).
-- ``is_committed`` / ``resume`` semantics — a pipeline stage whose
-  snapshot manifest exists is skipped on re-run, giving idempotent,
-  checkpoint-resumable DAGs (tested in tests/test_pipeline.py:
-  test_pipeline_end_to_end_and_resume / test_resume_after_partial_failure).
+  the manifest rename is the commit point). Like an Iceberg reader it
+  takes the schema from the table metadata, never from the data files:
+  a read runs no Spark job, and an empty table reads back with its
+  columns.
+- ``LineageLog.stage`` — the one resume → write → lineage → read-back
+  step every DAG stage runs: a stage whose snapshot manifest exists is
+  skipped on ``resume=True``, giving idempotent, checkpoint-resumable
+  DAGs (tests/test_pipeline.py).
 - snapshot log + time travel — ``write_table(keep_snapshots=N)`` /
-  ``read_table(snapshot=...)`` (test_snapshot_history_time_travel).
+  ``read_table(snapshot=...)``; every snapshot is read with its own
+  schema (test_snapshot_history_time_travel).
 
 On a real cluster every call here maps 1:1 onto Iceberg:
 write_table → ``df.writeTo(t).partitionedBy(...).createOrReplace()``;
@@ -32,9 +36,10 @@ import time
 import uuid
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
-from ..util import local_df
+from ..util import local_df, release_intermediates
 
 LINEAGE_SCHEMA = (
     "run_id STRING, stage STRING, part STRING, rows_in BIGINT, rows_out BIGINT, "
@@ -121,7 +126,6 @@ def write_table(
     table_dir: str,
     partition_by: list[str] | None = None,
     parents: list[str] | None = None,
-    mode: str = "overwrite",
     keep_snapshots: int = 1,
 ) -> dict:
     """Partitioned parquet write + atomic snapshot-manifest commit.
@@ -138,19 +142,26 @@ def write_table(
     ``history`` records them newest-first and ``read_table(...,
     snapshot="<id>")`` time-travels to any retained one. The default 1
     keeps only the committed snapshot — prior data dirs are expired on
-    commit, exactly like ``expire_snapshots`` running at every write."""
+    commit, exactly like ``expire_snapshots`` running at every write.
+
+    ``manifest["schema"]`` is the schema readers get back: the hive-style
+    layout puts partition columns last, so the stored column order does
+    too."""
     prev = read_manifest(table_dir)
     snap = snapshot_id()
     data_dir = os.path.join(table_dir, f"data-{snap}")
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
+    parts = partition_by or []
+    schema = StructType([f for f in df.schema.fields if f.name not in parts]
+                        + [df.schema[p] for p in parts])
+    writer = df.write.mode("overwrite")
+    if parts:
+        writer = writer.partitionBy(*parts)
     writer.parquet(data_dir)
 
     history = []
     if prev is not None:
-        history = [{k: prev[k] for k in
-                    ("snapshot_id", "data_dir", "rows", "committed_at")}]
+        history = [{k: prev[k] for k in ("snapshot_id", "data_dir", "rows",
+                                         "schema", "committed_at")}]
         history += prev.get("history", [])
     history = history[: max(keep_snapshots - 1, 0)]
     retained = {os.path.basename(h["data_dir"]) for h in history}
@@ -161,8 +172,8 @@ def write_table(
         "data_dir": data_dir,
         "rows": rows,
         "partition_rows": partition_rows,
-        "partition_by": partition_by or [],
-        "schema": df.schema.jsonValue(),
+        "partition_by": parts,
+        "schema": schema.jsonValue(),
         "parents": parents or [],
         "committed_at": datetime.now(timezone.utc).isoformat(),
         "history": history,
@@ -184,19 +195,22 @@ def read_table(spark: SparkSession, table_dir: str,
                snapshot: str | None = None) -> DataFrame:
     """Read the latest committed snapshot, or — ``snapshot="<id>"`` —
     TIME-TRAVEL to a retained superseded one (``write_table(...,
-    keep_snapshots=N)``). Reading an expired/unknown snapshot id raises
-    with the retained ids listed (wrong-data is never silent)."""
+    keep_snapshots=N)``), with the schema that snapshot's metadata
+    records: no Spark job runs. A history entry committed before entries
+    carried a schema is read with an inferred one. Reading an
+    expired/unknown snapshot id raises with the retained ids listed
+    (wrong-data is never silent)."""
     manifest = read_manifest(table_dir)
     if manifest is None:
         raise FileNotFoundError(f"no committed snapshot at {table_dir}")
-    if snapshot is None or snapshot == manifest["snapshot_id"]:
-        return spark.read.parquet(manifest["data_dir"])
-    for h in manifest.get("history", []):
-        if h["snapshot_id"] == snapshot:
-            return spark.read.parquet(h["data_dir"])
-    known = [manifest["snapshot_id"]] + [
-        h["snapshot_id"] for h in manifest.get("history", [])
-    ]
+    entries = [manifest] + manifest.get("history", [])
+    for entry in entries:
+        if snapshot is None or snapshot == entry["snapshot_id"]:
+            reader = spark.read
+            if "schema" in entry:
+                reader = reader.schema(StructType.fromJson(entry["schema"]))
+            return reader.parquet(entry["data_dir"])
+    known = [e["snapshot_id"] for e in entries]
     raise KeyError(
         f"snapshot {snapshot!r} not retained at {table_dir} "
         f"(retained: {known}; raise keep_snapshots to keep more)"
@@ -223,6 +237,7 @@ class LineageLog:
         self.spark = spark
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.rows: list[tuple] = []
+        self.skipped: list[str] = []
 
     def record(self, stage: str, rows_in: int, rows_out: int, started: float,
                part: str = "*", extra: dict | None = None):
@@ -239,10 +254,7 @@ class LineageLog:
             )
         )
 
-    def record_partitions(
-        self, stage: str, manifest: dict, started: float,
-        extra: dict | None = None,
-    ):
+    def record_partitions(self, stage: str, manifest: dict, started: float):
         """One lineage row PER PARTITION VALUE of a written table (the
         north_rule's per-partition metrics), read from the write's OWN
         manifest (parquet-footer counts) — NO Spark job, no second pass
@@ -252,31 +264,45 @@ class LineageLog:
         for part_path, n in sorted(manifest.get("partition_rows", {}).items()):
             # 'part=books' → 'books'; nested partitions keep the full path
             part = part_path.split("=", 1)[1] if "=" in part_path else part_path
-            self.record(
-                stage,
-                rows_in=-1,
-                rows_out=n,
-                started=started,
-                part=part or "*",
-                extra=extra,
-            )
+            self.record(stage, rows_in=-1, rows_out=n, started=started,
+                        part=part or "*")
 
-    def timed(self, stage: str):
-        """Context manager: ``with log.timed('link') as t: t.done(in, out)``."""
-        log = self
+    def stage(self, name: str, table_dir: str, build, *, resume: bool,
+              parents: list[str] = (), partition_by: list[str] | None = None,
+              extra: dict | None = None,
+              source: DataFrame | None = None) -> DataFrame:
+        """One DAG stage: the table committed at ``table_dir``, read back.
 
-        class _Timer:
-            def __enter__(self):
-                self.start = time.time()
-                return self
-
-            def done(self, rows_in: int, rows_out: int, **extra):
-                log.record(stage, rows_in, rows_out, self.start, extra=extra)
-
-            def __exit__(self, *exc):
-                return False
-
-        return _Timer()
+        With ``resume`` and a committed snapshot the stage is skipped
+        (its name appended to ``skipped``). Otherwise ``build()`` — or
+        ``build(source)`` for a source stage, with ``source`` observed —
+        is written with ``partition_by`` and ``parents``, and the built
+        frame's intermediates are released whether or not the write
+        commits. The stage then records one ``part='*'`` lineage row
+        (``rows_in``: the first parent's committed rows, or the observed
+        ``source`` rows) plus one row per partition of a partitioned
+        table. Counts come from the observation and the manifests: the
+        lineage costs no Spark job, and neither does the read-back."""
+        if resume and is_committed(table_dir):
+            self.skipped.append(name)
+            return read_table(self.spark, table_dir)
+        started = time.time()
+        if source is not None:
+            obs = Observation(f"{name}_rows_in")
+            df = build(source.observe(obs, F.count(F.lit(1)).alias("n")))
+        else:
+            df = build()
+        try:
+            manifest = write_table(df, table_dir, partition_by=partition_by,
+                                   parents=list(parents))
+        finally:
+            release_intermediates(df)
+        rows_in = (int(obs.get["n"]) if source is not None
+                   else read_manifest(parents[0])["rows"])
+        self.record(name, rows_in, manifest["rows"], started, extra=extra)
+        if partition_by:
+            self.record_partitions(name, manifest, started)
+        return read_table(self.spark, table_dir)
 
     def df(self) -> DataFrame:
         """The recorded rows as a driver-local relation: writing it runs

@@ -9,12 +9,52 @@ from bfokg.datagen import generate_transcripts, sf_to_n_turns
 from bfokg.operators.linking import alias_dict_df, extract_mentions, link_mentions
 from bfokg.operators.triples import dedup_triples, extract_triples, link_triples
 from bfokg.plans.pipeline import run_pipeline
-from bfokg.sources.warehouse import read_manifest
+from bfokg.sources.warehouse import read_manifest, read_table
+
+KG_TABLES = ("raw_triples", "edges", "nodes")
+CURATION_TABLES = ("doc_stats", "dup_pairs", "keep_list", "corpus")
 
 
 def _transcripts(spark):
     path = generate_transcripts(0.001)
     return spark.read.parquet(path)
+
+
+def _curation_docs(spark):
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "The quick brown fox jumps over the lazy dog!"),   # exact dup
+        (3, "the quick brown fox jumps over the lazy cat"),    # near dup
+        (4, "completely different text about spark engines and distributed joins"),
+        (5, "der schnelle braune fuchs springt und das ist ein test von der sache"),
+        (6, "le chat est dans la maison et les oiseaux sont pour le jardin"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _jobs(spark, group, fn):
+    """``(fn(), the number of Spark jobs it ran)``; ``group`` must be
+    unique in the session."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_stored_schemas(spark, out, tables):
+    """Every table reads back with its stored schema, which is exactly the
+    one Spark infers from the data files (the reference read)."""
+    for table in tables:
+        d = os.path.join(out, table)
+        inferred = spark.read.parquet(read_manifest(d)["data_dir"]).schema
+        assert read_table(spark, d).schema == inferred, table
+
+
+def _columns(schema):
+    return [(f.name, f.dataType) for f in schema.fields]
 
 
 def test_datagen_deterministic_and_stable_order(spark):
@@ -196,13 +236,46 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     )
     assert tot == len(edges1)
 
-    # resume: all stages skipped, identical edge set (idempotent re-run)
-    res2 = run_pipeline(spark, df, out, resume=True)
-    assert set(res2["skipped"]) == {"extract", "edges", "nodes"}
+    _assert_stored_schemas(spark, out, KG_TABLES)
+    assert read_manifest(os.path.join(out, "edges"))["parents"] == [
+        os.path.join(out, "raw_triples")]
+    assert read_manifest(os.path.join(out, "nodes"))["parents"] == [
+        os.path.join(out, "edges")]
+
+    # resume: all stages skipped without a Spark job, identical edge set
+    # (idempotent re-run)
+    res2, n_jobs = _jobs(spark, "kg-resume-all-skipped",
+                         lambda: run_pipeline(spark, df, out, resume=True))
+    assert n_jobs == 0
+    assert res2["skipped"] == ["extract", "edges", "nodes"]
     edges2 = {tuple(r) for r in res2["edges"].select("subj_qid", "pred", "obj_qid").collect()}
     assert edges1 == edges2
     m = read_manifest(os.path.join(out, "edges"))
     assert m["partition_by"] == ["part"] and m["rows"] == len(edges1)
+
+
+def test_pipeline_empty_edges_stage_commits_and_resumes(spark, tmp_path):
+    """Turns with no relation sentence commit an empty partitioned edges
+    table (and so empty nodes). The run completes, the empty tables read
+    back with their committed schema, and a resume skips every stage."""
+    from pyspark.sql.types import StructType
+
+    df = spark.createDataFrame(
+        [("c1", 0, None, "hello there"), ("c1", 1, None, "nothing to relate")],
+        "conv_id string, turn_idx int, ts timestamp, text string",
+    )
+    out = str(tmp_path / "kg")
+    res = run_pipeline(spark, df, out)
+    assert res["skipped"] == []
+    for table in ("edges", "nodes"):
+        m = read_manifest(os.path.join(out, table))
+        assert m["rows"] == 0 and m["partition_rows"] == {}
+        got = res[table]
+        assert got.count() == 0
+        assert _columns(got.schema) == _columns(StructType.fromJson(m["schema"]))
+    res2 = run_pipeline(spark, df, out, resume=True)
+    assert res2["skipped"] == ["extract", "edges", "nodes"]
+    assert res2["edges"].count() == 0 and res2["nodes"].count() == 0
 
 
 def test_curation_end_to_end_and_resume(spark, tmp_path):
@@ -214,15 +287,7 @@ def test_curation_end_to_end_and_resume(spark, tmp_path):
 
     from bfokg.plans.curation import run_curation
 
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "The quick brown fox jumps over the lazy dog!"),   # exact dup
-        (3, "the quick brown fox jumps over the lazy cat"),    # near dup
-        (4, "completely different text about spark engines and distributed joins"),
-        (5, "der schnelle braune fuchs springt und das ist ein test von der sache"),
-        (6, "le chat est dans la maison et les oiseaux sont pour le jardin"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = _curation_docs(spark)
     out = str(tmp_path / "cur")
     res1 = run_curation(spark, docs, out, dup_threshold=0.35)
     assert res1["skipped"] == []
@@ -240,11 +305,104 @@ def test_curation_end_to_end_and_resume(spark, tmp_path):
     assert sum(m["partition_rows"].values()) == len(corpus1)
     # lineage: one row per stage + per-partition rows for stats/corpus
     assert res1["lineage"] is not None and res1["lineage"]["rows"] >= 4
+    _assert_stored_schemas(spark, out, CURATION_TABLES)
 
-    res2 = run_curation(spark, docs, out, resume=True, dup_threshold=0.35)
-    assert set(res2["skipped"]) == {"stats", "pairs", "keep_list", "corpus"}
+    res2, n_jobs = _jobs(spark, "curation-resume-all-skipped", lambda: run_curation(
+        spark, docs, out, resume=True, dup_threshold=0.35))
+    assert n_jobs == 0
+    assert res2["skipped"] == ["stats", "pairs", "keep_list", "corpus"]
     corpus2 = {r.doc_id: (r.split, r.lang_pred) for r in res2["corpus"].collect()}
     assert corpus2 == corpus1
+
+
+def test_curation_empty_corpus_stage_commits_and_resumes(spark, tmp_path):
+    """A quality gate no document passes commits an empty partitioned
+    corpus. The run completes, the corpus reads back empty with its
+    committed schema, and a resume skips every stage."""
+    from pyspark.sql.types import StructType
+
+    from bfokg.plans.curation import run_curation
+
+    docs = _curation_docs(spark)
+    out = str(tmp_path / "cur")
+    res = run_curation(spark, docs, out, min_quality=2.0)
+    assert res["skipped"] == []
+    m = read_manifest(os.path.join(out, "corpus"))
+    assert m["rows"] == 0 and m["partition_rows"] == {}
+    assert res["corpus"].count() == 0
+    assert _columns(res["corpus"].schema) == _columns(StructType.fromJson(m["schema"]))
+    res2 = run_curation(spark, docs, out, resume=True, min_quality=2.0)
+    assert res2["skipped"] == ["stats", "pairs", "keep_list", "corpus"]
+    assert res2["corpus"].count() == 0
+
+
+def test_stage_write_failure_commits_nothing_and_resumes(spark, tmp_path, monkeypatch):
+    """Failure injection: a stage whose write raises before its commit
+    leaves no manifest and no scratch of its built frame; a resume skips
+    the committed stages, recomputes from the failed one, and its commit
+    expires the failed write's orphan data dir."""
+    import glob
+
+    import pytest
+
+    import bfokg.operators.dedup as dedup
+    import bfokg.plans.curation as curation
+    from bfokg.sources import warehouse
+    from bfokg.util import PathCleanup
+
+    real_counts = warehouse._footer_counts
+
+    def fail_under(table_dir):
+        def counts(data_dir):
+            if os.path.dirname(data_dir) == table_dir:
+                raise OSError("injected write failure")
+            return real_counts(data_dir)
+        return counts
+
+    # the KG DAG, failing at edges
+    df = _transcripts(spark)
+    out = str(tmp_path / "kg")
+    edges_dir = os.path.join(out, "edges")
+    with monkeypatch.context() as mp:
+        mp.setattr(warehouse, "_footer_counts", fail_under(edges_dir))
+        with pytest.raises(OSError, match="injected"):
+            run_pipeline(spark, df, out)
+    assert read_manifest(os.path.join(out, "raw_triples")) is not None
+    assert read_manifest(edges_dir) is None
+    assert read_manifest(os.path.join(out, "nodes")) is None
+    (orphan,) = glob.glob(os.path.join(edges_dir, "data-*"))
+    res = run_pipeline(spark, df, out, resume=True)
+    assert res["skipped"] == ["extract"]
+    assert not os.path.exists(orphan)
+    assert 0 < res["edges"].count() == read_manifest(edges_dir)["rows"]
+
+    # the curation DAG, failing at pairs with its signatures on scratch
+    out = str(tmp_path / "cur")
+    pairs_dir = os.path.join(out, "dup_pairs")
+    scratch = []
+
+    def pairs_capturing_scratch(*args, **kwargs):
+        pairs = dedup.minhash_lsh_pairs(*args, **kwargs)
+        scratch.extend(c.path for c in pairs._bfokg_cached
+                       if isinstance(c, PathCleanup))
+        return pairs
+
+    docs = _curation_docs(spark)
+    with monkeypatch.context() as mp:
+        mp.setattr(dedup, "_SIG_MEMORY_MAX_BYTES", 0)
+        mp.setattr(curation, "minhash_lsh_pairs", pairs_capturing_scratch)
+        mp.setattr(warehouse, "_footer_counts", fail_under(pairs_dir))
+        with pytest.raises(OSError, match="injected"):
+            curation.run_curation(spark, docs, out, dup_threshold=0.35)
+    assert scratch and not any(os.path.exists(p) for p in scratch)
+    assert read_manifest(os.path.join(out, "doc_stats")) is not None
+    for table in ("dup_pairs", "keep_list", "corpus"):
+        assert read_manifest(os.path.join(out, table)) is None, table
+    (orphan,) = glob.glob(os.path.join(pairs_dir, "data-*"))
+    res = curation.run_curation(spark, docs, out, resume=True, dup_threshold=0.35)
+    assert res["skipped"] == ["stats"]
+    assert not os.path.exists(orphan)
+    assert {r.doc_id for r in res["corpus"].collect()} == {1, 4, 5, 6}
 
 
 def test_resume_after_partial_failure(spark, tmp_path):
@@ -363,18 +521,8 @@ def test_cascade_and_node_stage_job_counts(spark, tmp_path):
     from bfokg.operators.strategies import cascade
     from bfokg.plans.pipeline import default_classifiers
 
-    sc = spark.sparkContext
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            result = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
     ents = with_entity_text(entities_df(spark))
-    rows, n = jobs("cascade-collect", lambda: cascade(
+    rows, n = _jobs(spark, "cascade-collect", lambda: cascade(
         ents, default_classifiers(spark), top_k=3)[0].collect())
     assert {r.entity_id for r in rows} == {r.id for r in ents.collect()}
     assert n <= 3, f"cascade over the fixtures ran {n} jobs"
@@ -383,9 +531,9 @@ def test_cascade_and_node_stage_job_counts(spark, tmp_path):
     out = str(tmp_path / "kg")
     run_pipeline(spark, df, out)
     shutil.rmtree(os.path.join(out, "nodes"))
-    res, with_nodes = jobs("nodes-only", lambda: run_pipeline(spark, df, out, resume=True))
+    res, with_nodes = _jobs(spark, "nodes-only", lambda: run_pipeline(spark, df, out, resume=True))
     assert res["skipped"] == ["extract", "edges"]
-    res, all_skipped = jobs("all-skipped", lambda: run_pipeline(spark, df, out, resume=True))
+    res, all_skipped = _jobs(spark, "all-skipped", lambda: run_pipeline(spark, df, out, resume=True))
     assert set(res["skipped"]) == {"extract", "edges", "nodes"}
     n_nodes = with_nodes - all_skipped - 1  # the lineage commit is one job
     assert n_nodes <= 6, f"node stage ran {n_nodes} jobs"
@@ -477,14 +625,20 @@ def test_snapshot_history_time_travel(spark, tmp_path):
     """Iceberg snapshot-log parity: keep_snapshots=2 retains the prior
     snapshot for time-travel reads; the third commit expires the first,
     and reading an expired id raises (listing what IS retained) instead
-    of returning wrong data."""
+    of returning wrong data. Each snapshot reads back with its own stored
+    schema, without a Spark job, after a commit dropped a column; a
+    history entry that carries no schema is read with an inferred one."""
+    import json
+
     import pytest
 
     from bfokg.sources.warehouse import read_table, write_table
 
     t = str(tmp_path / "tt")
 
-    def df_of(vals):
+    def df_of(vals, with_y=True):
+        if with_y:
+            return spark.createDataFrame([(v, str(v)) for v in vals], "x int, y string")
         return spark.createDataFrame([(v,) for v in vals], "x int")
 
     m1 = write_table(df_of([1]), t, keep_snapshots=2)
@@ -495,15 +649,31 @@ def test_snapshot_history_time_travel(spark, tmp_path):
     old = read_table(spark, t, snapshot=m1["snapshot_id"])        # travel
     assert [r.x for r in old.collect()] == [1]
 
-    m3 = write_table(df_of([3, 3, 3]), t, keep_snapshots=2)
+    m3 = write_table(df_of([3, 3, 3], with_y=False), t, keep_snapshots=2)
     assert [h["snapshot_id"] for h in m3["history"]] == [m2["snapshot_id"]]
-    assert read_table(spark, t, snapshot=m2["snapshot_id"]).count() == 2
+    assert read_table(spark, t).columns == ["x"]
+    travel, n_jobs = _jobs(spark, "time-travel-read", lambda: read_table(
+        spark, t, snapshot=m2["snapshot_id"]))
+    assert n_jobs == 0
+    assert travel.columns == ["x", "y"]
+    assert sorted(tuple(r) for r in travel.collect()) == [(2, "2"), (2, "2")]
     with pytest.raises(KeyError, match=m1["snapshot_id"][:6]):
         read_table(spark, t, snapshot=m1["snapshot_id"])          # expired
     assert not os.path.isdir(os.path.join(t, f"data-{m1['snapshot_id']}"))
 
+    # a history entry without a schema (committed before entries carried
+    # one) reads with the inferred schema
+    path = os.path.join(t, "_MANIFEST.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    del manifest["history"][0]["schema"]
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    legacy = read_table(spark, t, snapshot=m2["snapshot_id"])
+    assert legacy.schema == travel.schema and legacy.count() == 2
+
     # default keep_snapshots=1 expires everything superseded on commit
-    m4 = write_table(df_of([4]), t)
+    m4 = write_table(df_of([4], with_y=False), t)
     assert m4["history"] == []
     assert not os.path.isdir(os.path.join(t, f"data-{m2['snapshot_id']}"))
     assert read_table(spark, t).count() == 1
